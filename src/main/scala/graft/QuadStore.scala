@@ -224,9 +224,8 @@ final class QuadStore private (val quads: DataFrame,
     * Store::dump_graph_to_writer, store.rs:624-639: a pattern scan of the
     * graph serialised as triples). `None` = default graph. */
   def dumpGraph(path: String, graph: Option[RdfTerm]): Unit = {
-    val scoped = quadsForPattern(graph = Some(graph))
-      .withColumn("graph", lit(null).cast(TermCols.schema))
-    NTriples.toNQuadLines(scoped).write.mode("overwrite").text(path)
+    NTriples.toNQuadLines(quadsForPattern(graph = Some(graph)).drop("graph"))
+      .write.mode("overwrite").text(path)
   }
 
   /** Serialise the default graph to Turtle (errors if named graphs exist —

@@ -337,10 +337,7 @@ object SparkEntry {
     val triples = graftOver(s, dir, "nation").query(
       """CONSTRUCT { ?r <urn:ex:hasNation> ?n }
         |WHERE { ?n <urn:g:nation#ref_region> ?r }""".stripMargin)
-    val asQuads = triples
-      .withColumn("graph", lit(null).cast(graft.encoding.TermCols.schema))
-      .select("graph", "subject", "predicate", "object")
-    graft.sources.NTriples.toNQuadLines(asQuads)
+    graft.sources.NTriples.toNQuadLines(triples)
       .select(col("value").as("line")).orderBy("line")
   }
 
@@ -355,10 +352,7 @@ object SparkEntry {
   private def sparqlDescribe(s: SparkSession, dir: String): DataFrame = {
     val triples = graftOver(s, dir, "region").query(
       """DESCRIBE ?r WHERE { ?r <urn:g:region#r_name> ?n }""")
-    val asQuads = triples
-      .withColumn("graph", lit(null).cast(graft.encoding.TermCols.schema))
-      .select("graph", "subject", "predicate", "object")
-    graft.sources.NTriples.toNQuadLines(asQuads)
+    graft.sources.NTriples.toNQuadLines(triples)
       .select(col("value").as("line")).orderBy("line")
   }
 

@@ -24,17 +24,13 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
 
   /** SELECT → DataFrame of PlainTerm structs, one column per variable. */
   def select(text: String): DataFrame = SparqlParser.parse(text) match {
-    case q: SelectQuery =>
-      new Rewriter(spark, quads, q.fromNamed.map(_.value), star, fuseStars, quadStarFusion, compatUnion,
-        hasDatasetClause = q.fromDefault.nonEmpty || q.fromNamed.nonEmpty).select(q, defaultScope(q.fromDefault, q.fromNamed)).df
+    case q: SelectQuery => selectQuery(q)
     case other => throw new IllegalArgumentException(s"not a SELECT query: ${other.getClass.getSimpleName}")
   }
 
   /** Any query form, dispatched. */
   def query(text: String): DataFrame = SparqlParser.parse(text) match {
-    case q: SelectQuery =>
-      new Rewriter(spark, quads, q.fromNamed.map(_.value), star, fuseStars, quadStarFusion, compatUnion,
-        hasDatasetClause = q.fromDefault.nonEmpty || q.fromNamed.nonEmpty).select(q, defaultScope(q.fromDefault, q.fromNamed)).df
+    case q: SelectQuery => selectQuery(q)
     case q: AskQuery => ask(q)
     case q: ConstructQuery => construct(q)
     case q: DescribeQuery => describe(q)
@@ -47,24 +43,34 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
 
   def askBoolean(text: String): Boolean = SparqlParser.parse(text) match {
     case q: AskQuery =>
-      !new Rewriter(spark, quads, q.fromNamed.map(_.value), star, fuseStars, quadStarFusion, compatUnion,
-        hasDatasetClause = q.fromDefault.nonEmpty || q.fromNamed.nonEmpty)
-        .pattern(q.where, defaultScope(q.fromDefault, q.fromNamed)).df.isEmpty
+      val (rewriter, scope) = rewriterFor(q.fromDefault, q.fromNamed)
+      !rewriter.pattern(q.where, scope).df.isEmpty
     case other => throw new IllegalArgumentException(s"not an ASK query: $other")
   }
 
-  /** Spec §13.2 dataset construction: FROM merges listed graphs into the
-    * default; FROM NAMED without FROM leaves the default graph EMPTY (a
-    * dataset description replaces the store dataset, never extends it). */
-  private def defaultScope(from: Seq[Iri], fromNamed: Seq[Iri]): GraphScope =
-    if (from.nonEmpty) GraphScope.UnionOf(from.map(_.value))
-    else if (fromNamed.nonEmpty) GraphScope.UnionOf(Nil)
-    else GraphScope.DefaultGraph
+  /** The rewriter for a query's dataset clause, with the scope of its
+    * default graph. Spec §13.2 dataset construction: FROM merges listed
+    * graphs into the default; FROM NAMED without FROM leaves the default
+    * graph EMPTY (a dataset description replaces the store dataset, never
+    * extends it). */
+  private def rewriterFor(from: Seq[Iri], fromNamed: Seq[Iri]): (Rewriter, GraphScope) = {
+    val scope =
+      if (from.nonEmpty) GraphScope.UnionOf(from.map(_.value))
+      else if (fromNamed.nonEmpty) GraphScope.UnionOf(Nil)
+      else GraphScope.DefaultGraph
+    (new Rewriter(spark, quads, fromNamed.map(_.value), star, fuseStars, quadStarFusion, compatUnion,
+      hasDatasetClause = from.nonEmpty || fromNamed.nonEmpty), scope)
+  }
+
+  private def selectQuery(q: SelectQuery): DataFrame = {
+    val (rewriter, scope) = rewriterFor(q.fromDefault, q.fromNamed)
+    rewriter.select(q, scope).df
+  }
 
   /** ASK → single row, single boolean column (reference eval.rs:73-86). */
   private def ask(q: AskQuery): DataFrame = {
-    val p = new Rewriter(spark, quads, q.fromNamed.map(_.value), star, fuseStars, quadStarFusion, compatUnion,
-        hasDatasetClause = q.fromDefault.nonEmpty || q.fromNamed.nonEmpty).pattern(q.where, defaultScope(q.fromDefault, q.fromNamed))
+    val (rewriter, scope) = rewriterFor(q.fromDefault, q.fromNamed)
+    val p = rewriter.pattern(q.where, scope)
     p.df.limit(1).select(lit(1).as("one")).groupBy().count()
       .select((col("count") > 0).as("ask"))
   }
@@ -76,12 +82,10 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
    * Template blank nodes are scoped per-solution via a row id.
    */
   private def construct(q: ConstructQuery): DataFrame = {
-    val rewriter = new Rewriter(spark, quads, q.fromNamed.map(_.value), star, fuseStars, quadStarFusion, compatUnion,
-        hasDatasetClause = q.fromDefault.nonEmpty || q.fromNamed.nonEmpty)
+    val (rewriter, scope) = rewriterFor(q.fromDefault, q.fromNamed)
     val plan = rewriter.select(
       SelectQuery(Nil, distinct = false, reduced = false, q.where, Nil, None,
-        q.orderBy, q.offset, q.limit, q.fromDefault, q.fromNamed, q.base, q.prefixes),
-      defaultScope(q.fromDefault, q.fromNamed))
+        q.orderBy, q.offset, q.limit, q.fromDefault, q.fromNamed, q.base, q.prefixes), scope)
     val hasBnodes = q.template.exists(t =>
       Seq(t.s, t.p, t.o).exists(_.isInstanceOf[BNodePat]))
     // Pin row ids when the template mints bnodes: the per-template selects
@@ -112,11 +116,10 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
     * (reference eval.rs:87-131). The bnode frontier shrinks each round, so
     * the loop is bounded by the deepest bnode chain. */
   private def describe(q: DescribeQuery): DataFrame = {
-    val rewriter = new Rewriter(spark, quads, q.fromNamed.map(_.value), star, fuseStars, quadStarFusion, compatUnion,
-        hasDatasetClause = q.fromDefault.nonEmpty || q.fromNamed.nonEmpty)
+    val (rewriter, scope) = rewriterFor(q.fromDefault, q.fromNamed)
     val targets0: DataFrame = q.where match {
       case Some(w) =>
-        val p = rewriter.pattern(w, defaultScope(q.fromDefault, q.fromNamed))
+        val p = rewriter.pattern(w, scope)
         // DESCRIBE * = all in-scope variables
         val wanted = if (q.targets.isEmpty) p.vars.map(Var(_)).map(VarPat(_)) else q.targets
         val cols = wanted.collect { case VarPat(v) if p.vars.contains(v.name) => col(v.name) }
@@ -125,7 +128,7 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
       case None =>
         val iris = q.targets.collect { case TermPat(t) => t }
         spark.createDataFrame(
-          spark.sparkContext.parallelize(iris.map(t => org.apache.spark.sql.Row(termRowOf(t))), 1),
+          spark.sparkContext.parallelize(iris.map(t => org.apache.spark.sql.Row(graft.sources.NTriples.termRow(t))), 1),
           StructType(Seq(StructField("node", TermCols.schema))))
     }
     val dg = quads.filter(col("graph").isNull)
@@ -142,14 +145,6 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
         .select(col("object").as("node")).dropDuplicates().localCheckpoint()
     }
     result
-  }
-
-  private def termRowOf(t: RdfTerm): org.apache.spark.sql.Row = t match {
-    case Iri(v) => org.apache.spark.sql.Row(TermType.Iri, v, null, null, null)
-    case BNode(v) => org.apache.spark.sql.Row(TermType.BlankNode, v, null, null, null)
-    case Lit(v, dt, lang) => org.apache.spark.sql.Row(TermType.Literal, v,
-      if (dt == Xsd.string && lang.isEmpty) null else dt, lang.orNull,
-      graft.sources.NTriples.numOf(v, dt))
   }
 }
 

@@ -1,92 +1,148 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
-import graft.encoding.TermCols
-import graft.model.Xsd
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import graft.model.{TermType, Xsd}
+import graft.sources.NTriples
 
 /**
  * SPARQL result serialisation — XML (SRX), JSON (SRJ), CSV, TSV — over a
- * PlainTerm-struct result DataFrame. Mirrors the reference's result formats
+ * result frame whose columns are PlainTerm structs (`t`, `v`, `dt`, `lang`;
+ * see [[graft.encoding.TermCols]]). Mirrors the reference's result formats
  * (query results surface lib/execution/src/results/, format test suites
  * testsuite/tests/sparql.rs:72-92).
  *
- * EVERY format renders distributed: `to*Lines` produce one serialised row
- * fragment per solution as a single-column DataFrame (codegen'd column
- * expressions, `df.write.text`-ready). The HTTP server streams these
- * partition-by-partition (`toLocalIterator`) under chunked transfer, so a
- * big SELECT never materialises on the driver; the `*String` conveniences
- * assemble the same lines into one document for small/embedded use.
+ * Each format is one plain-Scala renderer from a result `Row` to one line
+ * ([[layout]]); all escaping goes through [[jsonEscape]], [[xmlEscape]] and
+ * the N-Triples term writer [[NTriples.appendTerm]]. The HTTP server pulls
+ * the query's own rows with `toLocalIterator` and renders them on the driver
+ * while it streams, so no projection is added to the query plan and driver
+ * memory stays one partition. `to*Lines` run the same renderers in a
+ * `Dataset.map` (one `value` column, `df.write.text`-ready); the `*String`
+ * conveniences assemble one document for small/embedded use.
  */
 object Results {
 
   // ---------------------------------------------------------------- escaping
 
-  private def xmlEscape(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;").replace("\"", "&quot;")
-
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
+  /** XML text and attribute escape: `&`, `<`, `>`, `"`. */
+  private[graft] def xmlEscape(sb: java.lang.StringBuilder, s: String): Unit = s.foreach {
+    case '&' => sb.append("&amp;")
+    case '<' => sb.append("&lt;")
+    case '>' => sb.append("&gt;")
+    case '"' => sb.append("&quot;")
+    case c => sb.append(c)
   }
 
-  /** Column-expression JSON string escape (same mapping as [[jsonEscape]]):
-    * backslash and quote, short escapes for \n\r\t, \u00XX for the other C0
-    * control characters. The 29-replace control-char ladder only runs on
-    * rows that actually contain one (single rlike guard) — the common case
-    * pays 5 replaces. */
-  private def jsonEscCol(c: Column): Column = {
-    def basic(e: Column): Column =
-      regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        e, "\\\\", "\\\\\\\\"), "\"", "\\\\\""), "\n", "\\\\n"), "\r", "\\\\r"), "\t", "\\\\t")
-    val rare = (0 until 32).filterNot(i => i == 9 || i == 10 || i == 13).foldLeft(basic(c))((acc, i) =>
-      regexp_replace(acc, f"\\x{$i%02x}", "\\\\" + f"u$i%04x"))
-    when(c.rlike("[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]"), rare).otherwise(basic(c))
+  /** JSON string escape: quote and backslash, short escapes for \n \r \t,
+    * `\u00XX` for the other C0 control characters. */
+  private[graft] def jsonEscape(sb: java.lang.StringBuilder, s: String): Unit = s.foreach {
+    case '"' => sb.append("\\\"")
+    case '\\' => sb.append("\\\\")
+    case '\n' => sb.append("\\n")
+    case '\r' => sb.append("\\r")
+    case '\t' => sb.append("\\t")
+    case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+    case c => sb.append(c)
   }
 
-  private def xmlEscCol(c: Column): Column =
-    regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      c, "&", "&amp;"), "<", "&lt;"), ">", "&gt;"), "\"", "&quot;")
+  /** `s` through an appending escaper, as a String. */
+  private[graft] def escaped(esc: (java.lang.StringBuilder, String) => Unit, s: String): String = {
+    val sb = new java.lang.StringBuilder
+    esc(sb, s)
+    sb.toString
+  }
+
+  // ------------------------------------------------------------------ layout
+
+  /** One solution format: the document is `head`, then every row's `line`
+    * followed by `end` with `sep` between rows, then `tail`. `line` is a
+    * serialisable closure, so it runs on the driver and in tasks alike. */
+  final case class Layout(head: String, line: Row => String, sep: String, end: String,
+                          tail: String) {
+    def write(w: java.io.Writer, rows: java.util.Iterator[Row]): Unit = {
+      w.write(head)
+      if (rows.hasNext) w.write(line(rows.next()) + end)
+      while (rows.hasNext) w.write(sep + line(rows.next()) + end)
+      w.write(tail)
+    }
+  }
+
+  /** The layout of `fmt` (json, xml, csv or tsv) for result variables `vars`. */
+  def layout(fmt: String, vars: Seq[String]): Layout = fmt match {
+    case "json" => Layout(jsonHead(vars), jsonLine(vars), ",", "", JsonTail)
+    case "xml" => Layout(xmlHead(vars), xmlLine(vars), "", "\n", XmlTail)
+    case "csv" => Layout(vars.mkString(",") + "\r\n", csvLine(vars.size), "", "\r\n", "")
+    case "tsv" => Layout(vars.map("?" + _).mkString("\t") + "\n", tsvLine(vars.size), "", "\n", "")
+  }
+
+  private def document(df: DataFrame, fmt: String): String = {
+    val w = new java.io.StringWriter
+    layout(fmt, df.columns.toSeq).write(w, java.util.Arrays.asList(df.collect(): _*).iterator)
+    w.toString
+  }
+
+  private def lines(df: DataFrame, fmt: String): DataFrame = {
+    val line = layout(fmt, df.columns.toSeq).line
+    df.map(line)(Encoders.STRING).toDF("value")
+  }
+
+  /** A line renderer over `n` result columns: `open`, then `cell(sb, i,
+    * term)` per column with `sep` between cells, then `close`. Terms are
+    * PlainTerm structs in TermCols.schema order (t, v, dt, lang); an unbound
+    * column is skipped, or left an empty cell when `keepUnbound`. */
+  private def cells(n: Int, open: String, sep: String, close: String, keepUnbound: Boolean)(
+      cell: (java.lang.StringBuilder, Int, Row) => Unit): Row => String = r => {
+    val sb = new java.lang.StringBuilder(open)
+    var first = true
+    for (i <- 0 until n if keepUnbound || !r.isNullAt(i)) {
+      if (!first) sb.append(sep)
+      first = false
+      if (!r.isNullAt(i)) cell(sb, i, r.getStruct(i))
+    }
+    sb.append(close).toString
+  }
+
+  /** A term's kind as both SRX and SRJ name it. */
+  private def kind(t: Row): String = t.getByte(0) match {
+    case TermType.Iri => "uri"
+    case TermType.BlankNode => "bnode"
+    case _ => "literal"
+  }
+
+  /** Datatype IRI a literal shows: none for simple and language-tagged ones
+    * (and none for IRIs and blank nodes, which carry no dt). */
+  private def shownDatatype(t: Row): String =
+    if (!t.isNullAt(3) || t.isNullAt(2) || t.getString(2) == Xsd.string) null else t.getString(2)
 
   // --------------------------------------------------------------------- SRX
 
   /** SRX document prologue: XML declaration + head of variables. */
   def xmlHead(vars: Seq[String]): String =
     "<?xml version=\"1.0\"?>\n<sparql xmlns=\"http://www.w3.org/2005/sparql-results#\">\n<head>" +
-      vars.map(v => s"""<variable name="${xmlEscape(v)}"/>""").mkString +
+      vars.map(v => s"""<variable name="${escaped(xmlEscape, v)}"/>""").mkString +
       "</head>\n<results>\n"
 
   val XmlTail: String = "</results>\n</sparql>\n"
 
-  /** One `<result>…</result>` element per solution, rendered distributed. */
-  def toXmlLines(df: DataFrame): DataFrame = {
-    val frags = df.columns.map { v =>
-      val c = col(v)
-      val lex = xmlEscCol(TermCols.value(c))
-      val inner =
-        when(TermCols.isIri(c), concat(lit("<uri>"), lex, lit("</uri>")))
-          .when(TermCols.isBlank(c), concat(lit("<bnode>"), lex, lit("</bnode>")))
-          .when(TermCols.langTag(c).isNotNull,
-            concat(lit("<literal xml:lang=\""), TermCols.langTag(c), lit("\">"), lex, lit("</literal>")))
-          .when(TermCols.datatypeRaw(c).isNotNull && TermCols.datatypeRaw(c) =!= Xsd.string,
-            concat(lit("<literal datatype=\""), xmlEscCol(TermCols.datatypeRaw(c)), lit("\">"), lex, lit("</literal>")))
-          .otherwise(concat(lit("<literal>"), lex, lit("</literal>")))
-      when(c.isNull, lit(null).cast(StringType)).otherwise(
-        concat(lit(s"""<binding name="${xmlEscape(v)}">"""), inner, lit("</binding>")))
+  /** One `<result>…</result>` element per solution. */
+  private def xmlLine(vars: Seq[String]): Row => String = {
+    val open = vars.map(v => s"""<binding name="${escaped(xmlEscape, v)}">""").toArray
+    cells(vars.size, "<result>", "", "</result>", keepUnbound = false) { (sb, i, t) =>
+      sb.append(open(i)).append('<').append(kind(t))
+      val dt = shownDatatype(t)
+      if (!t.isNullAt(3)) sb.append(" xml:lang=\"").append(t.getString(3)).append('"')
+      else if (dt != null) { sb.append(" datatype=\""); xmlEscape(sb, dt); sb.append('"') }
+      sb.append('>')
+      xmlEscape(sb, t.getString(1))
+      sb.append("</").append(kind(t)).append("></binding>")
     }
-    df.select(concat(lit("<result>"), concat_ws("", frags.toSeq: _*), lit("</result>")).as("value"))
   }
 
+  /** One `<result>…</result>` element per solution, rendered in tasks. */
+  def toXmlLines(df: DataFrame): DataFrame = lines(df, "xml")
+
   /** SPARQL Query Results XML (https://www.w3.org/TR/rdf-sparql-XMLres/). */
-  def toXml(df: DataFrame): String =
-    xmlHead(df.columns.toSeq) +
-      toXmlLines(df).collect().map(_.getString(0) + "\n").mkString + XmlTail
+  def toXml(df: DataFrame): String = document(df, "xml")
 
   def booleanXml(b: Boolean): String =
     s"""<?xml version="1.0"?>\n<sparql xmlns="http://www.w3.org/2005/sparql-results#"><head/><boolean>$b</boolean></sparql>\n"""
@@ -95,78 +151,61 @@ object Results {
 
   /** SRJ document prologue: head of variables, opening the bindings array. */
   def jsonHead(vars: Seq[String]): String =
-    """{"head":{"vars":[""" + vars.map(v => "\"" + jsonEscape(v) + "\"").mkString(",") +
+    """{"head":{"vars":[""" + vars.map(v => "\"" + escaped(jsonEscape, v) + "\"").mkString(",") +
       """]},"results":{"bindings":["""
 
   val JsonTail: String = "]}}"
 
-  /** One JSON binding object per solution (no separators), rendered
-    * distributed; join with ',' between [[jsonHead]] and [[JsonTail]]. */
-  def toJsonLines(df: DataFrame): DataFrame = {
-    val frags = df.columns.map { v =>
-      val c = col(v)
-      val lex = jsonEscCol(TermCols.value(c))
-      val inner =
-        when(TermCols.isIri(c), concat(lit("\"type\":\"uri\",\"value\":\""), lex, lit("\"")))
-          .when(TermCols.isBlank(c), concat(lit("\"type\":\"bnode\",\"value\":\""), lex, lit("\"")))
-          .otherwise(concat(
-            lit("\"type\":\"literal\",\"value\":\""), lex, lit("\""),
-            when(TermCols.langTag(c).isNotNull,
-              concat(lit(",\"xml:lang\":\""), TermCols.langTag(c), lit("\"")))
-              .when(TermCols.datatypeRaw(c).isNotNull && TermCols.datatypeRaw(c) =!= Xsd.string,
-                concat(lit(",\"datatype\":\""), jsonEscCol(TermCols.datatypeRaw(c)), lit("\"")))
-              .otherwise(lit(""))))
-      when(c.isNull, lit(null).cast(StringType)).otherwise(
-        concat(lit("\"" + jsonEscape(v) + "\":{"), inner, lit("}")))
+  /** One JSON binding object per solution (no separators). */
+  private def jsonLine(vars: Seq[String]): Row => String = {
+    val keys = vars.map(v => "\"" + escaped(jsonEscape, v) + "\":{\"type\":\"").toArray
+    cells(vars.size, "{", ",", "}", keepUnbound = false) { (sb, i, t) =>
+      sb.append(keys(i)).append(kind(t)).append("\",\"value\":\"")
+      jsonEscape(sb, t.getString(1))
+      sb.append('"')
+      val dt = shownDatatype(t)
+      if (!t.isNullAt(3)) sb.append(",\"xml:lang\":\"").append(t.getString(3)).append('"')
+      else if (dt != null) { sb.append(",\"datatype\":\""); jsonEscape(sb, dt); sb.append('"') }
+      sb.append('}')
     }
-    df.select(concat(lit("{"), concat_ws(",", frags.toSeq: _*), lit("}")).as("value"))
   }
 
+  /** One JSON binding object per solution (no separators), rendered in
+    * tasks; join with ',' between [[jsonHead]] and [[JsonTail]]. */
+  def toJsonLines(df: DataFrame): DataFrame = lines(df, "json")
+
   /** SPARQL Query Results JSON (https://www.w3.org/TR/sparql11-results-json/). */
-  def toJson(df: DataFrame): String =
-    jsonHead(df.columns.toSeq) +
-      toJsonLines(df).collect().map(_.getString(0)).mkString(",") + JsonTail
+  def toJson(df: DataFrame): String = document(df, "json")
 
   def booleanJson(b: Boolean): String = s"""{"head":{},"boolean":$b}"""
 
   // ----------------------------------------------------------------- CSV/TSV
 
-  /** CSV (values only, RFC 4180 quoting) as a distributed single-column DF —
-    * write with `.write.text(...)`. Header row must be prepended by caller
-    * (or use [[csvString]] for a driver-side document). */
-  def toCsvLines(df: DataFrame): DataFrame = {
-    val cells = df.columns.map { c =>
-      val v = TermCols.value(col(c))
-      val needsQuote = v.contains(",") || v.contains("\"") || v.contains("\n")
-      when(col(c).isNull, lit(""))
-        .otherwise(when(needsQuote,
-          concat(lit("\""), regexp_replace(v, "\"", "\"\""), lit("\""))).otherwise(v))
-    }
-    df.select(concat_ws(",", cells: _*).as("value"))
+  /** CSV row: lexical values only, RFC 4180 quoting of fields holding a
+    * comma, quote, LF or CR; unbound = empty field. */
+  private def csvLine(n: Int): Row => String = cells(n, "", ",", "", keepUnbound = true) { (sb, _, t) =>
+    val v = t.getString(1)
+    if (v.exists(c => c == ',' || c == '"' || c == '\n' || c == '\r'))
+      sb.append('"').append(v.replace("\"", "\"\"")).append('"')
+    else sb.append(v)
   }
 
-  /** TSV with full term syntax (SPARQL 1.1 TSV results format). */
-  def toTsvLines(df: DataFrame): DataFrame = {
-    def fmt(c: org.apache.spark.sql.Column) = {
-      val esc = regexp_replace(regexp_replace(regexp_replace(
-        TermCols.value(c), "\\\\", "\\\\\\\\"), "\"", "\\\\\""), "\n", "\\\\n")
-      when(c.isNull, lit(""))
-        .when(TermCols.isIri(c), concat(lit("<"), TermCols.value(c), lit(">")))
-        .when(TermCols.isBlank(c), concat(lit("_:"), TermCols.value(c)))
-        .when(TermCols.langTag(c).isNotNull,
-          concat(lit("\""), esc, lit("\"@"), TermCols.langTag(c)))
-        .when(TermCols.datatypeRaw(c).isNotNull && TermCols.datatypeRaw(c) =!= Xsd.string,
-          concat(lit("\""), esc, lit("\"^^<"), TermCols.datatypeRaw(c), lit(">")))
-        .otherwise(concat(lit("\""), esc, lit("\"")))
-    }
-    df.select(concat_ws("\t", df.columns.map(c => fmt(col(c))): _*).as("value"))
-  }
+  /** TSV row: one N-Triples-syntax term per cell (tabs and line breaks
+    * escaped inside literals); unbound = empty cell. */
+  private def tsvLine(n: Int): Row => String =
+    cells(n, "", "\t", "", keepUnbound = true)((sb, _, t) => NTriples.appendTerm(sb, t, escapeTab = true))
 
-  def csvString(df: DataFrame): String =
-    (df.columns.mkString(",") +: toCsvLines(df).collect().map(_.getString(0)).toSeq).mkString("\r\n") + "\r\n"
+  /** CSV rows (values only, RFC 4180 quoting) rendered in tasks — write with
+    * `.write.text(...)`. The header row is the caller's (or use
+    * [[csvString]] for a driver-side document). */
+  def toCsvLines(df: DataFrame): DataFrame = lines(df, "csv")
 
-  def tsvString(df: DataFrame): String =
-    (df.columns.map("?" + _).mkString("\t") +: toTsvLines(df).collect().map(_.getString(0)).toSeq).mkString("\n") + "\n"
+  /** TSV rows with full term syntax (SPARQL 1.1 TSV results format). */
+  def toTsvLines(df: DataFrame): DataFrame = lines(df, "tsv")
+
+  def csvString(df: DataFrame): String = document(df, "csv")
+
+  def tsvString(df: DataFrame): String = document(df, "tsv")
 
   // ------------------------------------------------------------------ readers
 

@@ -814,23 +814,12 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
 
   private def values(vars: Seq[Var], rows: Seq[Seq[Option[RdfTerm]]]): SPlan = {
     val schema = StructType(vars.map(v => StructField(v.name, TermCols.schema, nullable = true)))
-    val data = rows.map(r => Row(r.map(_.map(termRow).orNull): _*))
+    val data = rows.map(r => Row(r.map(_.map(graft.sources.NTriples.termRow).orNull): _*))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(data, 1), schema)
     val mu = vars.zipWithIndex.filter { case (_, i) => rows.exists(r => r(i).isEmpty) }
       .map(_._1.name).toSet
     SPlan(df, vars.map(_.name), mu, tiny = true)
-  }
-
-  private def termRow(t: RdfTerm): Row = t match {
-    case Iri(v) => Row(TermType.Iri, v, null, null, null)
-    case BNode(v) => Row(TermType.BlankNode, v, null, null, null)
-    case Lit(v, dt, lang) =>
-      Row(TermType.Literal, v,
-        if (dt == Xsd.string && lang.isEmpty) null
-        else if (lang.isDefined) Rdf.langString else dt,
-        lang.orNull,
-        graft.sources.NTriples.numOf(v, dt))
   }
 
   // ------------------------------------------------------------------ filter

@@ -281,22 +281,9 @@ object ServiceExecutor {
     case TermPat(term) => renderTerm(term)
   }
 
-  private def renderTerm(t: RdfTerm): String = t match {
-    case Iri(v) => s"<$v>"
-    case BNode(id) => s"_:$id"
-    case Lit(v, dt, lang) =>
-      val esc = v.flatMap {
-        case '\\' => "\\\\"
-        case '"' => "\\\""
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c => c.toString
-      }
-      lang match {
-        case Some(l) => s""""$esc"@$l"""
-        case None if dt == null || dt == Xsd.string => s""""$esc""""
-        case None => s""""$esc"^^<$dt>"""
-      }
+  private def renderTerm(t: RdfTerm): String = {
+    val sb = new java.lang.StringBuilder
+    graft.sources.NTriples.appendTerm(sb, graft.sources.NTriples.termRow(t), escapeTab = true)
+    sb.toString
   }
 }

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types._
 import graft.encoding.TermCols
 import graft.model._
@@ -38,32 +39,28 @@ object NTriples {
     val parsed = lines.rdd.mapPartitions { it =>
       if (lenient) it.flatMap(parseLineRecovering) else it.flatMap(parseLine(_))
     }
-    import org.apache.spark.sql.Row
-    val rows = parsed.map { q =>
-      Row(q.graph.map(termRow).orNull, termRow(q.subject), termRow(q.predicate), termRow(q.obj))
-    }
-    spark.createDataFrame(rows, quadSchema)
+    spark.createDataFrame(parsed.map(quadRow), quadSchema)
   }
 
   /** Parse N-Triples/N-Quads text already on the driver (small data / tests). */
   def fromString(spark: SparkSession, text: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val rows: java.util.List[org.apache.spark.sql.Row] =
+    val rows: java.util.List[Row] =
       text.linesIterator.flatMap(parseLine(_)).map(quadRow).toList.asJava
     spark.createDataFrame(rows, quadSchema)
   }
 
-  private[graft] def quadRow(q: RdfQuad): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row(q.graph.map(termRow).orNull, termRow(q.subject),
+  private[graft] def quadRow(q: RdfQuad): Row =
+    Row(q.graph.map(termRow).orNull, termRow(q.subject),
       termRow(q.predicate), termRow(q.obj))
 
-  private def termRow(t: RdfTerm): org.apache.spark.sql.Row = t match {
-    case Iri(v) => org.apache.spark.sql.Row(TermType.Iri, v, null, null, null)
-    case BNode(v) => org.apache.spark.sql.Row(TermType.BlankNode, v, null, null, null)
+  /** A term as a PlainTerm struct row (simple literals carry dt = NULL). */
+  private[graft] def termRow(t: RdfTerm): Row = t match {
+    case Iri(v) => Row(TermType.Iri, v, null, null, null)
+    case BNode(v) => Row(TermType.BlankNode, v, null, null, null)
     case Lit(v, dt, lang) =>
-      org.apache.spark.sql.Row(TermType.Literal, v,
-        if (dt == Xsd.string && lang.isEmpty) null else dt, lang.orNull,
-        numOf(v, dt))
+      Row(TermType.Literal, v, if (lang.isDefined) Rdf.langString else if (dt == Xsd.string) null else dt,
+        lang.orNull, numOf(v, dt))
   }
 
   /** Pre-decoded numeric field (see TermCols.schema). */
@@ -213,27 +210,58 @@ object NTriples {
 
   // ------------------------------------------------------------------ writer
 
-  /** Serialise a quads DF to N-Quads lines (one string column), ready for
-    * `df.write.text(...)` — distributed, no driver collection
-    * (reference: Store::dump_to_writer, lib/rdf-fusion/src/store.rs:586-657). */
-  /** N-Triples text form of a term column (also valid Turtle/TriG). */
-  def termText(c: Column): Column = {
-    val esc = regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      TermCols.value(c), "\\\\", "\\\\\\\\"), "\"", "\\\\\""), "\n", "\\\\n"), "\r", "\\\\r")
-    when(TermCols.isIri(c), concat(lit("<"), TermCols.value(c), lit(">")))
-      .when(TermCols.isBlank(c), concat(lit("_:"), TermCols.value(c)))
-      .when(TermCols.langTag(c).isNotNull,
-        concat(lit("\""), esc, lit("\"@"), TermCols.langTag(c)))
-      .when(TermCols.datatypeRaw(c).isNotNull && TermCols.datatypeRaw(c) =!= Xsd.string,
-        concat(lit("\""), esc, lit("\"^^<"), TermCols.datatypeRaw(c), lit(">")))
-      .otherwise(concat(lit("\""), esc, lit("\"")))
+  /** Append the N-Triples form of a PlainTerm struct (`t`, `v`, `dt`,
+    * `lang` — TermCols.schema order) to `sb`; also valid Turtle/TriG and
+    * SPARQL. `escapeTab` escapes TAB as well, as a SPARQL TSV results cell
+    * needs. */
+  private[graft] def appendTerm(sb: java.lang.StringBuilder, t: Row, escapeTab: Boolean = false): Unit = {
+    val v = t.getString(1)
+    t.getByte(0) match {
+      case TermType.Iri => sb.append('<').append(v).append('>')
+      case TermType.BlankNode => sb.append("_:").append(v)
+      case _ =>
+        sb.append('"')
+        v.foreach {
+          case '\\' => sb.append("\\\\")
+          case '"' => sb.append("\\\"")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' if escapeTab => sb.append("\\t")
+          case c => sb.append(c)
+        }
+        sb.append('"')
+        if (!t.isNullAt(3)) sb.append('@').append(t.getString(3))
+        else if (!t.isNullAt(2) && t.getString(2) != Xsd.string)
+          sb.append("^^<").append(t.getString(2)).append('>')
+    }
   }
 
-  def toNQuadLines(quads: DataFrame): DataFrame = {
-    // concat_ws skips NULL elements, so default-graph rows get no extra gap.
-    quads.select(concat_ws(" ",
-      termText(col("subject")), termText(col("predicate")), termText(col("object")),
-      when(col("graph").isNotNull, termText(col("graph"))),
-      lit(".")).as("value"))
+  /** N-Triples text of a term column (for the Turtle/TriG writers' grouping). */
+  val termText: UserDefinedFunction = udf { (t: Row) =>
+    val sb = new java.lang.StringBuilder
+    appendTerm(sb, t)
+    sb.toString
   }
+
+  /** Renders one row of a quads frame with `schema` as an N-Quads line (no
+    * graph term for the default graph); a frame without a `graph` column
+    * holds default-graph triples. */
+  private[graft] def nquadLine(schema: StructType): Row => String = {
+    val Array(s, p, o) = Array("subject", "predicate", "object").map(schema.fieldIndex)
+    val g = if (schema.fieldNames.contains("graph")) schema.fieldIndex("graph") else -1
+    r => {
+      val sb = new java.lang.StringBuilder
+      appendTerm(sb, r.getStruct(s)); sb.append(' ')
+      appendTerm(sb, r.getStruct(p)); sb.append(' ')
+      appendTerm(sb, r.getStruct(o)); sb.append(' ')
+      if (g >= 0 && !r.isNullAt(g)) { appendTerm(sb, r.getStruct(g)); sb.append(' ') }
+      sb.append('.').toString
+    }
+  }
+
+  /** Serialise a quads (or triples) DF to N-Quads lines, one `value`
+    * column rendered in tasks, ready for `df.write.text(...)` (reference:
+    * Store::dump_to_writer, lib/rdf-fusion/src/store.rs:586-657). */
+  def toNQuadLines(quads: DataFrame): DataFrame =
+    quads.map(nquadLine(quads.schema))(Encoders.STRING).toDF("value")
 }

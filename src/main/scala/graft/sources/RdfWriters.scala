@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.encoding.TermCols
 import graft.model.Xsd
@@ -10,8 +10,9 @@ import graft.model.Xsd
  * `Store::dump_to_writer` format matrix (oxrdfio serialisers,
  * /root/reference/lib/rdf-fusion/src/store.rs:586-657).
  *
- * All writers are distributed: term rendering is column expressions and the
- * only shuffle is the per-subject grouping the formats' abbreviated syntax
+ * All writers are distributed: terms render through the N-Triples term
+ * writer ([[NTriples.termText]]) and [[xmlEsc]] as UDFs, and the only
+ * shuffle is the per-subject grouping the formats' abbreviated syntax
  * requires. Prefix abbreviation is deliberately not attempted — full IRIs
  * keep the writers embarrassingly parallel (no global prefix table to
  * coordinate across tasks), and every consumer accepts them.
@@ -48,25 +49,18 @@ object RdfWriters {
   private val NCNameStart = "A-Za-z_\\u00C0-\\u02FF\\u0370-\\u1FFF"
   private val NCNameRest = NCNameStart + "0-9\\-\\u00B7"
 
-  /** Chars with no XML 1.0 representation, not even as character refs. */
-  private val XmlUnrepresentable = "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]"
-
-  private def xmlEsc(c: Column): Column = {
-    // CR as a character reference: raw #xD is normalised away by every
-    // conforming XML reader, silently changing the literal. '>' escaped so
-    // ']]>' can never appear in content (XML 1.0 §2.4 forbids it raw).
-    val esc = regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-      regexp_replace(c,
-        "&", "&amp;"), "<", "&lt;"), ">", "&gt;"), "\"", "&quot;"), "\r", "&#13;")
-    // C0 controls other than TAB/LF/CR are unrepresentable in XML 1.0 at
-    // all — fail the dump loudly (same contract as dumpTurtle's named-graph
-    // require) instead of writing a document no conforming parser, including
-    // our own RdfXml reader, could read back.
-    when(regexp_like(c, lit(XmlUnrepresentable)),
-      raise_error(concat(lit("RDF/XML cannot represent C0 control characters; "
-        + "offending lexical form: "), c)))
-      .otherwise(esc)
-  }
+  /** XML text via [[graft.engine.Results.xmlEscape]], with CR as a
+    * character reference: raw #xD is normalised away by every conforming XML
+    * reader, silently changing the literal ('>' is escaped too, so ']]>'
+    * never appears raw — XML 1.0 §2.4). C0 controls other than TAB/LF/CR
+    * have no XML 1.0 representation at all: the dump fails loudly (same
+    * contract as dumpTurtle's named-graph require) instead of writing a
+    * document no conforming parser, including our RdfXml reader, could read. */
+  private val xmlEsc = udf { (s: String) => if (s == null) null else {
+    require(!s.exists(c => c < ' ' && c != '\t' && c != '\n' && c != '\r'),
+      s"RDF/XML cannot represent C0 control characters; offending lexical form: $s")
+    graft.engine.Results.escaped(graft.engine.Results.xmlEscape, s).replace("\r", "&#13;")
+  }}
 
   /**
    * RDF/XML `rdf:Description` blocks, one per subject. Property-element

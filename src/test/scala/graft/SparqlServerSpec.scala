@@ -169,4 +169,67 @@ class SparqlServerSpec extends SparkSpec {
     val (m2, _, _) = http("GET", s"$base/repositories/default/data")
     assert(m2 == 405)
   }
+
+  /** Janino "failed to compile" events (interpreted fallbacks) logged by
+    * Spark's CodeGenerator while `f` runs. */
+  private def compileFailures(f: => Unit): Long = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val failures = new java.util.concurrent.atomic.AtomicLong
+    val appender = new AbstractAppender("codegen-failures", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (Option(e.getMessage).exists(_.getFormattedMessage.toLowerCase.contains("failed to compile")))
+          failures.incrementAndGet()
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    appender.start()
+    val lc = new LoggerConfig(name, Level.WARN, false)
+    lc.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(name, lc)
+    ctx.updateLoggers()
+    try f finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    failures.get
+  }
+
+  test("a 12-variable SELECT with control characters renders without codegen fallbacks") {
+    import graft.model._
+    val s = Iri("http://ex.org/wide")
+    val c0 = (0 until 32).map(_.toChar).mkString
+    val objs: Seq[RdfTerm] = Seq(Iri("http://ex.org/o?a=1&b=2"), BNode("b1"), Lit(c0, Xsd.string, None),
+      Lit("say \"hi\" \\ <&>", Xsd.string, None), Lit("42", Xsd.integer, None),
+      Lit("chat\t\r\n", Rdf.langString, Some("fr")), Lit("😀 𝄞", Xsd.string, None),
+      Lit("x<y", "http://ex.org/dt?a=1&b=2", None), Lit("a,b", Xsd.string, None),
+      Lit("1.5", Xsd.decimal, None), Lit("", Xsd.string, None), Iri("http://ex.org/é"))
+    val vars = objs.indices.map(i => f"v$i%02d")
+    val wide = QuadStore.empty(spark).insert(objs.zipWithIndex.map { case (o, i) =>
+      RdfQuad(None, s, Iri(s"http://ex.org/p$i"), o)
+    }).quads
+    val s4 = SparqlServer.start(spark, wide)
+    try {
+      val q = s"SELECT ${vars.map("?" + _).mkString(" ")} WHERE { " +
+        vars.zipWithIndex.map { case (v, i) => s"<${s.value}> <http://ex.org/p$i> ?$v ." }.mkString(" ") + " }"
+      val url = s"http://127.0.0.1:${s4.boundPort}/repositories/default/query?query=${enc(q)}"
+      val bodies = scala.collection.mutable.Map.empty[String, String]
+      val failures = compileFailures {
+        Seq("application/sparql-results+json", "application/sparql-results+xml", "text/csv", "text/tsv")
+          .foreach { a =>
+            val (st, body, _) = http("GET", url, accept = a)
+            assert(st == 200, body)
+            bodies(a) = body
+          }
+      }
+      assert(failures == 0, s"$failures codegen compile failures")
+      val want = Seq(vars.zip(objs).toMap)
+      assert(solutions(bodies("application/sparql-results+json")) == want)
+      val Results.ReadSolutions(_, tsvRows) = Results.readTsv(bodies("text/tsv")): @unchecked
+      assert(tsvRows == want)
+    } finally s4.stop()
+  }
 }
