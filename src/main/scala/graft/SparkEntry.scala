@@ -1238,9 +1238,6 @@ object SparkEntry {
       }
     }
     val name = s"asof_gate_${asofStreamCounter.incrementAndGet()}"
-    val src = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1").parquet(stage).as[EventStreams.Event]
     // Scale-adaptive STATE partitioning (guide §2.3): the stateful operator's
     // partition count is frozen from spark.sql.shuffle.partitions at query
     // start and every micro-batch pays a fixed load/commit cost PER state
@@ -1255,23 +1252,24 @@ object SparkEntry {
       math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
         bytes / (16L << 20) + 1)).toInt
     }
-    // the conf is snapshotted into the query's offset metadata when its
-    // FIRST batch plans (async, after start()), so it is restored only once
-    // the stream has fully drained
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      s.conf.set("spark.sql.shuffle.partitions", stateParts)
-      val q = EventStreams.asofEnrichStream(src, "click", "view",
-          bufferMs = Long.MaxValue / 4)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    val res = s.table(name).select(col("event_id"), col("user_id"),
+    // the stream runs in its own session: the partition count is a session
+    // conf, and setting it on the shared session would leak into every query
+    // the HTTP server plans on that session while the stream drains
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", stateParts)
+    val src = ss.readStream
+      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
+      .option("maxFilesPerTrigger", "1").parquet(stage).as[EventStreams.Event]
+    val q = EventStreams.asofEnrichStream(src, "click", "view",
+        bufferMs = Long.MaxValue / 4)
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try { q.processAllAvailable() } finally q.stop()
+    val res = ss.table(name).select(col("event_id"), col("user_id"),
         unix_millis(col("ts")).as("click_ts_ms"),
         unix_millis(col("matched_ts")).as("view_matched_ts_ms"),
         col("matched_value").as("view_value"))
       .orderBy("event_id").localCheckpoint()
-    s.catalog.dropTempView(name)
+    ss.catalog.dropTempView(name)
     res
   }
 

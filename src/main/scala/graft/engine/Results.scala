@@ -24,12 +24,21 @@ object Results {
 
   // ---------------------------------------------------------------- escaping
 
-  /** XML text and attribute escape: `&`, `<`, `>`, `"`. */
+  /** XML text and attribute escape: `&`, `<`, `>`, `"`, and CR as the
+    * character reference `&#13;`, because every conforming XML reader
+    * normalises a raw CR to LF ('>' is escaped too, so ']]>' never appears
+    * raw — XML 1.0 §2.4). The other C0 controls except TAB and LF have no
+    * XML 1.0 representation at all: escaping one fails loudly instead of
+    * writing a document no conforming parser could read. */
   private[graft] def xmlEscape(sb: java.lang.StringBuilder, s: String): Unit = s.foreach {
     case '&' => sb.append("&amp;")
     case '<' => sb.append("&lt;")
     case '>' => sb.append("&gt;")
     case '"' => sb.append("&quot;")
+    case '\r' => sb.append("&#13;")
+    case c if c < ' ' && c != '\t' && c != '\n' =>
+      throw new IllegalArgumentException(
+        f"XML 1.0 cannot represent the control character U+${c.toInt}%04X; offending text: $s")
     case c => sb.append(c)
   }
 

@@ -33,6 +33,7 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
                      hasDatasetClause: Boolean = false) {
 
   import GraphScope._
+  import Rewriter.termFilter
 
   /** Named graphs visible to GRAPH patterns (spec §13.2 dataset
     * construction): None = no dataset clause → the store's named graphs;
@@ -220,18 +221,6 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
       (quads.filter(member)
         .select(col("subject"), col("predicate"), col("object")).dropDuplicates()
         .withColumn("graph", TermCols.nullTerm), None)
-  }
-
-  /** Field-level equality predicate for a bound term in a pattern slot —
-    * stays pushdown-friendly (subject.v = '…' reaches the parquet scan). */
-  private def termFilter(c: Column, t: RdfTerm): Column = t match {
-    case Iri(v) => c.getField("t") === TermType.Iri && c.getField("v") === v
-    case BNode(v) => c.getField("t") === TermType.BlankNode && c.getField("v") === v
-    case Lit(v, dt, lang) =>
-      val dtCanon = if (lang.isEmpty && (dt == null || dt == Xsd.string)) null
-                    else if (lang.isDefined) Rdf.langString else dt
-      c.getField("t") === TermType.Literal && c.getField("v") === v &&
-        c.getField("dt") <=> lit(dtCanon) && c.getField("lang") <=> lit(lang.orNull)
   }
 
   private def varName(tp: TermPattern): Option[String] = tp match {
@@ -1578,25 +1567,16 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     // bound-endpoint closures grow from the seed instead of materialising the
     // full transitive closure — the difference between O(reachable-from-x)
     // and O(all-paths) work at scale. A bound object seeds the reversed walk.
+    def reversed(df: DataFrame) = df.select(col("g"), col("tgt").as("src"), col("src").as("tgt"))
+    def zero(t: RdfTerm) = seedDF(df0, t).select(col("g"), col("n").as("src"), col("n").as("tgt"))
     val paths = (path, s, o) match {
-      case (PathOneOrMore(i), TermPat(t), _) =>
-        closure(pathDF(i, df0), Some(seedDF(df0, t)))
+      case (PathOneOrMore(i), TermPat(t), _) => KleenePlus.of(pathDF(i, df0), Some(t))
       case (PathOneOrMore(i), _, TermPat(t)) =>
-        closure(pathDF(i, df0).select(col("g"), col("tgt").as("src"), col("src").as("tgt")),
-            Some(seedDF(df0, t)))
-          .select(col("g"), col("tgt").as("src"), col("src").as("tgt"))
+        reversed(KleenePlus.of(reversed(pathDF(i, df0)), Some(t)))
       case (PathZeroOrMore(i), TermPat(t), _) =>
-        val seed = seedDF(df0, t)
-        val zero = seed.select(col("g"), col("n").as("src"), col("n").as("tgt"))
-        zero.unionAll(closure(pathDF(i, df0), Some(seed))).dropDuplicates()
+        zero(t).unionAll(KleenePlus.of(pathDF(i, df0), Some(t))).dropDuplicates()
       case (PathZeroOrMore(i), _, TermPat(t)) =>
-        val seed = seedDF(df0, t)
-        val zero = seed.select(col("g"), col("n").as("src"), col("n").as("tgt"))
-        zero.unionAll(
-            closure(pathDF(i, df0).select(col("g"), col("tgt").as("src"), col("src").as("tgt")),
-                Some(seed))
-              .select(col("g"), col("tgt").as("src"), col("src").as("tgt")))
-          .dropDuplicates()
+        zero(t).unionAll(reversed(KleenePlus.of(reversed(pathDF(i, df0)), Some(t)))).dropDuplicates()
       case _ => pathDF(path, df0)
     }
     var df = paths
@@ -1653,8 +1633,8 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     case PathAlternative(a, b) => // bag semantics (UNION translation)
       pathDF(a, q).unionAll(pathDF(b, q))
     case PathZeroOrOne(i) => zeroLength(q).unionAll(pathDF(i, q)).dropDuplicates()
-    case PathZeroOrMore(i) => zeroLength(q).unionAll(closure(pathDF(i, q))).dropDuplicates()
-    case PathOneOrMore(i) => closure(pathDF(i, q))
+    case PathZeroOrMore(i) => zeroLength(q).unionAll(KleenePlus.of(pathDF(i, q), None)).dropDuplicates()
+    case PathOneOrMore(i) => KleenePlus.of(pathDF(i, q), None)
   }
 
   /** Zero-length paths: every subject/object node paired with itself
@@ -1666,369 +1646,11 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
       .select(col("g"), col("n").as("src"), col("n").as("tgt"))
   }
 
-  /**
-   * Transitive closure — distributed semi-naïve iteration replacing the
-   * reference's single-partition blocking KleenePlusClosureExec
-   * (lib/physical/src/paths/kleene_plus/physical.rs:166-290). Each round is a
-   * distributed hash join; localCheckpoint cuts lineage so plans stay flat.
-   * Scales with cluster size where the reference is single-node here.
-   */
   /** Seed nodes (g, n) for a bound-endpoint closure walk. */
   private def seedDF(scoped: DataFrame, t: RdfTerm): DataFrame =
     scoped.select(col("graph").as("g"), col("subject").as("n"))
       .unionAll(scoped.select(col("graph").as("g"), col("object").as("n")))
       .filter(termFilter(col("n"), t)).dropDuplicates()
-
-  private def closure(edges0: DataFrame, seeds: Option[DataFrame] = None): DataFrame = {
-    val key = Rewriter.closureKey(edges0, seeds)
-    Rewriter.closureCache.synchronized {
-      val hit = Rewriter.closureCache.get(key)
-      if (hit != null) return hit
-    }
-    val result = closureCompute(edges0, seeds)
-    Rewriter.closureCache.synchronized { Rewriter.closureCache.put(key, result) }
-    result
-  }
-
-  /** Heavy (g, src) join keys of `rel` — nodes whose out-degree reaches
-    * [[graft.ops.SkewSalt.hotThreshold]] — or None when `rel` is too small
-    * for any key to qualify (gate/local scale pays zero extra jobs). A hub
-    * key amplifies the closure step join's OUTPUT (frontier-in × edges-out
-    * pairs in one task), which AQE's input-size-based skew splitting can
-    * never see (measured: tools/SkewProbe); the converse case — a hub with
-    * only IN-degree — is plain input skew on the delta side, which AQE does
-    * split. */
-  private def heavyKeys(rel: DataFrame, relCount: Long): Option[DataFrame] = {
-    val hot = graft.ops.SkewSalt.hotThreshold
-    val minRows = sys.props.get("graft.salt.minRows").map(_.toLong).getOrElse(100000L)
-    if (relCount < math.max(hot.toLong, minRows)) None
-    else {
-      val h = rel.groupBy(col("g"), col("src")).agg(count(lit(1)).as("__n"))
-        .where(col("__n") >= hot)
-        .select(col("g").as("hg"), col("src").as("hk")).localCheckpoint()
-      if (h.isEmpty) None else Some(h)
-    }
-  }
-
-  /** One closure step: delta (dg, dsrc, dtgt) ∘ rel (g, src, tgt) →
-    * (g, src, tgt). With `heavy` present the join is salted: delta rows
-    * landing on a heavy key take a deterministic salt hashed from their
-    * OTHER endpoint, heavy rel rows replicate once per salt — every
-    * composed path still produced exactly once, but a hub's quadratic
-    * output enumeration spreads across [[graft.ops.SkewSalt.salts]] tasks
-    * instead of one. */
-  private def stepJoin(delta: DataFrame, rel: DataFrame,
-                       heavy: Option[DataFrame]): DataFrame = heavy match {
-    case None =>
-      // both sides are checkpointed (no stats) → hint shuffle_hash so the
-      // per-round join skips SortMergeJoin's two sorts; the delta side is
-      // hinted (= build side): the frontier shrinks round over round while
-      // rel stays edge-sized
-      delta.hint("shuffle_hash")
-        .join(rel, col("dtgt") === col("src") && (col("dg") <=> col("g")))
-        .select(col("dg").as("g"), col("dsrc").as("src"), col("tgt"))
-    case Some(h) =>
-      val s = graft.ops.SkewSalt.salts
-      val hb = broadcast(h.withColumn("__hot", lit(1)))
-      val d2 = delta
-        .join(hb, col("dtgt") === col("hk") && (col("dg") <=> col("hg")), "left")
-        .withColumn("__sa", when(col("__hot") === 1,
-          pmod(xxhash64(col("dsrc")), lit(s)).cast("int")).otherwise(lit(0)))
-        .select(col("dg"), col("dsrc"), col("dtgt"), col("__sa"))
-      val r2 = rel
-        .join(hb, col("src") === col("hk") && (col("g") <=> col("hg")), "left")
-        .withColumn("__sb", explode(when(col("__hot") === 1,
-          sequence(lit(0), lit(s - 1))).otherwise(array(lit(0)))))
-        .select(col("g"), col("src"), col("tgt"), col("__sb"))
-      d2.hint("shuffle_hash")
-        .join(r2, col("dtgt") === col("src") && (col("dg") <=> col("g")) &&
-          col("__sa") === col("__sb"))
-        .select(col("dg").as("g"), col("dsrc").as("src"), col("tgt"))
-  }
-
-  /** [[heavyKeys]] over the long-encoded edge relation (s, t): hot source
-    * ids whose out-degree reaches the salt threshold. */
-  private def heavyIds(rel: DataFrame, relCount: Long): Option[DataFrame] = {
-    val hot = graft.ops.SkewSalt.hotThreshold
-    val minRows = sys.props.get("graft.salt.minRows").map(_.toLong).getOrElse(100000L)
-    if (relCount < math.max(hot.toLong, minRows)) None
-    else {
-      val h = rel.groupBy(col("s")).agg(count(lit(1)).as("__n"))
-        .where(col("__n") >= hot)
-        .select(col("s").as("hk")).localCheckpoint()
-      if (h.isEmpty) None else Some(h)
-    }
-  }
-
-  /** [[stepJoin]] on the long-encoded relations: delta (s, t) ∘ rel (s, t)
-    * joined on delta.t = rel.s → (s, t); salted identically when `heavy`
-    * ids are present. `broadcastDelta` streams rel against the broadcast
-    * delta instead — no exchange on the (big) rel side, no salting needed
-    * (a broadcast join has no per-key partition to collapse; composition
-    * output spreads across rel's existing blocks). */
-  private def stepJoinL(delta: DataFrame, rel: DataFrame,
-                        heavy: Option[DataFrame],
-                        broadcastDelta: Boolean = false): DataFrame = {
-    val d = delta.select(col("s").as("ds"), col("t").as("dt"))
-    if (broadcastDelta)
-      return broadcast(d).join(rel, col("dt") === col("s"))
-        .select(col("ds").as("s"), col("t"))
-    heavy match {
-      case None =>
-        d.hint("shuffle_hash").join(rel, col("dt") === col("s"))
-          .select(col("ds").as("s"), col("t"))
-      case Some(h) =>
-        val ns = graft.ops.SkewSalt.salts
-        val hb = broadcast(h.withColumn("__hot", lit(1)))
-        val d2 = d.join(hb, col("dt") === col("hk"), "left")
-          .withColumn("__sa", when(col("__hot") === 1,
-            pmod(xxhash64(col("ds")), lit(ns)).cast("int")).otherwise(lit(0)))
-          .select(col("ds"), col("dt"), col("__sa"))
-        val r2 = rel.join(hb, col("s") === col("hk"), "left")
-          .withColumn("__sb", explode(when(col("__hot") === 1,
-            sequence(lit(0), lit(ns - 1))).otherwise(array(lit(0)))))
-          .select(col("s"), col("t"), col("__sb"))
-        d2.hint("shuffle_hash")
-          .join(r2, col("dt") === col("s") && col("__sa") === col("__sb"))
-          .select(col("ds").as("s"), col("t"))
-    }
-  }
-
-  /** [[stepJoinL]] carrying the exact-distance column: `ex` (s, t, d) holds
-    * pairs at ONE exact distance, `rel` (s, t, d) the full history with its
-    * exact distances; output d = ex.d + rel.d (joined on ex.t = rel.s). */
-  private def stepJoinD(ex: DataFrame, rel: DataFrame,
-                        heavy: Option[DataFrame],
-                        broadcastDelta: Boolean = false): DataFrame = {
-    val d = ex.select(col("s").as("ds"), col("t").as("dt"), col("d").as("dd"))
-    val out = Seq(col("ds").as("s"), col("t"), (col("dd") + col("d")).as("d"))
-    if (broadcastDelta)
-      return broadcast(d).join(rel, col("dt") === col("s")).select(out: _*)
-    heavy match {
-      case None =>
-        d.hint("shuffle_hash").join(rel, col("dt") === col("s")).select(out: _*)
-      case Some(h) =>
-        val ns = graft.ops.SkewSalt.salts
-        val hb = broadcast(h.withColumn("__hot", lit(1)))
-        val d2 = d.join(hb, col("dt") === col("hk"), "left")
-          .withColumn("__sa", when(col("__hot") === 1,
-            pmod(xxhash64(col("ds")), lit(ns)).cast("int")).otherwise(lit(0)))
-          .select(col("ds"), col("dt"), col("dd"), col("__sa"))
-        val r2 = rel.join(hb, col("s") === col("hk"), "left")
-          .withColumn("__sb", explode(when(col("__hot") === 1,
-            sequence(lit(0), lit(ns - 1))).otherwise(array(lit(0)))))
-          .select(col("s"), col("t"), col("d"), col("__sb"))
-        d2.hint("shuffle_hash")
-          .join(r2, col("dt") === col("s") && col("__sa") === col("__sb"))
-          .select(out: _*)
-    }
-  }
-
-  /** stderr per-round timing, local profiling only (-Dgraft.closure.debug=true). */
-  private def dbg(label: => String, t0: Long): Unit =
-    if (sys.props.get("graft.closure.debug").contains("true"))
-      System.err.println(f"[closure] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-
-  private def closureCompute(edges0: DataFrame, seeds: Option[DataFrame]): DataFrame = {
-    val tE = System.nanoTime()
-    val edges = edges0.dropDuplicates().localCheckpoint()
-    dbg("edges materialize", tE)
-    // The iteration below shuffles its working relation every round; on RDF
-    // terms that is three 5-field structs per row. (graph, node) pairs are
-    // dictionary-encoded to ONE long up front (ids are per-graph, so the
-    // g <=> g same-graph constraint folds into plain id equality) and decoded
-    // back to terms once at the end: O(|edges| + |closure|) encode/decode
-    // replaces O(rounds × |closure|) struct-wide shuffles (guide §2.2,
-    // shuffle fewer bytes / narrower types).
-    val tD = System.nanoTime()
-    val dict0 = edges.select(col("g"), col("src").as("n"))
-      .unionAll(edges.select(col("g"), col("tgt").as("n")))
-      .dropDuplicates()
-      // ids are frozen by the checkpoint (assigned once, never recomputed)
-      .withColumn("__id", monotonically_increasing_id())
-      .localCheckpoint()
-    // the dictionary is node-count-bounded (≤ 2·|edges| entries, usually far
-    // fewer) while the pair relation it translates grows toward |closure| —
-    // broadcast it when it provably fits so the encode/decode joins never
-    // shuffle the big side (guide §3.1); above the gate, shuffled-hash
-    val dictBcastRows =
-      sys.props.get("graft.closure.dictBroadcastRows").map(_.toLong).getOrElse(2000000L)
-    val dict =
-      if (dict0.count() <= dictBcastRows) broadcast(dict0) else dict0.hint("shuffle_hash")
-    val sDict = dict.select(col("g").as("__sg"), col("n").as("__sn"), col("__id").as("__sid"))
-    val tDict = dict.select(col("g").as("__tg"), col("n").as("__tn"), col("__id").as("__tid"))
-    val eL = edges
-      .join(sDict, (col("g") <=> col("__sg")) && col("src") === col("__sn"))
-      .join(tDict, (col("g") <=> col("__tg")) && col("tgt") === col("__tn"))
-      .select(col("__sid").as("s"), col("__tid").as("t"))
-      .localCheckpoint()
-    dbg("dict encode", tD)
-    def decode(pairs: DataFrame): DataFrame = pairs
-      .join(sDict, col("s") === col("__sid"))
-      .join(tDict, col("t") === col("__tid"))
-      .select(col("__sg").as("g"), col("__sn").as("src"), col("__tn").as("tgt"))
-    // subtract already-known pairs: next is distinct, so this anti join is
-    // `except` minus except's redundant left-side re-dedup. The shuffle_hash
-    // hint sits on the NEW-pairs side (bounded by one round's compositions),
-    // never on the accumulated closure: a ShuffledHashJoin build side cannot
-    // spill, and `all` grows toward |closure| — building on it would OOM at
-    // scale exactly where except's SortMergeJoin spilled.
-    def minusAll(next: DataFrame, all: DataFrame): DataFrame = next.hint("shuffle_hash").join(
-      all.select(col("s").as("__as"), col("t").as("__at")),
-      col("s") === col("__as") && col("t") === col("__at"), "left_anti")
-    // One semi-naive round: compose delta ∘ rel, keep pairs not already in
-    // `all`. A small frontier takes the BROADCAST path (guide §3.1): compose
-    // streams rel against the broadcast delta, and the history check first
-    // semi-filters `all` down to the broadcast candidate keys before a
-    // broadcast anti join — the big sides (rel, all) are never shuffled.
-    // The shuffle path otherwise pays two full exchanges of the accumulated
-    // relation per round just to process a residual frontier; tail rounds
-    // of the doubling loop and every round of a small seeded walk hit this.
-    val tailRows = sys.props.get("graft.closure.tailBroadcastRows")
-      .map(_.toLong).getOrElse(250000L)
-    def subtractBcast(next: DataFrame, all: DataFrame): DataFrame = {
-      val known = all.join(
-          broadcast(next.select(col("s").as("__ns"), col("t").as("__nt"))),
-          col("s") === col("__ns") && col("t") === col("__nt"), "left_semi")
-        .select(col("s").as("__as"), col("t").as("__at")).localCheckpoint()
-      next.join(broadcast(known),
-        col("s") === col("__as") && col("t") === col("__at"), "left_anti")
-    }
-    // checkpoint `next`, count it, and subtract history by whichever side is
-    // provably small enough to broadcast
-    def subtract(next0: DataFrame, all: DataFrame, tail: Boolean): DataFrame =
-      if (tail) {
-        val next = next0.localCheckpoint()
-        val nCnt = next.count()
-        if (nCnt == 0) next
-        else if (nCnt <= tailRows) subtractBcast(next, all).localCheckpoint()
-        else minusAll(next, all).localCheckpoint()
-      } else minusAll(next0, all).localCheckpoint()
-    def round(delta: DataFrame, deltaCnt: Long, rel: DataFrame, all: DataFrame,
-              heavy: => Option[DataFrame]): DataFrame = {
-      val tail = deltaCnt <= tailRows
-      subtract(
-        stepJoinL(delta, rel, if (tail) None else heavy, broadcastDelta = tail)
-          .dropDuplicates(),
-        all, tail)
-    }
-    seeds match {
-      case Some(sd) =>
-        // seeded walk: the frontier only ever holds nodes reachable from the
-        // seeds — rounds are linear in path depth but each round touches
-        // O(frontier) data, not the whole graph
-        val tS = System.nanoTime()
-        val s = sd.select(col("g").as("sg"), col("n"))
-        val seedL = s.join(sDict,
-            (col("sg") <=> col("__sg")) && col("n") === col("__sn"))
-          .select(col("__sid").as("sn")).localCheckpoint()
-        var all = eL.join(seedL.hint("shuffle_hash"), col("s") === col("sn"), "left_semi")
-          .localCheckpoint()
-        dbg("seed frontier", tS)
-        // dense seed set: the walk would touch most of the graph anyway, and
-        // linear rounds pay fixed job overhead per hop — log-round full
-        // doubling restricted back to the seeds is strictly fewer rounds
-        val eCnt = eL.count()
-        val aCnt = all.count()
-        if (aCnt * 8 >= eCnt)
-          return closure(edges, None)
-            .join(s.hint("shuffle_hash"),
-              col("src") === col("n") && (col("g") <=> col("sg")), "left_semi")
-        // hub out-degrees are static across rounds: detect once — and
-        // lazily: only a shuffle-path round (frontier above the broadcast
-        // tail gate) consults it; all-broadcast walks never pay the
-        // detection job
-        lazy val eHeavy = heavyIds(eL, eCnt)
-        var delta = all
-        var deltaCnt = aCnt
-        var rounds = 0
-        // linear BFS rounds are O(frontier) work but pay fixed driver/job
-        // overhead per hop — right for shallow graphs; past maxLinear hops a
-        // deep structure is cheaper to finish with one path-doubled closure
-        // composed onto the reach so far (log(diameter) further rounds)
-        val maxLinear = 16
-        while (deltaCnt > 0 && rounds < maxLinear) {
-          val tR = System.nanoTime()
-          rounds += 1
-          delta = round(delta, deltaCnt, eL, all, eHeavy)
-          deltaCnt = delta.count()
-          // `all` stays a lazy union of CHECKPOINTED deltas: every piece is
-          // already materialized, so consumers scan the block union without
-          // re-persisting the whole accumulated set each round (the old
-          // checkpoint-of-union rewrote O(|closure|) blocks per round)
-          if (deltaCnt > 0) all = all.unionAll(delta)
-          dbg(s"seeded round $rounds += $deltaCnt", tR)
-        }
-        if (deltaCnt == 0) decode(all).localCheckpoint()
-        else {
-          // deep-graph escape: one composition onto the (cached, term-level)
-          // full closure finishes the walk in a single round
-          val full = closure(edges, None)
-          val allT = decode(all)
-          val a = allT.select(col("g").as("dg"), col("src").as("dsrc"), col("tgt").as("dtgt"))
-          stepJoin(a, full, heavyKeys(edges, eCnt))
-            .unionAll(allT).dropDuplicates().localCheckpoint()
-        }
-      case None =>
-        // full closure: EXACT-DISTANCE path doubling, log(diameter) rounds
-        // instead of the reference's single-partition linear loop
-        // (lib/physical/src/paths/kleene_plus/physical.rs:246-290).
-        // Every stored pair carries its exact shortest distance `d`. Round k
-        // composes only the EXACT-2^k front (ex = delta filtered to d = 2^k)
-        // against the full history: splitting a shortest path of length
-        // d* ∈ (2^k, 2^k+1] at exactly 2^k steps shows this reaches double
-        // the distance per round, and — unlike composing the whole band
-        // delta, whose (2^k-1, 2^k] × (0, 2^k] splits emit every new pair
-        // once per valid split point (measured 8× duplicate multiplicity on
-        // a 43M-pair closure, round output 70M rows) — the exact-front
-        // split is unique per shortest path, so compose output ≈ the new
-        // pairs themselves. min(d) aggregation replaces dropDuplicates
-        // (same shuffle), keeping stored distances exact (induction: a
-        // produced d is 2^k + an exact suffix distance, minimised over
-        // midpoints; the true midpoint realises the true distance and the
-        // anti join protects already-stored, strictly smaller values).
-        // Termination is new-empty: if any pair beyond 2^k existed, its
-        // 2^k-prefix would be an exact-2^k pair in the current delta.
-        val tC = System.nanoTime()
-        var size = eL.count()
-        dbg(s"initial count=$size", tC)
-        // hub keys come from the BASE edges, detected once: re-detecting on
-        // the evolving reachability relation costs O(|all|) extra per round
-        // (measured 2× on a 16M-pair closure) for marginal coverage — the
-        // base hub is the amplification epicenter; a node whose CLOSURE
-        // degree alone is huge spreads its output across its many distinct
-        // frontier rows, which is ordinary input skew AQE does split
-        lazy val eHeavy = {
-          val tH = System.nanoTime()
-          val h = heavyIds(eL, size)
-          dbg("heavyKeys", tH)
-          h
-        }
-        var all = eL.withColumn("d", lit(1L))
-        var delta = all
-        var deltaCnt = size
-        var span = 1L
-        while (deltaCnt > 0) {
-          val tR = System.nanoTime()
-          val tail = deltaCnt <= tailRows
-          val ex = delta.filter(col("d") === lit(span))
-          val composed = stepJoinD(ex, all, if (tail) None else eHeavy,
-            broadcastDelta = tail)
-          delta = subtract(
-            composed.groupBy(col("s"), col("t")).agg(min(col("d")).as("d")),
-            all, tail)
-          deltaCnt = delta.count()
-          // `all` stays a lazy union of CHECKPOINTED deltas: every piece is
-          // already materialized, so consumers scan the block union without
-          // re-persisting the whole accumulated set each round (the old
-          // checkpoint-of-union rewrote O(|closure|) blocks per round)
-          if (deltaCnt > 0) all = all.unionAll(delta)
-          span *= 2
-          dbg(s"doubling round += $deltaCnt", tR)
-        }
-        decode(all).localCheckpoint()
-    }
-  }
 
   // ===================================================================== query
 
@@ -2155,29 +1777,26 @@ object Rewriter {
     * cannot overflow on hostile queries with ~63 nullable shared vars. */
   private[engine] val CompatUnionMaxBranchBits: Int = 4
 
-  /** Computed closures memoised per (session, edges plan, seeds plan) — a
-    * transitive closure is a build-once/query-many artifact exactly like
-    * the IVF index and MinHash signature caches (ops/IndexCache): repeated
-    * `p+`/`p*` queries over the same (immutable-plan) edge relation reuse
-    * the fixpoint instead of re-running log(diameter) join rounds. Lives on
-    * the companion (a Rewriter is built per query), keyed by the FULL
-    * canonicalized plans, so new data (a changed store union) is a cache
-    * miss by construction. Bounded LRU; evicted checkpoints are freed by
-    * the ContextCleaner. */
-  private[engine] val closureCache = {
-    val m = new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        size() > 8
-    }
-    m
-  }
-  private[engine] def closureKey(edges: DataFrame, seeds: Option[DataFrame]): String =
-    graft.ops.IndexCache.key(edges) + "||" +
-      seeds.map(graft.ops.IndexCache.key(_)).getOrElse("")
-
-  /** Drop all memoised closures (bench honesty: min-of-passes timing must
+  /** Drop all memoised closures, both the broadcast adjacencies and the
+    * semi-naive loop's fixpoints (bench honesty: min-of-passes timing must
     * not report warm-artifact cost — see [[graft.ops.IndexCache.clearAll]]). */
-  def clearClosureCache(): Unit = closureCache.synchronized { closureCache.clear() }
+  def clearClosureCache(): Unit = KleenePlus.clearCache()
+
+  /** Field-level equality predicate for a bound term in a pattern slot —
+    * stays pushdown-friendly (subject.v = '…' reaches the parquet scan). */
+  private[engine] def termFilter(c: Column, t: RdfTerm): Column = t match {
+    case Iri(v) => c.getField("t") === TermType.Iri && c.getField("v") === v
+    case BNode(v) => c.getField("t") === TermType.BlankNode && c.getField("v") === v
+    case Lit(v, dt, lang) =>
+      c.getField("t") === TermType.Literal && c.getField("v") === v &&
+        c.getField("dt") <=> lit(litDatatype(dt, lang)) && c.getField("lang") <=> lit(lang.orNull)
+  }
+
+  /** The stored datatype of a literal: null for simple literals (with or
+    * without an explicit xsd:string), rdf:langString with a language tag. */
+  private[engine] def litDatatype(dt: String, lang: Option[String]): String =
+    if (lang.isEmpty && (dt == null || dt == Xsd.string)) null
+    else if (lang.isDefined) Rdf.langString else dt
 
   /** Whether Catalyst's size estimate for this plan is both MEANINGFUL and
     * under the session's broadcast threshold (guide §3.1: pick the join

@@ -49,18 +49,13 @@ object RdfWriters {
   private val NCNameStart = "A-Za-z_\\u00C0-\\u02FF\\u0370-\\u1FFF"
   private val NCNameRest = NCNameStart + "0-9\\-\\u00B7"
 
-  /** XML text via [[graft.engine.Results.xmlEscape]], with CR as a
-    * character reference: raw #xD is normalised away by every conforming XML
-    * reader, silently changing the literal ('>' is escaped too, so ']]>'
-    * never appears raw — XML 1.0 §2.4). C0 controls other than TAB/LF/CR
-    * have no XML 1.0 representation at all: the dump fails loudly (same
-    * contract as dumpTurtle's named-graph require) instead of writing a
-    * document no conforming parser, including our RdfXml reader, could read. */
-  private val xmlEsc = udf { (s: String) => if (s == null) null else {
-    require(!s.exists(c => c < ' ' && c != '\t' && c != '\n' && c != '\r'),
-      s"RDF/XML cannot represent C0 control characters; offending lexical form: $s")
-    graft.engine.Results.escaped(graft.engine.Results.xmlEscape, s).replace("\r", "&#13;")
-  }}
+  /** XML text via [[graft.engine.Results.xmlEscape]]: CR as `&#13;`, and a
+    * C0 control other than TAB/LF/CR fails the dump loudly (same contract as
+    * dumpTurtle's named-graph require) instead of writing a document no
+    * conforming parser, including our RdfXml reader, could read. */
+  private val xmlEsc = udf { (s: String) =>
+    if (s == null) null else graft.engine.Results.escaped(graft.engine.Results.xmlEscape, s)
+  }
 
   /**
    * RDF/XML `rdf:Description` blocks, one per subject. Property-element

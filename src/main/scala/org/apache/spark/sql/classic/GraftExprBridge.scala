@@ -1,7 +1,8 @@
 package org.apache.spark.sql.classic
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to the `private[sql]` Expression ↔ Column converters.
   *
@@ -14,4 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftExprBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over a logical plan, for graft's own plan nodes
+    * ([[graft.engine.KleenePlus]]); `Dataset.ofRows` is `private[sql]` too. */
+  def ofRows(s: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(s.asInstanceOf[SparkSession], plan)
 }

@@ -65,7 +65,8 @@ class ResultsSpec extends SparkSpec {
   test("every format renders its golden document byte for byte") {
     val g = ResultsGolden.frame(spark)
     assert(Results.toJson(g) == ResultsGolden.read("golden.srj"))
-    assert(Results.toXml(g) == ResultsGolden.read("golden.srx"))
+    assert(Results.toXml(ResultsGolden.frame(spark, ResultsGolden.xmlSolutions)) ==
+      ResultsGolden.read("golden.srx"))
     assert(Results.csvString(g) == ResultsGolden.read("golden.csv"))
     assert(Results.tsvString(g) == ResultsGolden.read("golden.tsv"))
     val nq = NTriples.toNQuadLines(ResultsGolden.quadFrame(spark)).collect().map(_.getString(0))
@@ -77,8 +78,9 @@ class ResultsSpec extends SparkSpec {
     def body(lines: org.apache.spark.sql.DataFrame) = lines.collect().map(_.getString(0)).toSeq
     assert(ResultsGolden.read("golden.srj") ==
       Results.jsonHead(ResultsGolden.vars) + body(Results.toJsonLines(g)).mkString(",") + Results.JsonTail)
-    assert(ResultsGolden.read("golden.srx") ==
-      Results.xmlHead(ResultsGolden.vars) + body(Results.toXmlLines(g)).map(_ + "\n").mkString + Results.XmlTail)
+    assert(ResultsGolden.read("golden.srx") == Results.xmlHead(ResultsGolden.vars) +
+      body(Results.toXmlLines(ResultsGolden.frame(spark, ResultsGolden.xmlSolutions))).map(_ + "\n").mkString +
+      Results.XmlTail)
     assert(ResultsGolden.read("golden.csv").split("\r\n", -1).toSeq.slice(1, 5) == body(Results.toCsvLines(g)))
     assert(ResultsGolden.read("golden.tsv").split("\n", -1).toSeq.slice(1, 5) == body(Results.toTsvLines(g)))
   }
@@ -89,20 +91,23 @@ class ResultsSpec extends SparkSpec {
     assert(solutionsOf(Results.readTsv(ResultsGolden.read("golden.tsv"))) == want)
     val quads = ResultsGolden.read("golden.nq").split("\n").toSeq.flatMap(NTriples.parseLine(_))
     assert(quads == ResultsGolden.quads.map(q => q.copy(obj = ResultsGolden.norm(q.obj))))
-    // XML 1.0 has no representation for C0 controls other than TAB and LF
-    // (and a conforming reader turns a raw CR into LF): SRX round-trips the
-    // frame without those cells
-    val xmlSafe = ResultsGolden.solutions.map(_.map {
-      case graft.model.Lit(v, _, _) if v.exists(c => c < ' ' && c != '\t' && c != '\n') => null
-      case t => t
-    })
+    // CR travels as &#13;, so SRX round-trips every cell XML 1.0 can carry
     val tmp = Files.createTempFile("golden", ".srx")
-    Files.writeString(tmp, Results.toXml(ResultsGolden.frame(spark, xmlSafe)))
+    Files.writeString(tmp, ResultsGolden.read("golden.srx"))
     TestSuite.readSrx(tmp) match {
       case TestSuite.ExpectedSolutions(vars, rws, _) =>
         assert(vars == ResultsGolden.vars)
-        assert(rws == ResultsGolden.bindings(xmlSafe))
+        assert(rws == ResultsGolden.bindings(ResultsGolden.xmlSolutions))
       case other => fail(s"unexpected $other")
+    }
+  }
+
+  test("SRX fails loudly on a control character XML 1.0 cannot carry") {
+    def chain(t: Throwable): List[Throwable] = t :: Option(t.getCause).map(chain).getOrElse(Nil)
+    for (c <- (0 until 32).map(_.toChar) if c != '\t' && c != '\n' && c != '\r') {
+      val frame = ResultsGolden.frame(spark, Seq(Seq(graft.model.Lit(s"a${c}b", null, None))))
+      val e = intercept[Exception](Results.toXml(frame))
+      assert(chain(e).exists(x => Option(x.getMessage).exists(_.contains(f"U+${c.toInt}%04X"))), e)
     }
   }
 

@@ -230,6 +230,9 @@ class SparqlServerSpec extends SparkSpec {
       assert(solutions(bodies("application/sparql-results+json")) == want)
       val Results.ReadSolutions(_, tsvRows) = Results.readTsv(bodies("text/tsv")): @unchecked
       assert(tsvRows == want)
+      // XML 1.0 cannot carry most C0 controls: the SRX stream stops short of
+      // its tail instead of passing for a complete document
+      assert(!bodies("application/sparql-results+xml").contains("</sparql>"))
     } finally s4.stop()
   }
 }
