@@ -1101,91 +1101,32 @@ object SparkEntry {
     Graft(wfCache._2, WfKinds)
   }
 
-  private val WfPrefixes = """PREFIX xsd:<http://www.w3.org/2001/XMLSchema#>
-    |PREFIX ct:<https://github.com/magbak/chrontext#>
-    |PREFIX rdfs:<http://www.w3.org/2000/01/rdf-schema#>
-    |PREFIX rdf:<http://www.w3.org/1999/02/22-rdf-syntax-ns#>
-    |PREFIX rds:<https://github.com/magbak/chrontext/rds_power#>
-    |""".stripMargin
-  private val WfBgp = """?site a rds:Site .
-    |    ?site rdfs:label ?site_label .
-    |    ?site rds:hasFunctionalAspect ?wtur_asp .
-    |    ?wtur_asp rdfs:label ?wtur_label .
-    |    ?wtur rds:hasFunctionalAspectNode ?wtur_asp .
-    |    ?wtur rds:hasFunctionalAspect ?gensys_asp .
-    |    ?wtur a rds:A .
-    |    ?gensys rds:hasFunctionalAspectNode ?gensys_asp .
-    |    ?gensys a rds:RA .
-    |    ?gensys rds:hasFunctionalAspect ?generator_asp .
-    |    ?generator rds:hasFunctionalAspectNode ?generator_asp .
-    |    ?generator a rds:GAA .
-    |    ?generator ct:hasTimeseries ?ts .
-    |    ?ts rdfs:label "Production" .
-    |    ?ts ct:hasDataPoint ?dp .
-    |    ?dp ct:hasValue ?val .
-    |    ?dp ct:hasTimestamp ?t .
-    |""".stripMargin
-
   /** Wind Farm production-query2 (bench/tests/query_results/queries/
     * wind-farm-production-query2.sparql) verbatim over the generated farm. */
   private def windfarmProduction(s: SparkSession, dir: String): DataFrame = {
-    val res = wfGraft(s).select(WfPrefixes +
-      "SELECT ?site_label ?wtur_label ?t ?val WHERE {\n" + WfBgp +
-      """    FILTER(?wtur_label in ("A1", "A2", "A3", "A4", "A5", "A6", "A7", "A8", "A9", "A10") && ?site_label = "Wind Mountain") .
-        |} ORDER BY ?site_label ?wtur_label ?t ?val LIMIT 10""".stripMargin)
+    val res = wfGraft(s).select(graft.gen.WindFarmQueries("production-query2"))
     Graft.decode(res, Map("val" -> DoubleType))
       .orderBy("site_label", "wtur_label", "t", "val")
   }
 
   /** Wind Farm grouped-production-query1 verbatim (10-minute AVG buckets). */
-  private def windfarmGroupedProd(s: SparkSession, dir: String): DataFrame = {
-    val res = wfGraft(s).select(WfPrefixes +
-      "SELECT ?site_label ?wtur_label ?year ?month ?day ?hour ?minute_10 (AVG(?val) as ?avg_val) WHERE {\n" +
-      WfBgp +
-      """    BIND(10 * FLOOR(minutes(?t) / 10.0) as ?minute_10)
-        |    BIND(hours(?t) AS ?hour)
-        |    BIND(day(?t) AS ?day)
-        |    BIND(month(?t) AS ?month)
-        |    BIND(year(?t) AS ?year)
-        |    FILTER(?site_label = "Wind Mountain"
-        |        && ?wtur_label = "A1"
-        |        && ?t >= "2022-08-30T08:46:53"^^xsd:dateTime
-        |        && ?t <= "2022-08-30T21:46:53"^^xsd:dateTime) .
-        |} GROUP BY ?site_label ?wtur_label ?year ?month ?day ?hour ?minute_10
-        |ORDER BY ?site_label ?wtur_label ?year ?month ?day ?hour ?minute_10 LIMIT 10""".stripMargin)
-    Graft.decode(res, Map("year" -> LongType, "month" -> LongType, "day" -> LongType,
-        "hour" -> LongType, "minute_10" -> LongType, "avg_val" -> DoubleType))
-      .select(col("site_label"), col("wtur_label"), col("year"), col("month"), col("day"),
-        col("hour"), col("minute_10"), round(col("avg_val"), 4).as("avg_val"))
-      .orderBy("hour", "minute_10")
-  }
+  private def windfarmGroupedProd(s: SparkSession, dir: String): DataFrame =
+    windfarmGrouped(wfGraft(s).select(graft.gen.WindFarmQueries("grouped-production-query1")))
 
   /** Wind Farm grouped-production-query2 verbatim: same buckets as query1
     * but an IN-filter across ten turbines; ORDER BY puts A1 (lexicographic
     * minimum) first and A1 alone has >10 buckets in the window, so the
     * LIMIT-10 result provably equals query1's — a different plan (10-series
     * scan + IN pruning) against the same walk oracle. */
-  private def windfarmGroupedMulti(s: SparkSession, dir: String): DataFrame = {
-    val res = wfGraft(s).select(WfPrefixes +
-      "SELECT ?site_label ?wtur_label ?year ?month ?day ?hour ?minute_10 (AVG(?val) as ?avg_val) WHERE {\n" +
-      WfBgp +
-      """    BIND(10 * FLOOR(minutes(?t) / 10.0) as ?minute_10)
-        |    BIND(hours(?t) AS ?hour)
-        |    BIND(day(?t) AS ?day)
-        |    BIND(month(?t) AS ?month)
-        |    BIND(year(?t) AS ?year)
-        |    FILTER(?site_label = "Wind Mountain"
-        |        && ?wtur_label in ("A1", "A2", "A3", "A4", "A5", "A6", "A7", "A8", "A9", "A10")
-        |        && ?t >= "2022-08-30T08:46:53"^^xsd:dateTime
-        |        && ?t <= "2022-08-30T21:46:53"^^xsd:dateTime) .
-        |} GROUP BY ?site_label ?wtur_label ?year ?month ?day ?hour ?minute_10
-        |ORDER BY ?site_label ?wtur_label ?year ?month ?day ?hour ?minute_10 LIMIT 10""".stripMargin)
+  private def windfarmGroupedMulti(s: SparkSession, dir: String): DataFrame =
+    windfarmGrouped(wfGraft(s).select(graft.gen.WindFarmQueries("grouped-production-query2")))
+
+  private def windfarmGrouped(res: DataFrame): DataFrame =
     Graft.decode(res, Map("year" -> LongType, "month" -> LongType, "day" -> LongType,
         "hour" -> LongType, "minute_10" -> LongType, "avg_val" -> DoubleType))
       .select(col("site_label"), col("wtur_label"), col("year"), col("month"), col("day"),
         col("hour"), col("minute_10"), round(col("avg_val"), 4).as("avg_val"))
       .orderBy("hour", "minute_10")
-  }
 
   /** REDUCED (spec-permitted dedup — the reference leaves it
     * `not_impl_err!`): oracle compares against DISTINCT, which is one of

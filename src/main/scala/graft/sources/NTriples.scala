@@ -78,12 +78,16 @@ object NTriples {
     if (line.isEmpty || line.startsWith("#")) return None
     val p = new NtParser(line)
     val s = p.term()
+    if (s.isInstanceOf[Lit])
+      throw new IllegalArgumentException(s"subject must be an IRI or blank node, got $s in: $line")
     val pr = p.term() match {
       case i: Iri => i
       case other => throw new IllegalArgumentException(s"predicate must be IRI, got $other in: $line")
     }
     val o = p.term()
     val g = p.optTerm()
+    if (g.exists(_.isInstanceOf[Lit]))
+      throw new IllegalArgumentException(s"graph label must be an IRI or blank node, got ${g.get} in: $line")
     if (requireDot) p.expectDot()
     Some(RdfQuad(g, s, pr, o))
   }

@@ -93,8 +93,9 @@ object RdfXml {
       // against the base in scope, it does not replace it verbatim
       val b = Option(se.getAttributeByName(new javax.xml.namespace.QName(XmlNs, "base")))
         .map(v => resolve(base, v.getValue)).getOrElse(base)
+      // xml:lang="" removes the inherited language (RDF/XML Syntax §2.7)
       val l = Option(se.getAttributeByName(new javax.xml.namespace.QName(XmlNs, "lang")))
-        .map(_.getValue.toLowerCase).filter(_.nonEmpty).orElse(lang)
+        .map(a => Some(a.getValue.toLowerCase).filter(_.nonEmpty)).getOrElse(lang)
       Ctx(b, l)
     }
 

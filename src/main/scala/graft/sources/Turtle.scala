@@ -101,12 +101,12 @@ object Turtle {
         i += 5; ws()
         val g = term(); ws(); expect('{'); ws()
         graph = Some(g)
-        while (i < s.length && s(i) != '}') { triples(); ws() }
+        while (i < s.length && s(i) != '}') { triples(inBlock = true); ws() }
         expect('}')
         graph = None
       } else if (s(i) == '{') { // TriG default graph block
         i += 1; ws()
-        while (i < s.length && s(i) != '}') { triples(); ws() }
+        while (i < s.length && s(i) != '}') { triples(inBlock = true); ws() }
         expect('}')
       } else {
         // TriG labeled graph block WITHOUT the GRAPH keyword: `label { … }`
@@ -120,15 +120,16 @@ object Turtle {
           case Some(g) =>
             i += 1; ws()
             graph = Some(g)
-            while (i < s.length && s(i) != '}') { triples(); ws() }
+            while (i < s.length && s(i) != '}') { triples(inBlock = true); ws() }
             expect('}')
             graph = None
-          case None => triples()
+          case None => triples(inBlock = false)
         }
       }
     }
 
-    private def triples(): Unit = {
+    /** One statement; its '.' may be left out only before a graph block's '}'. */
+    private def triples(inBlock: Boolean): Unit = {
       val subj =
         if (s(i) == '[') bnodePropertyList()
         else term()
@@ -136,6 +137,7 @@ object Turtle {
       if (i < s.length && s(i) != '.') predicateObjectList(subj)
       ws()
       if (i < s.length && s(i) == '.') i += 1
+      else if (!(inBlock && i < s.length && s(i) == '}')) err(s"expected '.' at $i")
     }
 
     private def predicateObjectList(subj: RdfTerm): Unit = {
@@ -212,7 +214,11 @@ object Turtle {
 
     private def prefixedName(): Iri = {
       val start = i
-      val p = until(':'); i += 1
+      // PN_PREFIX: name characters only, so a stray '.' or a newline is an
+      // error here rather than the start of a prefix that runs on
+      while (i < s.length && isNameChar(s(i))) i += 1
+      if (i >= s.length || s(i) != ':') { i = start; err(s"expected a term at $start") }
+      val p = s.substring(start, i); i += 1
       val local = name()
       prefixes.get(p) match {
         case Some(ns) => Iri(ns + local)

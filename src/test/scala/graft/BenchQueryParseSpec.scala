@@ -1,32 +1,31 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.gen.WindFarmQueries
 import graft.sparql.SparqlParser
 
-/** Parses every benchmark query the reference ships (BSBM Explore, BSBM
-  * Business Intelligence, Wind Farm — read-only at
-  * /root/reference/bench/tests/query_results/queries/): the grammar must
-  * cover real-world benchmark SPARQL, not just the regression corpus. */
+/** Parses every benchmark query text the repository holds — the BSBM Explore,
+  * Business Intelligence, path and update templates the benchmark runs
+  * (`perfbench/templates`, filled by `BsbmTemplates`) and the Wind Farm texts
+  * (`WindFarmQueries`): the grammar must cover real-world benchmark SPARQL,
+  * not just the regression corpus. */
 class BenchQueryParseSpec extends AnyFunSuite {
 
-  private val dir = Paths.get("/root/reference/bench/tests/query_results/queries")
+  /** (name, text, is an update) */
+  private val texts: Seq[(String, String, Boolean)] =
+    Seq("explore", "bi", "path", "update").flatMap { g =>
+      BsbmTemplates.files(g).map(f =>
+        (s"$g/${f.getFileName}", BsbmTemplates.fill(f), g == "update"))
+    } ++ WindFarmQueries.texts.map { case (k, t) => (WindFarmQueries.fileName(k), t, false) }
 
-  private val files =
-    if (Files.isDirectory(dir))
-      Files.list(dir).iterator().asScala.filter(_.toString.endsWith(".sparql")).toSeq.sortBy(_.toString)
-    else Nil
-
-  files.foreach { f =>
-    test(s"parses ${f.getFileName}") {
-      val text = new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
-      val q = SparqlParser.parse(text)
+  texts.foreach { case (name, text, isUpdate) =>
+    test(s"parses $name") {
+      val q = if (isUpdate) SparqlParser.parseUpdate(text) else SparqlParser.parse(text)
       assert(q != null)
     }
   }
 
   test("found the benchmark query corpus") {
-    assert(files.size >= 25, s"only ${files.size} queries found")
+    assert(texts.size >= 25, s"only ${texts.size} queries found")
   }
 }

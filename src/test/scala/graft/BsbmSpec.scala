@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 import graft.engine.Graft
 import graft.gen.BsbmGen
 
 /**
  * Executes every BSBM Explore + Business Intelligence query the reference
- * benches (/root/reference/bench/tests/query_results/queries/, read-only)
+ * benches — the texts adapted to `BsbmGen`'s IRIs under
+ * `perfbench/templates/{explore,bi}`, filled by `BsbmTemplates` —
  * end-to-end over the deterministic BSBM-shaped dataset. The reference's
  * snapshots come from the upstream BSBM generator's data (not available
  * offline), so result values differ; what this spec pins is that the
@@ -19,10 +18,6 @@ import graft.gen.BsbmGen
 // builder's own loop (see build.sbt testOptions).
 @graft.SlowTest
 class BsbmSpec extends SparkSpec {
-
-  private val qdir = Paths.get("/root/reference/bench/tests/query_results/queries")
-  private def text(name: String): String =
-    new String(Files.readAllBytes(qdir.resolve(s"$name.sparql")), "UTF-8")
 
   private lazy val graft = Graft(BsbmGen.quads(spark, 1000).repartition(32).localCheckpoint())
 
@@ -51,13 +46,23 @@ class BsbmSpec extends SparkSpec {
     "explore-q5", "explore-q7", "explore-q8", "explore-q10", "explore-q11",
     "explore-q12", "bi-q1", "bi-q2", "bi-q3", "bi-q4", "bi-q5", "bi-q6", "bi-q7", "bi-q8")
 
-  private val all = Files.list(qdir).iterator().asScala
-    .map(_.getFileName.toString).filter(f => f.startsWith("explore-") || f.startsWith("bi-"))
-    .map(_.stripSuffix(".sparql")).toSeq.sorted
+  /** (name, text): `explore/q02.rq` is `explore-q2`; `explore-q2-non-empty-optional`
+    * is Q2 bound to Product272, which has productPropertyNumeric4 and
+    * productPropertyTextual4, so two of Q2's three OPTIONALs bind. */
+  private val texts: Map[String, String] = Seq("explore", "bi").flatMap { g =>
+    BsbmTemplates.files(g).flatMap { f =>
+      val name = s"$g-q" + f.getFileName.toString.stripPrefix("q").stripSuffix(".rq").toInt
+      (name -> BsbmTemplates.fill(f)) +: (if (name != "explore-q2") Nil else Seq(
+        "explore-q2-non-empty-optional" ->
+          BsbmTemplates.fill(f, Map("Product" -> s"<${BsbmGen.Inst}dataFromProducer6/Product272>"))))
+    }
+  }.toMap
+
+  private val all = texts.keys.toSeq.sorted
 
   all.foreach { name =>
     test(s"$name executes over the generated dataset") {
-      val rows = graft.query(text(name)).collect()
+      val rows = graft.query(texts(name)).collect()
       if (mustReturnRows(name)) assert(rows.nonEmpty, s"$name returned no rows")
     }
   }

@@ -9,32 +9,20 @@ import graft.testkit.TestSuite
 import graft.testkit.TestSuite._
 
 /**
- * Runs the reference repo's own regression fixtures (read-only at
- * /root/reference/testsuite/{oxigraph-tests,rdf-fusion-tests}/sparql) through
- * our engine via the W3C-style manifest harness. Mirrors the reference's
- * testsuite/tests/oxigraph.rs + rdf_fusion.rs entry points.
+ * Regression fixtures in the format of the reference repo's own
+ * (testsuite/{oxigraph-tests,rdf-fusion-tests}/sparql and
+ * oxigraph-tests/geosparql), hand-authored under src/test/oxigraph-slice,
+ * run through our engine via the W3C-style manifest harness. Mirrors the
+ * reference's testsuite/tests/oxigraph.rs + rdf_fusion.rs entry points.
  */
 class OxigraphFixtureSpec extends SparkSpec {
 
   private val roots = Seq(
-    "/root/reference/testsuite/oxigraph-tests/sparql/manifest.ttl",
-    "/root/reference/testsuite/rdf-fusion-tests/sparql/manifest.ttl",
+    "src/test/oxigraph-slice/sparql/manifest.ttl",
+    "src/test/oxigraph-slice/rdf-fusion-sparql/manifest.ttl",
     // GeoSPARQL: the reference IGNORES this suite ("not yet implemented",
     // testsuite/tests/oxigraph.rs:26-33); we run and pass it (graft.geo)
-    "/root/reference/testsuite/oxigraph-tests/geosparql/manifest.ttl")
-
-  /** Not-yet-supported features (documented gaps, mirroring the reference's
-    * own ignore lists where applicable). */
-  private val skip: Set[String] = Set(
-    "one_or_more_star", // RDF-star data (reference skips SPARQL-star suites too)
-    // pins oxigraph's arbitrary total order for *incomparable* terms (malformed
-    // dates between numerics, unknown datatypes among strings); SPARQL 15.1
-    // leaves that order unspecified and ours follows the reference's own
-    // class-based sortable encoding (term_type.rs: numerics < strings < dates)
-    "order_terms"
-  )
-
-  private def skipped(t: Test): Boolean = skip(t.name)
+    "src/test/oxigraph-slice/geosparql/manifest.ttl")
 
   private def allTests: Seq[Test] = {
     def walk(m: Path, seen: Set[Path]): Seq[Test] = {
@@ -75,7 +63,6 @@ class OxigraphFixtureSpec extends SparkSpec {
   allTests.foreach {
     case t: SyntaxTest =>
       test(s"syntax: ${t.name}") {
-        if (skipped(t)) cancel("skipped (documented gap)")
         val text = new String(Files.readAllBytes(t.query), java.nio.charset.StandardCharsets.UTF_8)
         def parse(): Any =
           if (t.isUpdate) SparqlParser.parseUpdate(text) else SparqlParser.parse(text)
@@ -84,7 +71,6 @@ class OxigraphFixtureSpec extends SparkSpec {
       }
     case t: QueryEvalTest =>
       test(s"eval: ${t.name}") {
-        if (skipped(t)) cancel("skipped (documented gap)")
         val text = new String(Files.readAllBytes(t.query), java.nio.charset.StandardCharsets.UTF_8)
         val g = Graft(readData(t))
         val resultFile = t.result.getOrElse(fail("no result file"))

@@ -5,17 +5,20 @@ import graft.sources.{NTriples, RdfXml, Turtle}
 import graft.testkit.TestSuite
 
 /**
- * The reference's parser fixture corpus (testsuite/oxigraph-tests/parser,
- * read-only): rdftest-vocabulary manifest driving Turtle/TriG/RDF-XML eval
- * tests (parse → triple/quad set must match the expected N-Triples/N-Quads,
- * blank-node isomorphic) and negative syntax tests (parse must reject).
+ * Parser fixtures in the reference's format (its testsuite/oxigraph-tests/
+ * parser, parser-error and parser-recovery), hand-authored under
+ * src/test/oxigraph-slice: rdftest-vocabulary manifests driving
+ * Turtle/TriG/RDF-XML eval tests (parse → triple/quad set must match the
+ * expected N-Triples/N-Quads, blank-node isomorphic), negative syntax tests
+ * (parse must reject), an N-Triples positive syntax test, and oxigraph's
+ * recovery types (lenient parse → the statements that survive).
  */
 class ParserFixtureSpec extends SparkSpec {
 
   private val roots = Seq(
-    "/root/reference/testsuite/oxigraph-tests/parser",
-    "/root/reference/testsuite/oxigraph-tests/parser-error",
-    "/root/reference/testsuite/oxigraph-tests/parser-recovery")
+    "src/test/oxigraph-slice/parser",
+    "src/test/oxigraph-slice/parser-error",
+    "src/test/oxigraph-slice/parser-recovery")
 
   /** (dir, type, name, action, result?) entries from a test manifest
     * (rdftest vocabulary + oxigraph's ox: recovery types). */
@@ -40,18 +43,8 @@ class ParserFixtureSpec extends SparkSpec {
     }.sortBy(_._3)
   }
 
-  private def fileText(dir: java.nio.file.Path, iri: String): String = {
-    val fname = iri.split("/").last
-    // two manifest entries point at files that exist under slightly
-    // different names on disk (broken links in the fixture corpus):
-    // xml_multiple_objects.rdf → multiple_objects.rdf,
-    // slightly_invalid_escape_sequence.ttl → .nt
-    val candidates = Seq(fname, fname.stripPrefix("xml_"),
-      fname.replace(".ttl", ".nt")).map(dir.resolve)
-    val path = candidates.find(java.nio.file.Files.exists(_))
-      .getOrElse(fail(s"fixture file missing: $fname"))
-    new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-  }
+  private def fileText(dir: java.nio.file.Path, iri: String): String =
+    new String(java.nio.file.Files.readAllBytes(dir.resolve(iri.split("/").last)), "UTF-8")
 
   private def quadRows(qs: Seq[RdfQuad]): Seq[Map[String, RdfTerm]] =
     qs.map { q =>
@@ -71,21 +64,8 @@ class ParserFixtureSpec extends SparkSpec {
     case other => throw new IllegalArgumentException(s"unhandled test type $other")
   }
 
-  /** Fixtures whose expectations pin oxigraph-internal behaviour we
-    * deliberately diverge from (each documented); keyed by (type, action). */
-  private val skip: Map[(String, String), String] = Map(
-    // `foo:=""` — an attribute QName with empty local part is not well-formed
-    // XML (NCName must be non-empty); conforming StAX rejects the document
-    ("TestXMLEval", "language_normalization.rdf") ->
-      "attribute with empty NCName is not well-formed XML"
-  )
-
   roots.flatMap(entries).foreach { case (dir, tpe, name, action, result) =>
     test(s"$tpe: $name [${action.split("/").last}]") {
-      skip.get((tpe, action.split("/").last)) match {
-        case Some(reason) => cancel(reason)
-        case None =>
-      }
       val text = fileText(dir, action)
       if (tpe.contains("NegativeSyntax")) {
         intercept[Exception](parseBy(tpe, text))

@@ -6,16 +6,16 @@ import graft.sources.Turtle
 import graft.testkit.TestSuite
 
 /**
- * The reference's sparql-results fixture corpus (oxigraph-tests/
- * sparql-results, read-only): strictness and tolerance of the SRJ/SRX/TSV
- * result READERS — duplicated head variables must be rejected; unknown
+ * A sparql-results fixture corpus in the reference's format (its
+ * oxigraph-tests/sparql-results), hand-authored under
+ * src/test/oxigraph-slice/sparql-results: strictness and tolerance of the
+ * SRJ/SRX/TSV result READERS — duplicated head variables must be rejected; unknown
  * keys/attributes, late heads, and the legacy "typed-literal" type must be
  * tolerated, with eval tests comparing against an expected document.
  */
 class SparqlResultsFixtureSpec extends SparkSpec {
 
-  private val dir = java.nio.file.Paths.get(
-    "/root/reference/testsuite/oxigraph-tests/sparql-results")
+  private val dir = java.nio.file.Paths.get("src/test/oxigraph-slice/sparql-results")
 
   private def entries: Seq[(String, String, String, Option[String])] = {
     val text = new String(java.nio.file.Files.readAllBytes(dir.resolve("manifest.ttl")), "UTF-8")

@@ -1,14 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.engine.Graft
-import graft.gen.WindFarmGen
+import graft.gen.{WindFarmGen, WindFarmQueries}
 
 /**
- * Runs the reference's Wind Farm benchmark queries end-to-end
- * (/root/reference/bench/tests/query_results/queries/wind-farm-*.sparql,
- * read-only) over our deterministic re-derivation of its generator at the
+ * Runs the reference's Wind Farm benchmark queries end-to-end (the texts in
+ * `graft.gen.WindFarmQueries`, keyed by the reference's wind-farm-*.sparql
+ * file names) over our deterministic re-derivation of its generator at the
  * same scale as the reference's own snapshot test (4 turbines,
  * windfarm.rs: wind_farm_4_test_results). Values differ from the
  * reference's rand stream, so instead of its snapshots we verify the
@@ -17,9 +16,7 @@ import graft.gen.WindFarmGen
  */
 class WindFarmSpec extends SparkSpec {
 
-  private val qdir = Paths.get("/root/reference/bench/tests/query_results/queries")
-  private def queryText(name: String): String =
-    new String(Files.readAllBytes(qdir.resolve(s"wind-farm-$name.sparql")), "UTF-8")
+  private def queryText(name: String): String = WindFarmQueries(name)
 
   private val N = 4
   private lazy val quads = WindFarmGen.quads(spark, N).localCheckpoint()
