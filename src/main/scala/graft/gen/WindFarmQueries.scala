@@ -9,17 +9,13 @@ package graft.gen
  *
  *  - `production-query2`, `grouped-production-query1` and
  *    `grouped-production-query2` are the reference texts verbatim.
- *  - `production-query1` is a reconstruction, not the reference text:
- *    query2's text with its filter narrowed to turbine A1 at Wind Mountain,
- *    the four projected columns, ordered by `?t` (the only key left free by
- *    the filter), 10 rows.
- *  - The texts of `production-query3`/`4` and `grouped-production-query3`/`4`
- *    are not in this repository, and nothing here says what they filter;
- *    asking for one fails naming the missing file.
+ *  - The texts of `production-query1`/`3`/`4` and
+ *    `grouped-production-query3`/`4` are not in this repository; asking for
+ *    one fails naming the missing file.
  */
 object WindFarmQueries {
 
-  val Prefixes: String = """PREFIX xsd:<http://www.w3.org/2001/XMLSchema#>
+  private val Prefixes: String = """PREFIX xsd:<http://www.w3.org/2001/XMLSchema#>
     |PREFIX ct:<https://github.com/magbak/chrontext#>
     |PREFIX rdfs:<http://www.w3.org/2000/01/rdf-schema#>
     |PREFIX rdf:<http://www.w3.org/1999/02/22-rdf-syntax-ns#>
@@ -75,20 +71,10 @@ object WindFarmQueries {
   val texts: Seq[(String, String)] = Seq(
     "grouped-production-query1" -> grouped("= \"A1\""),
     "grouped-production-query2" -> grouped(s"in $TenTurbines"),
-    "production-query1" -> production("""?wtur_label = "A1" && ?site_label = "Wind Mountain""""),
     "production-query2" -> production(
       s"""?wtur_label in $TenTurbines && ?site_label = "Wind Mountain""""))
 
-  /** Reference texts this repository does not hold. */
-  val missing: Seq[String] = Seq("grouped-production-query3", "grouped-production-query4",
-    "production-query3", "production-query4")
-
-  def fileName(key: String): String = s"wind-farm-$key.sparql"
-
-  def apply(key: String): String = texts.collectFirst { case (`key`, t) => t }.getOrElse {
-    if (missing.contains(key))
-      throw new NoSuchElementException(
-        s"${fileName(key)}: the reference query text is not in this repository (see FIXTURES.md)")
-    throw new NoSuchElementException(s"no Wind Farm query $key")
-  }
+  def apply(key: String): String = texts.collectFirst { case (`key`, t) => t }.getOrElse(
+    throw new NoSuchElementException(
+      s"wind-farm-$key.sparql: the query text is not in this repository (see FIXTURES.md)"))
 }

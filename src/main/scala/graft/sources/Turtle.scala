@@ -41,8 +41,10 @@ object Turtle {
    * oxigraph-tests/parser-recovery): on a parse error, skip to the next
    * top-level '.' and continue with the following statement. A statement
    * that fails BEFORE its object is parsed contributes nothing; one that
-   * fails after (e.g. only its final dot is missing) keeps the triples
-   * already emitted — matching the reference's recovered outputs. The
+   * fails after keeps the triples already emitted — matching the
+   * reference's recovered outputs. A top-level statement whose final '.' is
+   * missing is whole: reading resumes right where the dot was expected, so
+   * the statement that follows is kept too. The
    * resync point is a heuristic (a '.' inside a malformed quoted string can
    * mis-anchor); strict [[parse]] remains the default.
    */
@@ -73,6 +75,7 @@ object Turtle {
         val before = i
         try directiveOrTriples()
         catch {
+          case _: MissingDot if i > before => // the statement is whole; read on from here
           case _: Exception =>
             // resync: past the next statement terminator (always advance)
             if (i <= before) i = before + 1
@@ -137,7 +140,8 @@ object Turtle {
       if (i < s.length && s(i) != '.') predicateObjectList(subj)
       ws()
       if (i < s.length && s(i) == '.') i += 1
-      else if (!(inBlock && i < s.length && s(i) == '}')) err(s"expected '.' at $i")
+      else if (!inBlock) throw new MissingDot(errMsg("expected '.'"))
+      else if (i >= s.length || s(i) != '}') err("expected '.'")
     }
 
     private def predicateObjectList(subj: RdfTerm): Unit = {
@@ -349,9 +353,13 @@ object Turtle {
       if (i >= s.length || s(i) != c) err(s"expected '$c'")
       i += 1
     }
-    private def err(msg: String): Nothing = {
+    private def errMsg(msg: String): String = {
       val ctx = s.substring(math.max(0, i - 30), math.min(s.length, i + 30))
-      throw new IllegalArgumentException(s"Turtle parse error at $i: $msg near …$ctx…")
+      s"Turtle parse error at $i: $msg near …$ctx…"
     }
+    private def err(msg: String): Nothing = throw new IllegalArgumentException(errMsg(msg))
   }
+
+  /** A top-level statement that lacks its final '.'. */
+  private final class MissingDot(msg: String) extends IllegalArgumentException(msg)
 }

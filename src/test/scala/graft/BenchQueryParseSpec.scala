@@ -16,7 +16,7 @@ class BenchQueryParseSpec extends AnyFunSuite {
     Seq("explore", "bi", "path", "update").flatMap { g =>
       BsbmTemplates.files(g).map(f =>
         (s"$g/${f.getFileName}", BsbmTemplates.fill(f), g == "update"))
-    } ++ WindFarmQueries.texts.map { case (k, t) => (WindFarmQueries.fileName(k), t, false) }
+    } ++ WindFarmQueries.texts.map { case (k, t) => (s"wind-farm-$k.sparql", t, false) }
 
   texts.foreach { case (name, text, isUpdate) =>
     test(s"parses $name") {

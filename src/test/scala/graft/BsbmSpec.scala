@@ -21,23 +21,15 @@ class BsbmSpec extends SparkSpec {
 
   private lazy val graft = Graft(BsbmGen.quads(spark, 1000).repartition(32).localCheckpoint())
 
-  // every concrete instance IRI the adapted queries reference must exist
+  // every instance IRI the filled templates bind must exist
   test("referenced instance IRIs exist in the generated data") {
     import org.apache.spark.sql.functions._
     val subjects = graft.quads.select(col("subject").getField("v").as("s")).distinct()
-    val needed = Seq(
-      "dataFromProducer6/Producer6", "dataFromProducer6/Product272",
-      "dataFromProducer7/Product296", "dataFromProducer12/Product578",
-      "dataFromProducer13/Product636", "dataFromProducer14/Product637",
-      "dataFromProducer17/Product801", "dataFromProducer19/Product890",
-      "dataFromVendor1/Offer1250", "dataFromVendor5/Offer9035",
-      "dataFromRatingSite1/Review4194",
-      "ProductType1", "ProductType4", "ProductType48", "ProductType56",
-      "ProductType85", "ProductType111", "ProductType141",
-      "ProductFeature8", "ProductFeature24", "ProductFeature1453",
-      "ProductFeature1645", "ProductFeature2594", "ProductFeature4393")
+    val needed = (BsbmTemplates.params.values.collect {
+      case v if v.startsWith("<") => v.stripPrefix("<").stripSuffix(">")
+    } ++ Seq(BsbmGen.Inst + "dataFromProducer6/Product272")).toSeq.distinct
     val present = subjects.where(
-      needed.map(n => col("s") === (BsbmGen.Inst + n)).reduce(_ || _)).count()
+      needed.map(n => col("s") === n).reduce(_ || _)).count()
     assert(present == needed.size, s"only $present of ${needed.size} referenced IRIs exist")
   }
 

@@ -32,18 +32,11 @@ class RdfXmlSpec extends SparkSpec {
   }
 
   test("fixture language_normalization: lang tag lowercased") {
-    // a document that is not well-formed XML (oxigraph's own fixture has a
-    // `foo:=""` property attribute, an empty local name) may be rejected, but
-    // never turned into silently-wrong triples; a missing fixture fails
-    val r = try Some(parseFixture("language_normalization")) catch {
-      case _: IllegalArgumentException | _: javax.xml.stream.XMLStreamException => None
+    val langs = parseFixture("language_normalization").collect {
+      case (_, _, Lit(v, _, lang)) => v -> lang
     }
-    r.foreach { triples =>
-      triples.foreach {
-        case (_, _, Lit(_, _, Some(lang))) => assert(lang == lang.toLowerCase)
-        case _ =>
-      }
-    }
+    assert(langs == Set("attribute" -> Some("en-us"), "inherited" -> Some("en-us"),
+      "own" -> Some("fr-ca"), "none" -> None))
   }
 
   test("fixture multiple_objects: text mixed with node element is an error") {
