@@ -76,7 +76,7 @@ object SparkEntry {
 
   /** MINUS whose only shared var (?nname) is OPTIONAL-introduced on the left
     * — exercises the nullable-shared-var MINUS rewrite (union of semi-join
-    * branches, Rewriter.compatUnionAnti): a left row with ?nname unbound
+    * branches in Rewriter.minus): a left row with ?nname unbound
     * shares NO binding with any right row (empty dom intersection), so the
     * SPARQL spec keeps it regardless of the right side. */
   private def sparqlMinusNullable(s: SparkSession, dir: String): DataFrame = {
@@ -283,7 +283,8 @@ object SparkEntry {
     * on BOTH sides — the no-equi compat shape that used to plan a pure-theta
     * BroadcastNestedLoopJoin and now lowers to the compat-union equi rewrite
     * (Rewriter.compatUnionJoin). Every nation has a name, so the null-pattern
-    * slices prune at build time and the physical plan is hash joins only. */
+    * slices are empty at execution and every row comes from the hash join
+    * of the bound slices. */
   private def sparqlOptionalChain(s: SparkSession, dir: String): DataFrame = {
     val res = graftOver(s, dir, "customer", "supplier", "nation").select(
       """SELECT ?nname (COUNT(?c) AS ?pairs) WHERE {

@@ -17,8 +17,7 @@ import graft.sparql.Algebra._
  * schema (graph | subject | predicate | object as PlainTerm structs).
  */
 final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
-                  fuseStars: Boolean = true, quadStarFusion: Boolean = false,
-                  compatUnion: Boolean = true) {
+                  fuseStars: Boolean = true, compatUnion: Boolean = true) {
   graft.geo.GeoFunctions.register() // idempotent; `new Graft` must work too
   private val spark: SparkSession = quads.sparkSession
 
@@ -58,7 +57,7 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
       if (from.nonEmpty) GraphScope.UnionOf(from.map(_.value))
       else if (fromNamed.nonEmpty) GraphScope.UnionOf(Nil)
       else GraphScope.DefaultGraph
-    (new Rewriter(spark, quads, fromNamed.map(_.value), star, fuseStars, quadStarFusion, compatUnion,
+    (new Rewriter(spark, quads, fromNamed.map(_.value), star, fuseStars, compatUnion,
       hasDatasetClause = from.nonEmpty || fromNamed.nonEmpty), scope)
   }
 
@@ -90,11 +89,11 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
       Seq(t.s, t.p, t.o).exists(_.isInstanceOf[BNodePat]))
     // Pin row ids when the template mints bnodes: the per-template selects
     // re-evaluate the solution plan, and monotonically_increasing_id is
-    // partition-layout-dependent — without the checkpoint two evaluations
-    // (or two actions on the constructed graph) could deal different ids to
-    // the same solution, breaking bnode co-reference across templates.
+    // partition-layout-dependent — without the pin two evaluations (or two
+    // actions on the constructed graph) could deal different ids to the
+    // same solution, breaking bnode co-reference across templates.
     val stamped = plan.df.withColumn("__row", monotonically_increasing_id())
-    val df = if (hasBnodes) stamped.localCheckpoint() else stamped
+    val df = if (hasBnodes) Deferred(stamped, "construct-rows") else stamped
     val inScope = plan.vars.toSet
     def slot(tp: TermPattern): Column = tp match {
       case VarPat(v) => if (inScope(v.name)) col(v.name) else TermCols.nullTerm
@@ -114,7 +113,9 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
   /** DESCRIBE: Concise Bounded Description — outgoing triples of the matched
     * terms, recursively following blank-node objects to fixpoint
     * (reference eval.rs:87-131). The bnode frontier shrinks each round, so
-    * the loop is bounded by the deepest bnode chain. */
+    * the loop is bounded by the deepest bnode chain. The loop runs its jobs
+    * when the description first executes ([[Deferred]]), not while the
+    * query is built. */
   private def describe(q: DescribeQuery): DataFrame = {
     val (rewriter, scope) = rewriterFor(q.fromDefault, q.fromNamed)
     val targets0: DataFrame = q.where match {
@@ -135,16 +136,20 @@ final class Graft(val quads: DataFrame, val star: Option[StarSource] = None,
     def outgoing(nodes: DataFrame): DataFrame =
       dg.join(nodes.hint("broadcast"), col("subject") === col("node"))
         .select(col("subject"), col("predicate"), col("object"))
-    var result = outgoing(targets0).dropDuplicates().localCheckpoint()
-    var frontier = result.filter(col("object.t") === TermType.BlankNode)
-      .select(col("object").as("node")).dropDuplicates().localCheckpoint()
-    while (!frontier.isEmpty) {
-      val next = outgoing(frontier).dropDuplicates().exceptAll(result).dropDuplicates().localCheckpoint()
-      result = result.unionAll(next).localCheckpoint()
-      frontier = next.filter(col("object.t") === TermType.BlankNode)
+    def bnodes(triples: DataFrame): DataFrame =
+      triples.filter(col("object.t") === TermType.BlankNode)
         .select(col("object").as("node")).dropDuplicates().localCheckpoint()
+    val first = outgoing(targets0).dropDuplicates()
+    Deferred.of(spark, first.schema, "describe") {
+      var result = first.localCheckpoint()
+      var frontier = bnodes(result)
+      while (!frontier.isEmpty) {
+        val next = outgoing(frontier).dropDuplicates().exceptAll(result).dropDuplicates().localCheckpoint()
+        result = result.unionAll(next).localCheckpoint()
+        frontier = bnodes(next)
+      }
+      result
     }
-    result
   }
 }
 
@@ -158,12 +163,6 @@ object Graft {
   /** Test/diagnostic entry: star fusion disabled — the naive per-pattern
     * join plan, the semantic reference for the fused paths. */
   def unfused(quads: DataFrame): Graft = new Graft(quads, None, fuseStars = false)
-  /** Opt-in generic quad-star fusion (one disjunction scan + aggregation per
-    * same-subject star). Measured SLOWER than the join plan on both parquet-
-    * and RDD-backed stores at every probed scale — use only for stores where
-    * re-scanning per pattern is catastrophically expensive. */
-  def withQuadStarFusion(quads: DataFrame): Graft =
-    new Graft(quads, None, fuseStars = true, quadStarFusion = true)
   /** Test/diagnostic entry: compat-union join rewrite disabled — the theta
     * join fallback is the semantic reference for the union rewrite. */
   def thetaCompat(quads: DataFrame): Graft =

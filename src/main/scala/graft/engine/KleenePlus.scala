@@ -7,14 +7,14 @@ import scala.concurrent.duration._
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
 import org.apache.spark.sql.classic.GraftExprBridge
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.LeafExecNode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -41,14 +41,6 @@ final case class KleenePlus(edges: LogicalPlan, seed: Option[RdfTerm], output: S
     s"KleenePlus${seed.fold("")(t => s" from $t")} ${output.mkString("[", ", ", "]")}"
   override protected def doCanonicalize(): LogicalPlan =
     super.doCanonicalize().asInstanceOf[KleenePlus].copy(edges = edges.canonicalized)
-}
-
-/** Plans [[KleenePlus]]; registered per session by [[KleenePlus.register]]. */
-object KleenePlusStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case KleenePlus(edges, seed, output) => KleenePlusExec(edges, seed, output) :: Nil
-    case _ => Nil
-  }
 }
 
 /**
@@ -128,18 +120,9 @@ private[engine] final class Adjacency(offsets: Array[Int], targets: Array[Int], 
 }
 
 object KleenePlus {
-  /** Idempotent per session: add [[KleenePlusStrategy]] to the session's planner. */
-  def register(s: SparkSession): Unit = {
-    val ex = s.experimental
-    if (!ex.extraStrategies.contains(KleenePlusStrategy)) ex.synchronized {
-      if (!ex.extraStrategies.contains(KleenePlusStrategy))
-        ex.extraStrategies = KleenePlusStrategy +: ex.extraStrategies
-    }
-  }
-
   /** `p+` over `edges` (g, src, tgt), optionally walking from `seed` only. */
   private[engine] def of(edges: DataFrame, seed: Option[RdfTerm]): DataFrame = {
-    register(edges.sparkSession)
+    GraftStrategy.register(edges.sparkSession)
     val plan = edges.queryExecution.analyzed
     GraftExprBridge.ofRows(edges.sparkSession, KleenePlus(plan, seed, plan.output.map(_.newInstance())))
   }

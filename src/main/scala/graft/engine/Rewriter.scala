@@ -28,7 +28,6 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
                      fromNamed: Seq[String] = Nil,
                      star: Option[StarSource] = None,
                      fuseStars: Boolean = true,
-                     quadStarFusion: Boolean = false,
                      compatUnion: Boolean = true,
                      hasDatasetClause: Boolean = false) {
 
@@ -284,33 +283,26 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
    * scopes fall back to quad scans.
    */
   private def bgpPlans(ps: Seq[TriplePattern], scope: GraphScope): Seq[SPlan] = {
-    if (!fuseStars || scope != DefaultGraph) return ps.map(scanTriple(_, scope))
+    if (!fuseStars || star.isEmpty || scope != DefaultGraph) return ps.map(scanTriple(_, scope))
     def fusible(tp: TriplePattern): Option[(String, String)] = (tp.p, varName(tp.s)) match {
       case (TermPat(Iri(p)), Some(sv)) => Some((sv, p))
       case _ => None
     }
-    // group key: subject variable; groups of ≥2 fusible patterns become one
-    // scan through the mapped property table when the StarSource answers the
-    // star. The GENERIC quad-star aggregation (quadStarPlan) is opt-in only:
-    // measured in both storage regimes it loses — on a pruned columnar
-    // layout, N predicate-pushdown scans + codegen'd hash joins beat one
-    // disjunction scan + a non-codegen object-hash aggregate (wind-farm
-    // probe: every query faster unfused), and on an RDD-backed 20M-quad
-    // store the collect-list aggregate is ~4× the join plan (ScaleProbe
-    // star BGP 19.7s fused vs 4.5s unfused). It remains available for
-    // stores where rescanning is catastrophically expensive (e.g. a remote
-    // source read over the network).
+    // group key: subject variable; a group of ≥2 fusible patterns becomes
+    // one scan when the StarSource answers the star through a mapped
+    // property table. Over raw quads the patterns stay separate scans: a
+    // generic star aggregation (one disjunction scan + groupBy(subject)) was
+    // measured slower than the join plan on both a pruned columnar layout
+    // and an RDD-backed store.
     val groups: Map[String, Seq[TriplePattern]] =
       ps.flatMap(tp => fusible(tp).map { case (sv, _) => sv -> tp })
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val fused = scala.collection.mutable.Map.empty[String, SPlan]
     for ((sv, group) <- groups if group.size >= 2) {
       val preds = group.map(tp => fusible(tp).get._2)
-      val viaMapped = star.filter(_ => scope == DefaultGraph)
-        .flatMap(_.starScan(preds).map { case (df, names) => starPlan(df, names, sv, group) })
-      viaMapped.orElse(
-        if (quadStarFusion) Some(quadStarPlan(sv, group, scope)) else None
-      ).foreach(fused(sv) = _)
+      star.flatMap(_.starScan(preds)).foreach { case (df, names) =>
+        fused(sv) = starPlan(df, names, sv, group)
+      }
     }
     // emit: fused plan at its group's first pattern, others individually
     val emitted = scala.collection.mutable.Set.empty[String]
@@ -321,82 +313,6 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
         case None => Some(scanTriple(tp, scope))
       }
     }
-  }
-
-  /**
-   * Same-subject star over the raw quad relation — the property-table access
-   * path for ANY quad store, not just the relational mapping: ONE
-   * predicate-disjunction scan + one groupBy(subject) replaces N quad scans
-   * + N−1 subject equi-joins. Each pattern becomes an aggregation arm:
-   * variable objects collect their matches into a list (exploded afterwards,
-   * so multi-valued predicates keep exact bag semantics — the cross product
-   * of the group's lists IS the same-subject join), bound objects become a
-   * match count (presence filter + a sequence-explode that replays the join
-   * multiplicity, exact even if the dataset holds duplicate quads). Bound
-   * object values stay in the scan disjunction, so selective patterns still
-   * prune at the parquet level.
-   *
-   * Scale shape: shuffle volume = the matching quads, once (the join path
-   * shuffles the same rows once per side plus every intermediate); the scan
-   * is one pass with field-level pushdown instead of N.
-   */
-  private def quadStarPlan(subjVar: String, group0: Seq[TriplePattern],
-                           scope: GraphScope): SPlan = {
-    val group = group0.distinct // a duplicated pattern joins idempotently; fuse it once
-    val (df0, _) = scopedQuads(scope)
-    def predOf(tp: TriplePattern): String = tp.p match {
-      case TermPat(Iri(p)) => p
-      case other => throw new IllegalStateException(s"unfusible predicate $other")
-    }
-    // scan keeps only rows some pattern can match, with bound-object values
-    // in the disjunction (pushdown-friendly field predicates)
-    val patMatch: Seq[Column] = group.map { tp =>
-      val pm = col("predicate.t") === TermType.Iri && col("predicate.v") === predOf(tp)
-      tp.o match {
-        case TermPat(t) => pm && termFilter(col("object"), t)
-        case _ => pm
-      }
-    }
-    val scan = df0.filter(patMatch.reduce(_ || _))
-    val arms = group.zipWithIndex.map { case (tp, i) =>
-      tp.o match {
-        case TermPat(_) => sum(when(patMatch(i), 1L)).as(s"__c$i")
-        case _ => collect_list(when(patMatch(i), col("object"))).as(s"__o${i}_l")
-      }
-    }
-    var df = scan.groupBy(col("subject")).agg(arms.head, arms.tail: _*)
-    group.zipWithIndex.foreach { case (tp, i) =>
-      tp.o match {
-        case TermPat(_) =>
-          // presence + multiplicity (count of matching quads; 1 for a set)
-          df = df.filter(col(s"__c$i") >= 1L)
-          df = df.select(col("*"), explode(sequence(lit(1L), col(s"__c$i"))).as(s"__m$i"))
-            .drop(s"__c$i", s"__m$i")
-        case _ =>
-          // empty list = pattern unmatched for this subject → explode drops it
-          df = df.select(col("*"), explode(col(s"__o${i}_l")).as(s"__o$i"))
-            .drop(s"__o${i}_l")
-      }
-    }
-    val objSlots: Seq[(String, String)] = group.zipWithIndex.flatMap { case (tp, i) =>
-      varName(tp.o).map(v => v -> s"__o$i")
-    }
-    val slots = (subjVar -> "subject") +: objSlots
-    slots.groupBy(_._1).foreach { case (_, occ) =>
-      occ.map(_._2).sliding(2).foreach {
-        case Seq(c1, c2) => df = df.filter(col(c1) === col(c2))
-        case _ =>
-      }
-    }
-    val outVars = slots.map(_._1).distinct
-    val proj = slots.groupBy(_._1).view.mapValues(_.head._2).toMap
-    val kinds = group.flatMap { tp =>
-      varName(tp.o) match {
-        case Some(ov) if ov != subjVar => star.flatMap(_.predKind(predOf(tp))).map(ov -> _)
-        case _ => None
-      }
-    }.toMap
-    SPlan(df.select(outVars.map(v => col(proj(v)).as(v)): _*), outVars, Set.empty, kinds)
   }
 
   /** Build the SPlan for one fused star group over the star-scan DataFrame
@@ -473,33 +389,13 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
 
     if (idKeys.isEmpty) {
       if (shared.isEmpty && filter.isEmpty) {
-        // Runtime-adaptive cartesian: CartesianProduct launches |left parts| ×
-        // |right parts| tasks and multiplies through chained components
-        // (BSBM BI-Q4's DISTINCT-subquery × pattern-block shape). An
-        // aggregate/distinct-rooted side is usually small but Catalyst's
-        // static stats can't see it — materialise such a side once (the
-        // cross join would materialise it anyway) and broadcast if its
-        // actual size permits, turning the cartesian into a
-        // BroadcastNestedLoopJoin that preserves the streamed side's
-        // partitioning. Counting a non-small side costs one pass over an
-        // already-needed intermediate; sides without aggregation are left
-        // alone (could be the whole corpus).
-        var (ldf2, rdf2) = (ldf, rdf)
-        if (!l.tiny && !r.tiny) {
-          def aggRooted(df: DataFrame): Boolean =
-            df.queryExecution.analyzed.find { n =>
-              val c = n.getClass.getSimpleName
-              c == "Aggregate" || c == "Deduplicate" || c == "Distinct"
-            }.isDefined
-          def adapt(df: DataFrame): DataFrame = {
-            val mat = df.localCheckpoint()
-            if (mat.count() <= Rewriter.CrossBroadcastRows) broadcast(mat) else mat
-          }
-          if (aggRooted(rdf2)) rdf2 = adapt(rdf2)
-          else if (joinType == "inner" && aggRooted(ldf2)) ldf2 = adapt(ldf2)
-        }
-        val df = if (joinType == "inner") ldf2.crossJoin(rdf2)
-                 else ldf2.join(rdf2, lit(true), "left")
+        // Cartesian. A side Catalyst estimates small broadcasts by the
+        // planner's own size rule (a global aggregate, as in BSBM BI-Q4, is
+        // a one-row estimate), and adaptive execution re-plans the join from
+        // the real size of a side that ends in a shuffle stage (BI-Q5's
+        // grouped subqueries).
+        val df = if (joinType == "inner") ldf.crossJoin(rdf)
+                 else ldf.join(rdf, lit(true), "left")
         val mu = l.maybeUnbound ++ (if (joinType == "left") r.vars.toSet else r.maybeUnbound)
         return SPlan(df, outVars, mu, mergeKinds(l, r), outTiny)
       }
@@ -516,65 +412,50 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
         val mu = if (joinType == "left") mu0 ++ rOnly else mu0
         return SPlan(df, outVars, mu, mergeKinds(l, r), outTiny)
       }
+      // No-equi compat join: when EVERY shared variable is nullable on some
+      // side, the theta condition below is pure isCompatible(...) — Catalyst
+      // extracts no equi keys and plans a BroadcastNestedLoopJoin, O(n·m)
+      // work with two large sides (the OPTIONAL-chain shape). The reference
+      // keeps the theta filter (lib/logical/src/join/rewrite.rs:183-221 +
+      // is_compatible.rs:18-100); the null-pattern union is exceed-the-
+      // reference work per SURVEY §2.3.
+      if (shared.nonEmpty && shared.forall(v => l.isNullable(v) || r.isNullable(v)) &&
+          unionRewrite(l, r, shared))
+        return compatUnionJoin(l, r, joinType, filter, shared, rOnly, outVars, outTiny)
     }
-
-    // No-equi compat join: when idKeys is empty and EVERY shared variable is
-    // nullable on some side, the condition below is pure isCompatible(...) —
-    // Catalyst extracts no equi keys and plans a BroadcastNestedLoopJoin,
-    // O(n·m) work with two large sides (the OPTIONAL-chain shape). Rewrite as
-    // a union over null-pattern slices: slice pairs that share a bound
-    // variable hash-join on it; pairs where every shared var is null on one
-    // side are all-compatible, so their cross is proportional to the
-    // operator's OUTPUT — inherent result size, not a plan defect. The
-    // reference keeps the theta filter (lib/logical/src/join/rewrite.rs:
-    // 183-221 + is_compatible.rs:18-100); this is exceed-the-reference work
-    // per SURVEY §2.3.
-    // (both-sides-tiny keeps the theta path: structurally bounded BNLJ work
-    // beats the rewrite's fixed costs — measured crossover ~10k rows/side,
-    // tools/CompatUnionProbe)
-    // (branch count = 2^(nullable-left + nullable-right); compare EXPONENTS —
-    // a shift product would overflow Long for ~63 nullable vars and bypass
-    // the cap on a hostile query)
-    if (compatUnion && !(l.tiny && r.tiny) && idKeys.isEmpty && shared.nonEmpty &&
-        shared.forall(v => l.isNullable(v) || r.isNullable(v)) &&
-        shared.count(l.isNullable) + shared.count(r.isNullable)
-          <= Rewriter.CompatUnionMaxBranchBits)
-      return compatUnionJoin(l, r, joinType, filter, shared, rOnly, outVars, outTiny)
 
     // general path: explicit condition (native-typed idKey equality + compat
     // per shared var + LeftJoin filter inside the condition, SPARQL
     // semantics), then coalesce shared columns
-    thetaCompatJoin(l, r, joinType, filter, shared, rOnly, outVars, outTiny,
-      idKeys, ldf, r.df, broadcastRight = r.tiny)
-  }
-
-  /** The explicit-condition (theta) compat join — the general fallback and
-    * the measured-small-sides path of the compat-union rewrite (which hands
-    * in its already-checkpointed inputs so the materialisation isn't paid
-    * twice). */
-  private def thetaCompatJoin(l: SPlan, r: SPlan, joinType: String,
-                              filter: Option[Expr], shared: Seq[String],
-                              rOnly: Seq[String], outVars: Seq[String],
-                              outTiny: Boolean, idKeys: Seq[String],
-                              ldf: DataFrame, rdfIn: DataFrame,
-                              broadcastRight: Boolean): SPlan = {
-    val rr0 = rdfIn.select(r.vars.map(v => col(v).as("__r_" + v)): _*)
-    val rr = if (broadcastRight) broadcast(rr0) else rr0
+    val rr0 = r.df.select(r.vars.map(v => col(v).as("__r_" + v)): _*)
+    val rr = if (r.tiny) broadcast(rr0) else rr0
     val idCond = idKeys.map(k => col(k) === col("__r_" + k))
     val compat = shared.map { v =>
       if (!l.isNullable(v) && !r.isNullable(v)) col(v) === col("__r_" + v)
       else TermCols.isCompatible(col(v), col("__r_" + v))
     }
-    val filterCond = filter.map { f =>
-      val env: ExprCompiler.Env = name =>
-        if (shared.contains(name)) coalesce(col(name), col("__r_" + name))
-        else if (l.vars.contains(name)) col(name)
-        else if (r.vars.contains(name)) col("__r_" + name)
-        else TermCols.nullTerm
-      ExprCompiler.ebv(f, env)
-    }
-    val cond = (idCond ++ compat ++ filterCond).reduceOption(_ && _).getOrElse(lit(true))
-    val joined = ldf.join(rr, cond, joinType)
+    val cond = (idCond ++ compat ++ compatFilter(l, r, shared, filter))
+      .reduceOption(_ && _).getOrElse(lit(true))
+    compatOutput(l, r, joinType, shared, rOnly, outVars, outTiny, ldf.join(rr, cond, joinType))
+  }
+
+  /** A LeftJoin's FILTER over a compat join's columns (left vars by name,
+    * right vars as `__r_<var>`, shared vars coalesced). */
+  private def compatFilter(l: SPlan, r: SPlan, shared: Seq[String],
+                           filter: Option[Expr]): Option[Column] = filter.map { f =>
+    val env: ExprCompiler.Env = name =>
+      if (shared.contains(name)) coalesce(col(name), col("__r_" + name))
+      else if (l.vars.contains(name)) col(name)
+      else if (r.vars.contains(name)) col("__r_" + name)
+      else TermCols.nullTerm
+    ExprCompiler.ebv(f, env)
+  }
+
+  /** A compat join's solutions from its joined columns: shared vars
+    * coalesced, right-only vars renamed back. */
+  private def compatOutput(l: SPlan, r: SPlan, joinType: String, shared: Seq[String],
+                           rOnly: Seq[String], outVars: Seq[String], outTiny: Boolean,
+                           joined: DataFrame): SPlan = {
     val out = outVars.map { v =>
       if (shared.contains(v)) coalesce(col(v), col("__r_" + v)).as(v)
       else if (l.vars.contains(v)) col(v)
@@ -589,131 +470,79 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     SPlan(joined.select(out: _*), outVars, mu, mergeKinds(l, r), outTiny)
   }
 
-  /** All subsets of `vs` — the null patterns of a side's nullable shared
-    * vars in the compat-union rewrites. */
-  private def subsets(vs: Seq[String]): Seq[Set[String]] =
-    vs.foldLeft(Seq(Set.empty[String]))((acc, v) => acc ++ acc.map(_ + v))
+  /** Whether a join, MINUS or EXISTS whose `shared` vars are nullable on some
+    * side takes the null-pattern union rewrite instead of the theta join.
+    * Both sides tiny keep the theta join: a nested loop over structurally
+    * bounded inputs needs no rewrite. Branches = 2^(nullable-left +
+    * nullable-right); compare EXPONENTS, since a shift product would
+    * overflow Long for ~63 nullable vars and bypass the cap. */
+  private def unionRewrite(l: SPlan, r: SPlan, shared: Seq[String]): Boolean =
+    compatUnion && !(l.tiny && r.tiny) &&
+      shared.count(l.isNullable) + shared.count(r.isNullable) <= Rewriter.CompatUnionMaxBranchBits
 
-  /** Rows per null pattern of `vs` (one aggregation, tiny driver result). */
-  private def nullPatternCounts(df: DataFrame, vs: Seq[String],
-                                pre: String): Map[Set[String], Long] =
-    if (vs.isEmpty) Map.empty
-    else df.groupBy(vs.map(v => col(pre + v).isNull.as(v)): _*).count()
-      .collect().map { row =>
-        (vs.zipWithIndex.collect { case (v, i) if row.getBoolean(i) => v }.toSet,
-          row.getLong(vs.size))
-      }.toMap
+  /** The null-pattern slice pairs of a compat join, MINUS or EXISTS over
+    * `shared`: `ldf` split by which of `l`'s nullable shared vars are NULL,
+    * `rdf` (shared vars named `__r_<var>`) split the same way for `r`. Each
+    * pair comes with the equality of the shared vars bound in BOTH slices —
+    * compatibility holds for free on the rest (NULL on at least one side) —
+    * or None when there is no such var and every row pair is compatible.
+    * Every pair is emitted; a keyed pair over an empty slice ends in an
+    * empty shuffle stage, which adaptive execution drops. */
+  private def slicePairs(ldf: DataFrame, rdf: DataFrame, shared: Seq[String],
+                         l: SPlan, r: SPlan): Seq[Rewriter.SlicePair] = {
+    def slices(df: DataFrame, vs: Seq[String], pre: String): Seq[(Set[String], DataFrame)] =
+      vs.foldLeft(Seq(Set.empty[String]))((acc, v) => acc ++ acc.map(_ + v)).map { nulls =>
+        nulls -> vs.foldLeft(df)((d, v) =>
+          d.filter(if (nulls(v)) col(pre + v).isNull else col(pre + v).isNotNull))
+      }
+    for {
+      (aNull, lslice) <- slices(ldf, shared.filter(l.isNullable), "")
+      (bNull, rslice) <- slices(rdf, shared.filter(r.isNullable), "__r_")
+    } yield Rewriter.SlicePair(lslice, aNull.nonEmpty, rslice, bNull.nonEmpty,
+      shared.filterNot(v => aNull(v) || bNull(v)).map(k => col(k) === col("__r_" + k)).reduceOption(_ && _))
+  }
 
   /** Compat join with no equi component, as a union of null-pattern equi-join
-    * slices (see the call site in [[join]] for why). Each side splits by
-    * which of its nullable shared vars are NULL; a (leftPattern,
-    * rightPattern) pair equi-joins on the vars bound in BOTH patterns —
-    * compatibility holds for free on the rest (null on ≥1 side). LeftJoin
-    * decomposes as inner-matches ∪ (unmatched left rows, null-padded),
-    * keyed by a stable per-row id so bag semantics survive. Both sides are
-    * localCheckpoint'ed: each is scanned once per null-pattern, and the
-    * row id must not be recomputed across plan subtrees. */
+    * slices (see the call site in [[join]] for why): a slice pair with keys
+    * hash-joins on them; a pair without is all-compatible, so its cross is
+    * the operator's actual output for those slices. LeftJoin decomposes as
+    * inner matches ∪ (unmatched left rows, null-padded), keyed by a per-row
+    * id so bag semantics survive. Both sides are pinned ([[Deferred]]): each
+    * is read once per slice pair, and the row id must not be recomputed
+    * between the pairs and the unmatched-row anti join. */
   private def compatUnionJoin(l: SPlan, r: SPlan, joinType: String,
                               filter: Option[Expr], shared: Seq[String],
                               rOnly: Seq[String], outVars: Seq[String],
                               outTiny: Boolean): SPlan = {
-    val ln = shared.filter(l.isNullable)
-    val rn = shared.filter(r.isNullable)
+    val left = joinType == "left"
     val rowId = fresh("lrow")
-    val ldf0 =
-      if (joinType == "left") l.df.withColumn(rowId, monotonically_increasing_id())
-      else l.df
-    // both sides are scanned once per (leftPattern, rightPattern) branch —
-    // 2^|ln| × 2^|rn| times — so both checkpoint unconditionally (the
-    // trigger guarantees ≥2 branches); the row id additionally must not be
-    // recomputed across plan subtrees
-    val ldf = ldf0.localCheckpoint()
-    val rdf0 = r.df.localCheckpoint()
-
-    // Null-pattern histogram per side (one cheap aggregation over the
-    // checkpointed relation): empty slices prune their branches from the
-    // PLAN — on data where OPTIONAL always matched, every cross branch
-    // vanishes and only hash joins remain — and tiny null slices broadcast
-    // in the cross branches that survive.
-    val lCounts = nullPatternCounts(ldf, ln, "")
-    val rCounts0 = nullPatternCounts(rdf0, rn, "")
-
-    // Measured-size gate (r6, ADVICE): the trigger is structural, but the
-    // rewrite's fixed costs only pay off above a measured ~10k-rows/side
-    // crossover (tools/CompatUnionProbe — at 5k/side theta wins 1.6 s vs
-    // 3.3 s, at 20k/side the union wins 10×). The histograms give the
-    // totals for free; both sides small → run the theta join ON THE
-    // CHECKPOINTED inputs, so the one materialisation is reused, not wasted.
-    val lTotal = if (ln.isEmpty) ldf.count() else lCounts.values.sum
-    val rTotal = if (rn.isEmpty) rdf0.count() else rCounts0.values.sum
-    if (lTotal <= Rewriter.CompatUnionMinRows && rTotal <= Rewriter.CompatUnionMinRows)
-      return thetaCompatJoin(l, r, joinType, filter, shared, rOnly, outVars,
-        outTiny, Nil, ldf.drop(rowId), rdf0,
-        broadcastRight = r.tiny || rTotal <= Rewriter.CrossBroadcastRows)
-
-    val rdf = rdf0.select(r.vars.map(v => col(v).as("__r_" + v)): _*)
-    val rCounts = rCounts0
-    def sliceRows(counts: Map[Set[String], Long], vs: Seq[String], nulls: Set[String]): Long =
-      if (vs.isEmpty) Long.MaxValue else counts.getOrElse(nulls, 0L)
-    val filterCond = filter.map { f =>
-      val env: ExprCompiler.Env = name =>
-        if (shared.contains(name)) coalesce(col(name), col("__r_" + name))
-        else if (l.vars.contains(name)) col(name)
-        else if (r.vars.contains(name)) col("__r_" + name)
-        else TermCols.nullTerm
-      ExprCompiler.ebv(f, env)
-    }
-    val branches = for {
-      aNull <- subsets(ln)
-      bNull <- subsets(rn)
-      lRows = sliceRows(lCounts, ln, aNull)
-      rRows = sliceRows(rCounts, rn, bNull)
-      if lRows > 0 && rRows > 0
-    } yield {
-      val lslice = ln.foldLeft(ldf)((d, v) =>
-        d.filter(if (aNull(v)) col(v).isNull else col(v).isNotNull))
-      val rslice0 = rn.foldLeft(rdf)((d, v) =>
-        d.filter(if (bNull(v)) col("__r_" + v).isNull else col("__r_" + v).isNotNull))
-      val rslice = if (r.tiny) broadcast(rslice0) else rslice0
-      val keys = shared.filterNot(v => aNull(v) || bNull(v))
-      if (keys.nonEmpty) {
-        val cond = (keys.map(k => col(k) === col("__r_" + k)) ++ filterCond).reduce(_ && _)
-        lslice.join(Rewriter.shuffleHashUnlessSmall(rslice), cond, "inner")
-      } else {
-        // every shared var null on one side → all rows compatible; the cross
-        // is the operator's actual output for these slices. Broadcast the
-        // (measured) smaller slice when it fits.
-        val j =
-          if (rRows <= lRows && rRows <= Rewriter.CrossBroadcastRows)
-            lslice.crossJoin(broadcast(rslice0))
-          else if (lRows < rRows && lRows <= Rewriter.CrossBroadcastRows)
-            broadcast(lslice).crossJoin(rslice)
-          else lslice.crossJoin(rslice)
-        filterCond.map(j.filter).getOrElse(j)
+    val ldf = Deferred(
+      if (left) l.df.withColumn(rowId, monotonically_increasing_id()) else l.df, "compat-left")
+    val rdf = Deferred(r.df, "compat-right").select(r.vars.map(v => col(v).as("__r_" + v)): _*)
+    val cond = compatFilter(l, r, shared, filter)
+    // A key-less pair crosses its slices. A slice of unmatched OPTIONAL rows
+    // (NULL on some shared var) first goes through a rebalance stage, so
+    // adaptive execution sees its real size: an empty one drops the pair and
+    // a small one is broadcast, instead of a cartesian over every partition
+    // pair of the two sides.
+    def staged(df: DataFrame, nulls: Boolean): DataFrame = if (nulls) df.hint("rebalance") else df
+    val inner = slicePairs(ldf, rdf, shared, l, r).map { p =>
+      p.keys match {
+        case Some(k) =>
+          val rslice = if (r.tiny) broadcast(p.r) else Rewriter.shuffleHashUnlessSmall(p.r)
+          p.l.join(rslice, (k +: cond.toSeq).reduce(_ && _))
+        case None =>
+          val j = staged(p.l, p.lNull).crossJoin(if (r.tiny) broadcast(p.r) else staged(p.r, p.rNull))
+          cond.map(j.filter).getOrElse(j)
       }
-    }
-    val inner = branches.reduceOption(_ unionAll _)
-      .getOrElse(ldf.limit(0).crossJoin(rdf.limit(0)))
-    val out = outVars.map { v =>
-      if (shared.contains(v)) coalesce(col(v), col("__r_" + v)).as(v)
-      else if (l.vars.contains(v)) col(v)
-      else col("__r_" + v).as(v)
-    }
-    val muShared = shared.filter(v =>
-      if (joinType == "left") l.isNullable(v)
-      else l.isNullable(v) && r.isNullable(v)).toSet
-    val mu = (l.maybeUnbound -- shared) ++ muShared ++
-      (if (joinType == "left") rOnly.toSet
-       else r.maybeUnbound.filter(rOnly.contains))
-    if (joinType == "inner")
-      SPlan(inner.select(out: _*), outVars, mu, mergeKinds(l, r), outTiny)
-    else {
+    }.reduce(_ unionAll _)
+    val joined = if (!left) inner else {
       val matched = inner.select(col(rowId)).distinct()
       val unmatched = ldf.join(Rewriter.shuffleHashUnlessSmall(matched), Seq(rowId), "left_anti")
-      val padded = unmatched.select(outVars.map(v =>
-        if (l.vars.contains(v)) col(v) else TermCols.nullTerm.as(v)): _*)
-      SPlan(inner.select(out: _*).unionAll(padded), outVars, mu, mergeKinds(l, r), outTiny)
+      inner.unionAll(unmatched.select(
+        ldf.columns.map(col) ++ r.vars.map(v => TermCols.nullTerm.as("__r_" + v)): _*))
     }
+    compatOutput(l, r, joinType, shared, rOnly, outVars, outTiny, joined)
   }
 
   /** MINUS (reference lib/logical/src/minus/rewrite.rs:51-136): anti join on
@@ -730,50 +559,24 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
           Rewriter.shuffleHashUnlessSmall(r.df.select(shared.map(col): _*)),
           shared, "left_anti"),
         l.vars, l.maybeUnbound, l.kinds, l.tiny)
-    // Null-pattern union rewrite (same machinery as compatUnionJoin, anti
-    // flavour): ANY nullable shared var makes the condition below pure
-    // theta, which Spark plans as a BroadcastNestedLoopJoin. Split both
-    // sides by which nullable shared vars are null; a (leftPattern,
-    // rightPattern) pair can only drop left rows when some var is bound on
-    // BOTH sides (the ≥1-bound-both rule) — exactly the pairs that
-    // equi-join on those vars. Dropped = union of per-branch semi-join row
-    // ids; result = left anti that id set (hash joins throughout).
-    if (compatUnion && !(l.tiny && r.tiny) &&
-        shared.count(l.isNullable) + shared.count(r.isNullable)
-          <= Rewriter.CompatUnionMaxBranchBits) {
-      val ln = shared.filter(l.isNullable)
-      val rn = shared.filter(r.isNullable)
+    // Null-pattern union rewrite (anti flavour of compatUnionJoin): ANY
+    // nullable shared var makes the condition below pure theta, which Spark
+    // plans as a BroadcastNestedLoopJoin. A slice pair can only drop left
+    // rows when some var is bound on BOTH sides (the ≥1-bound-both rule) —
+    // exactly the pairs that equi-join on those vars. Dropped = union of
+    // per-pair semi-join row ids; result = left anti that id set (hash joins
+    // throughout). Both sides are pinned: read once per pair, stable ids.
+    if (unionRewrite(l, r, shared)) {
       val rowId = fresh("mrow")
-      val ldf = l.df.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
-      // scanned once per branch pair → checkpoint unconditionally
-      val rdf = r.df.select(shared.map(v => col(v).as("__r_" + v)): _*).localCheckpoint()
-      // empty slices prune their branches (same histogram as compatUnionJoin)
-      val lCounts = nullPatternCounts(ldf, ln, "")
-      val rCounts = nullPatternCounts(rdf, rn, "__r_")
-      def rows(counts: Map[Set[String], Long], vs: Seq[String], nulls: Set[String]): Long =
-        if (vs.isEmpty) Long.MaxValue else counts.getOrElse(nulls, 0L)
-      val matchedPerBranch = for {
-        aNull <- subsets(ln)
-        bNull <- subsets(rn)
-        keys = shared.filterNot(v => aNull(v) || bNull(v))
-        if keys.nonEmpty // keys empty → anyBoth false → branch drops nothing
-        if rows(lCounts, ln, aNull) > 0 && rows(rCounts, rn, bNull) > 0
-      } yield {
-        val lslice = ln.foldLeft(ldf)((d, v) =>
-          d.filter(if (aNull(v)) col(v).isNull else col(v).isNotNull))
-        val rslice = rn.foldLeft(rdf)((d, v) =>
-          d.filter(if (bNull(v)) col("__r_" + v).isNull else col("__r_" + v).isNotNull))
-        val cond = keys.map(k => col(k) === col("__r_" + k)).reduce(_ && _)
-        lslice.join(Rewriter.shuffleHashUnlessSmall(rslice), cond, "left_semi")
-          .select(col(rowId))
-      }
-      val out = matchedPerBranch.reduceOption(_ unionAll _) match {
-        case Some(matched) =>
-          ldf.join(Rewriter.shuffleHashUnlessSmall(matched.distinct()),
-            Seq(rowId), "left_anti").drop(rowId)
-        case None => l.df
-      }
-      return SPlan(out, l.vars, l.maybeUnbound, l.kinds, l.tiny)
+      val ldf = Deferred(l.df.withColumn(rowId, monotonically_increasing_id()), "minus-left")
+      val rdf = Deferred(r.df.select(shared.map(v => col(v).as("__r_" + v)): _*), "minus-right")
+      val matched = slicePairs(ldf, rdf, shared, l, r).collect {
+        case Rewriter.SlicePair(lslice, _, rslice, _, Some(k)) =>
+          lslice.join(Rewriter.shuffleHashUnlessSmall(rslice), k, "left_semi").select(col(rowId))
+      }.reduce(_ unionAll _)
+      return SPlan(ldf.join(Rewriter.shuffleHashUnlessSmall(matched.distinct()),
+          Seq(rowId), "left_anti").drop(rowId),
+        l.vars, l.maybeUnbound, l.kinds, l.tiny)
     }
     val rr = r.df.select(shared.map(v => col(v).as("__r_" + v)): _*)
     val compat = shared.map(v => TermCols.isCompatible(col(v), col("__r_" + v)))
@@ -853,10 +656,10 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
    * into plain joins keyed on the synthetic id (hash-join friendly).
    */
   private def withRowId(in: SPlan, lid: String): SPlan =
-    // localCheckpoint: the id column must be stable across the multiple
-    // branches that reference it (monotonically_increasing_id is
-    // deterministic only for a fixed partition layout)
-    SPlan(in.df.withColumn(lid, monotonically_increasing_id()).localCheckpoint(),
+    // pinned: the id column must be stable across the multiple branches
+    // that reference it (monotonically_increasing_id is deterministic only
+    // for a fixed partition layout)
+    SPlan(Deferred(in.df.withColumn(lid, monotonically_increasing_id()), "row-id"),
       in.vars :+ lid, in.maybeUnbound, in.kinds)
 
   private def lateral(l: SPlan, rp: GraphPattern, scope: GraphScope): SPlan = {
@@ -1142,47 +945,23 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
           in.vars, in.maybeUnbound, in.kinds)
       // Null-pattern union rewrite (semi/anti flavour of compatUnionJoin):
       // nullable shared vars make the condition below pure isCompatible —
-      // a BroadcastNestedLoopJoin. Branch pairs equi-join on the vars bound
+      // a BroadcastNestedLoopJoin. Slice pairs semi-join on the vars bound
       // on both sides; a pair with NO such var is all-compatible, so its
-      // whole left slice matches iff the right slice is non-empty (checked
-      // via the null-pattern histogram — no join at all).
-      if (compatUnion && !(in.tiny && inner.tiny) &&
-          shared.count(in.isNullable) + shared.count(inner.isNullable)
-            <= Rewriter.CompatUnionMaxBranchBits) {
-        val ln = shared.filter(in.isNullable)
-        val rn = shared.filter(inner.isNullable)
+      // whole left slice matches iff the right slice is non-empty (a semi
+      // join against one right row). Both sides are pinned: read once per
+      // pair, stable row ids.
+      if (unionRewrite(in, inner, shared)) {
         val rowId = fresh("erow")
-        val ldf = in.df.withColumn(rowId, monotonically_increasing_id()).localCheckpoint()
-        val rdf = inner.df.select(shared.map(v => col(v).as("__r_" + v)): _*).localCheckpoint()
-        val rCounts = nullPatternCounts(rdf, rn, "__r_")
-        lazy val rTotal = rdf.count()
-        def rRows(bNull: Set[String]): Long =
-          if (rn.isEmpty) rTotal else rCounts.getOrElse(bNull, 0L)
-        val matchedPerBranch = for {
-          aNull <- subsets(ln)
-          bNull <- subsets(rn)
-          if rRows(bNull) > 0
-        } yield {
-          val lslice = ln.foldLeft(ldf)((d, v) =>
-            d.filter(if (aNull(v)) col(v).isNull else col(v).isNotNull))
-          val keys = shared.filterNot(v => aNull(v) || bNull(v))
-          if (keys.isEmpty) lslice.select(col(rowId))
-          else {
-            val rslice = rn.foldLeft(rdf)((d, v) =>
-              d.filter(if (bNull(v)) col("__r_" + v).isNull else col("__r_" + v).isNotNull))
-            val cond = keys.map(k => col(k) === col("__r_" + k)).reduce(_ && _)
-            lslice.join(Rewriter.shuffleHashUnlessSmall(rslice), cond, "left_semi")
-              .select(col(rowId))
-          }
-        }
-        val out = matchedPerBranch.reduceOption(_ unionAll _) match {
-          case Some(matched) =>
-            ldf.join(Rewriter.shuffleHashUnlessSmall(matched.distinct()), Seq(rowId), jt)
-              .drop(rowId)
-          case None => // no compatible right rows at all
-            if (negated) in.df else in.df.limit(0)
-        }
-        return SPlan(out, in.vars, in.maybeUnbound, in.kinds)
+        val ldf = Deferred(in.df.withColumn(rowId, monotonically_increasing_id()), "exists-left")
+        val rdf = Deferred(inner.df.select(shared.map(v => col(v).as("__r_" + v)): _*), "exists-right")
+        val matched = slicePairs(ldf, rdf, shared, in, inner).map {
+          case Rewriter.SlicePair(lslice, _, rslice, _, Some(k)) =>
+            lslice.join(Rewriter.shuffleHashUnlessSmall(rslice), k, "left_semi").select(col(rowId))
+          case Rewriter.SlicePair(lslice, _, rslice, _, None) =>
+            lslice.join(rslice.limit(1), lit(true), "left_semi").select(col(rowId))
+        }.reduce(_ unionAll _)
+        return SPlan(ldf.join(Rewriter.shuffleHashUnlessSmall(matched.distinct()), Seq(rowId), jt)
+          .drop(rowId), in.vars, in.maybeUnbound, in.kinds)
       }
       val rr = inner.df.select(shared.map(v => col(v).as("__r_" + v)): _*)
       val cond = shared.map(v => TermCols.isCompatible(col(v), col("__r_" + v))).reduce(_ && _)
@@ -1757,17 +1536,6 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
 }
 
 object Rewriter {
-  /** Row bound under which a materialised aggregate-rooted cross-join side
-    * broadcasts (~100k term-struct rows ≈ tens of MB serialized). */
-  private[engine] val CrossBroadcastRows: Long = 1L << 17
-
-  /** Measured crossover below which the compat-union rewrite's fixed costs
-    * (checkpoint + 2^bits branch scans) lose to the plain theta join
-    * (tools/CompatUnionProbe: theta wins at 5k rows/side, the union wins
-    * 10× at 20k/side). Both sides at or under this → theta on the
-    * already-checkpointed inputs. */
-  private[engine] val CompatUnionMinRows: Long = 10000L
-
   /** Cap on null-pattern slice pairs in the compat-union join rewrite,
     * expressed as the EXPONENT sum (branches = 2^(|nullable-left| +
     * |nullable-right|)). 4 → ≤16 branches, covering up to two nullable
@@ -1776,6 +1544,12 @@ object Rewriter {
     * deeply-OPTIONAL) shapes. Comparing exponents (not a shift product)
     * cannot overflow on hostile queries with ~63 nullable shared vars. */
   private[engine] val CompatUnionMaxBranchBits: Int = 4
+
+  /** One null-pattern slice pair ([[Rewriter#slicePairs]]): the slices,
+    * whether each is NULL on some shared var, and the equality of the shared
+    * vars bound in both (None: every row pair is compatible). */
+  private final case class SlicePair(l: DataFrame, lNull: Boolean, r: DataFrame, rNull: Boolean,
+                                     keys: Option[Column])
 
   /** Drop all memoised closures, both the broadcast adjacencies and the
     * semi-naive loop's fixpoints (bench honesty: min-of-passes timing must

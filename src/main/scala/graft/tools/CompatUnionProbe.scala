@@ -5,20 +5,21 @@ import graft.engine.Graft
 import graft.model.{Iri, Lit, RdfQuad}
 
 /**
- * Head-to-head: the round-5 compat-union rewrite vs the r4 theta join on the
+ * Head-to-head: the compat-union rewrite vs the theta join on the
  * OPTIONAL-chain shape (two blocks whose only shared variable is
  * OPTIONAL-introduced on both sides). The theta path plans a
  * BroadcastNestedLoopJoin — O(n·m) compat evaluations; the union rewrite
  * hash-joins the bound×bound slice and crosses only the null slices.
  * Run: sbt "runMain graft.tools.CompatUnionProbe [n]"   (n rows per side)
  *
- * Measured on this host (local[32]):
- *   n=5000  → union 3.3 s, theta 1.6 s (25M compat evals are cheap; the
- *             rewrite's fixed costs — checkpoints, histogram, anti —
- *             dominate below ~10k rows/side)
- *   n=20000 → union 4.3 s, theta 44.1 s (10×; the gap grows with n², the
- *             union stays output-linear — at cluster scale the theta plan
- *             simply does not finish)
+ * Measured on a 4-core host (local[32] as below), one run each:
+ *   n=5000  → union 6.6 s, theta 6.6 s (2.5M output rows, almost all from
+ *             the null-slice crosses; the two plans tie)
+ *   n=20000 → union 9.4 s, theta 86.6 s (9×; another run of the same theta
+ *             plan took 59.7 s, the host's run-to-run spread. The gap grows
+ *             with n², the union stays output-linear — at cluster scale the
+ *             theta plan simply does not finish)
+ * Neither size loses to theta, so the engine has no size gate between them.
  */
 object CompatUnionProbe {
   def main(args: Array[String]): Unit = {

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
 import scala.util.Random
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.engine.{Graft, Rewriter}
 import graft.model._
 import graft.sources.{NTriples, Turtle}
@@ -32,22 +29,6 @@ class KleenePlusSpec extends SparkSpec {
 
   /** Far below one edge row: the walk never fits, the loop runs. */
   private def onLoop[T](body: => T): T = withThreshold("100")(body)
-
-  /** (result, Spark jobs started while `body` ran). */
-  private def jobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      ListenerBusAccess.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   /** Random edges over every graph, each graph with a planted cycle and self-loop. */
   private def randomQuads(rnd: Random): Seq[RdfQuad] = {

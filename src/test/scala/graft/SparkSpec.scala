@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -15,6 +18,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def rows(df: DataFrame, cols: String*): Set[Seq[String]] =
     df.select(cols.map(c => org.apache.spark.sql.functions.col(s"$c.v")): _*)
       .collect().map(_.toSeq.map(x => if (x == null) "∅" else x.toString)).toSet
+
+  /** (result, Spark jobs started while `body` ran). */
+  def jobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      ListenerBusAccess.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {
