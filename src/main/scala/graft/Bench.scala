@@ -1,6 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Fixed calibration probe, run once per pass: a trivial spark.range sum
+    * whose cost is code-independent, in seconds. Its min across passes is a
+    * host-speed fingerprint — later rounds divide by it to separate host
+    * drift from code regression without a snapshot A/B (r6 lost ~half a
+    * round's perf signal to an unexplained host-wide ~2x multiplier). */
+  def calibrate(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(200000000L).selectExpr("sum(id * 3 + 1)").collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -54,9 +65,9 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] windfarm prebuild: $e") }
     System.err.println(f"[bench] windfarm store prebuild: ${(System.nanoTime() - tBuild) / 1e9}%.1f s (untimed)")
     // Three INTERLEAVED full passes over the suite, min per query — not
-    // back-to-back per-query samples. Rationale (measured, r6 A/B probe
-    // tools/AbBench.scala): host-level load spikes on this shared VM last
-    // seconds-to-minutes, so two back-to-back samples of one query are
+    // back-to-back per-query samples. Rationale (measured by the r6 A/B
+    // probe AbBench, deleted: see CHANGES.md): host-level load spikes on
+    // this shared VM last seconds-to-minutes, so two back-to-back samples of one query are
     // CORRELATED and min-of-2 does not remove the spike (the r5-reported
     // "2.6-4.4x regression" on 9 queries reproduced at steady state as
     // 1.0x — pure noise). Interleaving decorrelates: a spike inflates one
@@ -67,28 +78,15 @@ object Bench {
     val only: Option[Set[String]] = args.headOption.map(_.split(",").toSet)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Fixed calibration probe per pass: a trivial spark.range sum whose cost
-    // is code-independent. Its min across passes is a host-speed fingerprint
-    // — future rounds (and the judge) divide by it to separate host drift
-    // from code regression without needing a snapshot A/B (r6 lost ~half a
-    // round's perf signal to an unexplained host-wide ~2x multiplier).
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 + 1)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
     val calibrations = scala.collection.mutable.ArrayBuffer[Double]()
     // Honesty fix (r9 verdict item 6): graft-level build-once artifacts
     // (memoised transitive closures, LSH/IVF/MinHash-signature indexes) are
     // wiped before EVERY timed pass, so passes 2-3 rebuild them and the
     // min-of-passes time reflects cold-artifact cost instead of a warm-index
     // lookup for sparql_path_closure/path_seeded/ann_*/dedup_minhash.
-    // -Dgraft.bench.keepCaches=true restores the old behaviour for local
-    // iteration only (never set by the driver).
-    val keepCaches = sys.props.get("graft.bench.keepCaches").contains("true")
     val passes = (1 to 3).map { _ =>
-      if (!keepCaches) graft.ops.IndexCache.clearAll()
-      calibrations += calibrate()
+      graft.ops.IndexCache.clearAll()
+      calibrations += calibrate(spark)
       sorted.map { case (name, fn) =>
         val t0 = System.nanoTime()
         // noop sink consumes every row + column (count() would let Catalyst

@@ -44,6 +44,11 @@ final class QuadStore private (val quads: DataFrame,
     query(sparql).queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString(mode))
 
+  /** Build, plan and run a query once, and report where its time and Spark
+    * work went (see [[graft.obs.QueryProfile]]). */
+  def profile(sparql: String): graft.obs.QueryProfile =
+    graft.obs.QueryProfile.of(spark)(query(sparql))
+
   /**
    * Programmatic pattern scan (reference Store::quads_for_pattern,
    * store.rs:272-307): None = wildcard. Field-level predicates keep parquet

@@ -1085,12 +1085,6 @@ object SparkEntry {
     * Values are portable-deterministic (see WindFarmGen), which is what
     * makes the DuckDB oracles below possible. */
   @transient private var wfCache: (SparkSession, DataFrame) = null
-  /** Static kinds the generator vouches for: timestamps are uniformly
-    * xsd:dateTime in the fixed lexical shape (kind 4), so date-part
-    * accessors and range comparisons compile without the datatype CASE
-    * ladder. hasValue stays dynamic — operating-series values are booleans. */
-  private val WfKinds = graft.engine.StarSource.kindsOnly(
-    Map("https://github.com/magbak/chrontext#hasTimestamp" -> 4))
   private def wfGraft(s: SparkSession): Graft = synchronized {
     if (wfCache == null || (wfCache._1 ne s)) {
       val path = java.nio.file.Files.createTempDirectory("graft_wf").toString
@@ -1099,7 +1093,7 @@ object SparkEntry {
       QuadStore(graft.gen.WindFarmGen.quads(s, 16)).saveByPredicate(path)
       wfCache = (s, QuadStore.load(s, path).quads)
     }
-    Graft(wfCache._2, WfKinds)
+    Graft(wfCache._2, graft.gen.WindFarmGen.kinds)
   }
 
   /** Wind Farm production-query2 (bench/tests/query_results/queries/
@@ -1186,9 +1180,8 @@ object SparkEntry {
     // partition (measured: 32 partitions → 800 ms addBatch per ~100-row
     // batch; 4 → 195 ms). Size it from the staged input instead of the
     // session's core-count constant: one state partition per 16 MB of input,
-    // capped at the cluster's default parallelism, floor 1
-    // (-Dgraft.stream.statePartitions overrides).
-    val stateParts = sys.props.get("graft.stream.statePartitions").map(_.toInt).getOrElse {
+    // capped at the cluster's default parallelism, floor 1.
+    val stateParts = {
       val bytes = Option(new java.io.File(stage).listFiles())
         .map(_.filterNot(_.getName.startsWith(".")).map(_.length()).sum).getOrElse(0L)
       math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,

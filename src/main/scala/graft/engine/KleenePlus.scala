@@ -323,7 +323,7 @@ object KleenePlus {
     * for any key to qualify (gate/local scale pays zero extra jobs). A hub
     * key amplifies the closure step join's OUTPUT (frontier-in × edges-out
     * pairs in one task), which AQE's input-size-based skew splitting can
-    * never see (measured: tools/SkewProbe); the converse case — a hub with
+    * never see (measured: SkewProbe, deleted: see CHANGES.md); the converse case — a hub with
     * only IN-degree — is plain input skew on the delta side, which AQE does
     * split. */
   private def heavyKeys(rel: DataFrame, relCount: Long): Option[DataFrame] = {
@@ -452,11 +452,6 @@ object KleenePlus {
     }
   }
 
-  /** stderr per-round timing, local profiling only (-Dgraft.closure.debug=true). */
-  private def dbg(label: => String, t0: Long): Unit =
-    if (sys.props.get("graft.closure.debug").contains("true"))
-      System.err.println(f"[closure] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-
   /** Semi-naive transitive closure — the scale path of [[KleenePlusExec]],
     * taken when the distinct edges exceed the byte budget. A loop of
     * distributed DataFrame joins that runs its jobs from the driver while the
@@ -464,9 +459,7 @@ object KleenePlus {
     * closures double path length per round, seeded walks extend one hop per
     * round, and localCheckpoint cuts each round's lineage so plans stay flat. */
   private[engine] def closureCompute(edges0: DataFrame, seeds: Option[DataFrame]): DataFrame = {
-    val tE = System.nanoTime()
     val edges = edges0.dropDuplicates().localCheckpoint()
-    dbg("edges materialize", tE)
     // The iteration below shuffles its working relation every round; on RDF
     // terms that is three 5-field structs per row. (graph, node) pairs are
     // dictionary-encoded to ONE long up front (ids are per-graph, so the
@@ -474,7 +467,6 @@ object KleenePlus {
     // back to terms once at the end: O(|edges| + |closure|) encode/decode
     // replaces O(rounds × |closure|) struct-wide shuffles (fewer bytes,
     // narrower types).
-    val tD = System.nanoTime()
     val dict0 = edges.select(col("g"), col("src").as("n"))
       .unionAll(edges.select(col("g"), col("tgt").as("n")))
       .dropDuplicates()
@@ -495,7 +487,6 @@ object KleenePlus {
       .join(tDict, (col("g") <=> col("__tg")) && col("tgt") === col("__tn"))
       .select(col("__sid").as("s"), col("__tid").as("t"))
       .localCheckpoint()
-    dbg("dict encode", tD)
     def decode(pairs: DataFrame): DataFrame = pairs
       .join(sDict, col("s") === col("__sid"))
       .join(tDict, col("t") === col("__tid"))
@@ -519,8 +510,7 @@ object KleenePlus {
     // of the doubling loop and every round of a small seeded walk hit this.
     // (the frontier rows are two or three longs, so this row gate is a byte
     // gate: 250k rows ≈ 8 MB)
-    val tailRows = sys.props.get("graft.closure.tailBroadcastRows")
-      .map(_.toLong).getOrElse(250000L)
+    val tailRows = 250000L
     def subtractBcast(next: DataFrame, all: DataFrame): DataFrame = {
       val known = all.join(
           broadcast(next.select(col("s").as("__ns"), col("t").as("__nt"))),
@@ -552,14 +542,12 @@ object KleenePlus {
         // seeded walk: the frontier only ever holds nodes reachable from the
         // seeds — rounds are linear in path depth but each round touches
         // O(frontier) data, not the whole graph
-        val tS = System.nanoTime()
         val s = sd.select(col("g").as("sg"), col("n"))
         val seedL = s.join(sDict,
             (col("sg") <=> col("__sg")) && col("n") === col("__sn"))
           .select(col("__sid").as("sn")).localCheckpoint()
         var all = eL.join(seedL.hint("shuffle_hash"), col("s") === col("sn"), "left_semi")
           .localCheckpoint()
-        dbg("seed frontier", tS)
         // dense seed set: the walk would touch most of the graph anyway, and
         // linear rounds pay fixed job overhead per hop — log-round full
         // doubling restricted back to the seeds is strictly fewer rounds
@@ -583,7 +571,6 @@ object KleenePlus {
         // composed onto the reach so far (log(diameter) further rounds)
         val maxLinear = 16
         while (deltaCnt > 0 && rounds < maxLinear) {
-          val tR = System.nanoTime()
           rounds += 1
           delta = round(delta, deltaCnt, eL, all, eHeavy)
           deltaCnt = delta.count()
@@ -592,7 +579,6 @@ object KleenePlus {
           // re-persisting the whole accumulated set each round (the old
           // checkpoint-of-union rewrote O(|closure|) blocks per round)
           if (deltaCnt > 0) all = all.unionAll(delta)
-          dbg(s"seeded round $rounds += $deltaCnt", tR)
         }
         if (deltaCnt == 0) decode(all).localCheckpoint()
         else {
@@ -624,27 +610,19 @@ object KleenePlus {
         // anti join protects already-stored, strictly smaller values).
         // Termination is new-empty: if any pair beyond 2^k existed, its
         // 2^k-prefix would be an exact-2^k pair in the current delta.
-        val tC = System.nanoTime()
         var size = eL.count()
-        dbg(s"initial count=$size", tC)
         // hub keys come from the BASE edges, detected once: re-detecting on
         // the evolving reachability relation costs O(|all|) extra per round
         // (measured 2× on a 16M-pair closure) for marginal coverage — the
         // base hub is the amplification epicenter; a node whose CLOSURE
         // degree alone is huge spreads its output across its many distinct
         // frontier rows, which is ordinary input skew AQE does split
-        lazy val eHeavy = {
-          val tH = System.nanoTime()
-          val h = heavyIds(eL, size)
-          dbg("heavyKeys", tH)
-          h
-        }
+        lazy val eHeavy = heavyIds(eL, size)
         var all = eL.withColumn("d", lit(1L))
         var delta = all
         var deltaCnt = size
         var span = 1L
         while (deltaCnt > 0) {
-          val tR = System.nanoTime()
           val tail = deltaCnt <= tailRows
           val ex = delta.filter(col("d") === lit(span))
           val composed = stepJoinD(ex, all, if (tail) None else eHeavy,
@@ -659,7 +637,6 @@ object KleenePlus {
           // checkpoint-of-union rewrote O(|closure|) blocks per round)
           if (deltaCnt > 0) all = all.unionAll(delta)
           span *= 2
-          dbg(s"doubling round += $deltaCnt", tR)
         }
         decode(all).localCheckpoint()
     }

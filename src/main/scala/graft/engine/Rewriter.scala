@@ -1588,30 +1588,22 @@ object Rewriter {
     *
     * Estimates only ever OVER-state for these shapes (filters keep the
     * child's size when CBO can't refine), so a positive answer is safe at
-    * any data scale; the threshold itself is the session's
-    * `spark.sql.autoBroadcastJoinThreshold`, i.e. cluster-configurable,
-    * not a local[32] constant. */
+    * any data scale; the threshold is [[StatSmallBytes]]. */
   private[engine] def statSmall(df: DataFrame): Boolean = {
-    // Deliberately LOWER than spark.sql.autoBroadcastJoinThreshold: these
-    // are columnar-compressed quad bytes, so 8 MB of parquet is ~2.4M term
-    // rows — a hash relation that costs more to build + broadcast than the
-    // shuffle it saves, and a broadcast chain keeps the streamed side's
-    // (tiny) partitioning, so over-eager broadcasting collapses
-    // parallelism (measured: wind-farm 5.9 s → 11.4 s with the 10 MB
-    // threshold; metadata-only broadcasting is the win). 1 MB ≈ ≤300k
-    // rows ≈ bounded-vocabulary metadata predicates. Conf-tunable for
-    // other storage profiles.
-    val conf = df.sparkSession.conf.getOption("graft.bgp.broadcastBytes")
-      .orElse(sys.props.get("graft.bgp.broadcastBytes")).getOrElse("1m")
-    val threshold =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
-      catch { case _: Throwable => 1L << 20 }
-    threshold > 0 && {
-      val plan = df.queryExecution.optimizedPlan
-      val size = prunedScanSize(plan).getOrElse(plan.stats.sizeInBytes)
-      size >= 0 && size <= threshold
-    }
+    val plan = df.queryExecution.optimizedPlan
+    val size = prunedScanSize(plan).getOrElse(plan.stats.sizeInBytes)
+    size >= 0 && size <= StatSmallBytes
   }
+
+  // Deliberately LOWER than spark.sql.autoBroadcastJoinThreshold: these
+  // are columnar-compressed quad bytes, so 8 MB of parquet is ~2.4M term
+  // rows — a hash relation that costs more to build + broadcast than the
+  // shuffle it saves, and a broadcast chain keeps the streamed side's
+  // (tiny) partitioning, so over-eager broadcasting collapses
+  // parallelism (measured: wind-farm 5.9 s → 11.4 s with the 10 MB
+  // threshold; metadata-only broadcasting is the win). 1 MB ≈ ≤300k
+  // rows ≈ bounded-vocabulary metadata predicates.
+  private val StatSmallBytes = 1L << 20
 
   /** See [[graft.ops.Joins.shuffleHashUnlessSmall]] — shared policy. */
   private[engine] def shuffleHashUnlessSmall(df: DataFrame): DataFrame =

@@ -277,9 +277,9 @@ private[graft] object UpdateExec {
     * anti/semi joins — without the checkpoint the solve re-runs per
     * reference) and measure it. A template side holds at most
     * solutions × templates quads, so when that bound is under
-    * `graft.update.broadcastRows` (default 1M rows, a few hundred MB of
-    * term structs) the caller pins the side as the broadcast build side and
-    * the store side of the anti/semi joins never shuffles. Larger sides
+    * [[BroadcastRows]] (1M rows, a few hundred MB of term structs) the
+    * caller pins the side as the broadcast build side and the store side of
+    * the anti/semi joins never shuffles. Larger sides
     * fall back to the planner — at that size a shuffle join is the correct
     * plan and a pinned broadcast would OOM the driver. One eager
     * solution-sized job per op, shared by both sides. */
@@ -300,9 +300,10 @@ private[graft] object UpdateExec {
     // anti/semi joins exactly as before.
     val m = plan.df.localCheckpoint()
     val bound = m.count() * math.max(nTemplates, 1)
-    (plan.copy(df = m), bound <= sys.props.get("graft.update.broadcastRows")
-      .map(_.toLong).getOrElse(1000000L))
+    (plan.copy(df = m), bound <= BroadcastRows)
   }
+
+  private val BroadcastRows = 1000000L
 
   /** Evaluate an update WHERE clause. Dataset rules (spec §3.1.3): USING
     * clauses act like FROM/FROM NAMED; otherwise WITH sets the default

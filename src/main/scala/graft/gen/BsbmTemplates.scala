@@ -1,16 +1,16 @@
-package graft
+package graft.gen
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.util.regex.Matcher
 import scala.jdk.CollectionConverters._
-import graft.gen.BsbmGen
 
 /**
  * The BSBM query and update templates the benchmark runs
  * (`perfbench/templates/{explore,bi,path,update}`, the BSBM Explore and BI
- * texts adapted to `BsbmGen`'s IRIs), read in place so the tests and the
- * benchmark share one copy. Each `%Name%` placeholder is filled from one
+ * texts adapted to `BsbmGen`'s IRIs), read in place so the tests, the
+ * benchmark and `tools.ParityBench` share one copy. Paths are relative to
+ * the repository root. Each `%Name%` placeholder is filled from one
  * fixed map of instances `BsbmGen` guarantees at 1000 products (see its
  * docstring), chosen so every Explore and BI query selects rows.
  */
@@ -25,6 +25,10 @@ object BsbmTemplates {
   /** The template files of one group (`explore`, `bi`, `path`, `update`), by name. */
   def files(group: String): Seq[Path] =
     Files.list(dir.resolve(group)).iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+
+  /** A template's query name: `explore/q02.rq` is `explore-q2`. */
+  def name(file: Path): String =
+    s"${file.getParent.getFileName}-q" + file.getFileName.toString.stripPrefix("q").stripSuffix(".rq").toInt
 
   private def inst(local: String) = s"<${BsbmGen.Inst}$local>"
 

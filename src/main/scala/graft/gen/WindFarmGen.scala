@@ -234,4 +234,11 @@ object WindFarmGen {
   /** The full dataset: static + time series. */
   def quads(spark: SparkSession, n: Int): DataFrame =
     staticQuads(spark, n).unionAll(timeSeriesQuads(spark, n))
+
+  /** Static kinds the generator vouches for: timestamps are uniformly
+    * xsd:dateTime in the fixed lexical shape (kind 4), so date-part
+    * accessors and range comparisons compile without the datatype CASE
+    * ladder. hasValue stays dynamic — operating-series values are booleans. */
+  val kinds: graft.engine.StarSource =
+    graft.engine.StarSource.kindsOnly(Map(Ct + "hasTimestamp" -> 4))
 }

@@ -286,7 +286,8 @@ object Dedup {
   /** Hot band buckets (≥ [[SkewSalt.hotThreshold]] members) are salted by
     * default — lossless, spreads a hot bucket's k² pair enumeration across
     * [[SkewSalt.salts]] tasks (AQE cannot: it sees shuffle-INPUT size, and
-    * this is OUTPUT amplification — measured, tools/SkewProbe).
+    * this is OUTPUT amplification — measured by SkewProbe, deleted: see
+    * CHANGES.md).
     * `maxBucketSize` remains an optional hard cap on top: buckets above it
     * are dropped entirely (lossy) — a bucket that degenerate means
     * thousands of near-identical docs, which exact dedup ([[exact]])
@@ -364,7 +365,8 @@ object Dedup {
    *    mean bucket occupancy ~0 at tens of millions of docs. (The 4×15-bit
    *    single-chunk keys saturate there: at 2M docs mean occupancy hit
    *    ~250 and verification went superlinear — 216 s vs 33.9 s,
-   *    tools/SimhashScaleProbe.) Below 400k docs the cheaper 4-chunk keys
+   *    SimhashScaleProbe, deleted: see CHANGES.md.) Below 400k docs the
+   *    cheaper 4-chunk keys
    *    win (also lossless for dist ≤ 3) — size crossover measured,
    *    overridable via -Dgraft.simhash.mankuMinRows.
    *  - maxDist > 3: exact pigeonhole would need maxDist+1 blocks of < 4
@@ -380,7 +382,8 @@ object Dedup {
     // materialised: chunked feeds both sides of the chunk self-join
     val sh = simhash(df, idCol, textCol).localCheckpoint()
     val shN = sh.count() // narrow count of the fresh checkpoint (salt gate)
-    // Scheme crossover (measured, tools/SimhashScaleProbe): the 20-table
+    // Scheme crossover (measured by SimhashScaleProbe, deleted: see
+    // CHANGES.md): the 20-table
     // explode costs ~2× at 200k docs (10.9 s vs 5.6 s) but the single-chunk
     // scheme saturates and goes superlinear above that (216 s vs 33.9 s at
     // 2M, identical pair counts). Both are LOSSLESS for maxDist ≤ 3, so the

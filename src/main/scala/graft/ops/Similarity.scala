@@ -383,7 +383,8 @@ object Similarity {
     // candidate cosine: ONE zip_with/aggregate traversal over precomputed
     // norms — numerically identical to cosine(vr, qraw) (same left-to-right
     // summation order, norm is the same sqrt(dot) evaluated at build time).
-    // zip_with beats an element_at-unrolled dot ~2× here (BatchAnnDiag),
+    // zip_with beats an element_at-unrolled dot ~2× here (BatchAnnDiag,
+    // deleted: see CHANGES.md),
     // and skipping the two norm re-derivations another ~2×.
     def candCos = dot(col("vr"), col("__qraw")) / (col("nrm") * col("__qnrm"))
     val ranked = qc.withColumn("__crank",
@@ -396,7 +397,7 @@ object Similarity {
     // and streams the probes — exactly backwards at scale (a 100 TB corpus
     // can never broadcast) and ~8× slower per candidate even locally: dots
     // then run against hash-relation row copies instead of inside the
-    // corpus scan stage (measured by tools/BatchAnnDiag).
+    // corpus scan stage (measured by BatchAnnDiag, deleted: see CHANGES.md).
     val bounds = broadcast(probe1).join(indexed, Seq("cluster"))
       .filter(col(idCol) =!= col("__qid"))
       .select(col("__qid"), candCos.as("__c"))

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
  * k·(k−1)/2 candidate rows out of only k input rows — and they are all
  * produced by ONE shuffle task, because a join key maps to one partition.
  * AQE's skew-join splitting cannot help: it detects shuffle-INPUT partition
- * size, and a hot bucket's input is tiny (measured: tools/SkewProbe — the
+ * size, and a hot bucket's input is tiny (measured by SkewProbe, deleted:
+ * see CHANGES.md — the
  * sanity input-skew case splits, the bucket cases never do).
  *
  * The fix is classic salting, applied only to buckets whose size crosses
@@ -110,7 +111,8 @@ object SkewSalt {
     // r5 snapshot): 1.3-1.6x on each dedup gate — one extra hot-set
     // detection job + the salt-widened shuffle key. The premium buys the
     // degenerate case: a single hot bucket's k^2 enumeration drops 5.4 s →
-    // 0.5 s at gate scale (tools/SkewProbe) and is the difference between
+    // 0.5 s at gate scale (SkewProbe, deleted: see CHANGES.md) and is the
+    // difference between
     // one task OOM-ing and 16 tasks finishing at corpus scale. A
     // localCheckpoint of `banded` here was tried and reverted: no measured
     // win (signature relations are already cached upstream) and it pins an
@@ -118,7 +120,8 @@ object SkewSalt {
     val counts = banded.groupBy(bucketCols.map(col): _*)
       .agg(count(lit(1)).as("__bn"))
     val sizes = counts.where(col("__bn") >= hotThreshold)
-    // Skew-adaptive short-circuit (r7, measured by tools/SaltCrossoverProbe):
+    // Skew-adaptive short-circuit (r7, measured by SaltCrossoverProbe,
+    // deleted: see CHANGES.md):
     // on non-degenerate corpora NO bucket reaches the threshold, yet the
     // hot-set left-join + salt-widened shuffle keys still taxed the
     // self-join ~1.3-1.65x AT EVERY SIZE. When detection finds zero hot

@@ -1,11 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import graft.QuadStore
+import graft.encoding.TermCols
 
 /**
- * UPDATE at scale (verdict r7 #7): a DELETE-INSERT-WHERE over the 20M-quad
- * ScaleProbe store, with PLAN assertions, not just timings:
+ * UPDATE at scale (verdict r7 #7): a DELETE-INSERT-WHERE over a 20M-quad
+ * synthetic store, with PLAN assertions, not just timings:
  *   (a) the insert path stays scan-only — the set-semantics dedup is a
  *       broadcast semi-join against the result-sized additions, never a
  *       SortMergeJoin that shuffles the whole store;
@@ -17,6 +19,23 @@ import graft.QuadStore
  * (default 4,000,000 -> 20M quads).
  */
 object UpdateScaleProbe {
+  private val EX = "urn:sp:"
+
+  /** n people with name/age/city/score and a follows edge chain, built from
+    * `spark.range` (no file IO): 5n quads. */
+  private def syntheticQuads(spark: SparkSession, n: Long): DataFrame = {
+    val ids = spark.range(n)
+    def subj = TermCols.iri(concat(lit(EX + "p"), col("id")))
+    def quad(p: String, o: org.apache.spark.sql.Column) =
+      ids.select(TermCols.nullTerm.as("graph"), subj.as("subject"),
+        TermCols.iri(EX + p).as("predicate"), o.as("object"))
+    quad("name", TermCols.str(concat(lit("person-"), col("id"))))
+      .unionAll(quad("age", TermCols.fromLong(col("id") % 90 + 10)))
+      .unionAll(quad("city", TermCols.iri(concat(lit(EX + "city"), col("id") % 1000))))
+      .unionAll(quad("follows", TermCols.iri(concat(lit(EX + "p"), (col("id") + 1) % n))))
+      .unionAll(quad("score", TermCols.fromDouble((col("id") % 10000).cast("double") / 100.0)))
+  }
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(4000000L)
     val spark = SparkSession.builder().master("local[32]")
@@ -25,9 +44,8 @@ object UpdateScaleProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val EX = "urn:sp:"
 
-    val quads = ScaleProbe.syntheticQuads(spark, n).localCheckpoint()
+    val quads = syntheticQuads(spark, n).localCheckpoint()
     val store = QuadStore(quads)
     var t0 = System.nanoTime()
     val total = quads.count()

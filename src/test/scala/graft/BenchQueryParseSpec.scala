@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.gen.WindFarmQueries
+import graft.gen.{BsbmTemplates, WindFarmQueries}
 import graft.sparql.SparqlParser
 
 /** Parses every benchmark query text the repository holds — the BSBM Explore,

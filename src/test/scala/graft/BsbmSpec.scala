@@ -1,7 +1,7 @@
 package graft
 
 import graft.engine.Graft
-import graft.gen.BsbmGen
+import graft.gen.{BsbmGen, BsbmTemplates}
 
 /**
  * Executes every BSBM Explore + Business Intelligence query the reference
@@ -43,7 +43,7 @@ class BsbmSpec extends SparkSpec {
     * productPropertyTextual4, so two of Q2's three OPTIONALs bind. */
   private val texts: Map[String, String] = Seq("explore", "bi").flatMap { g =>
     BsbmTemplates.files(g).flatMap { f =>
-      val name = s"$g-q" + f.getFileName.toString.stripPrefix("q").stripSuffix(".rq").toInt
+      val name = BsbmTemplates.name(f)
       (name -> BsbmTemplates.fill(f)) +: (if (name != "explore-q2") Nil else Seq(
         "explore-q2-non-empty-optional" ->
           BsbmTemplates.fill(f, Map("Product" -> s"<${BsbmGen.Inst}dataFromProducer6/Product272>"))))

@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.SparkException
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine.{Deferred, Graft}
-import graft.gen.BsbmGen
+import graft.gen.{BsbmGen, BsbmTemplates}
 import graft.sources.NTriples
 
 /** Query plans are built without running Spark jobs: every pin is a
@@ -14,59 +14,9 @@ import graft.sources.NTriples
   * the next action instead of recomputing different rows. */
 class DeferredSpec extends SparkSpec {
 
-  // ?s1 and ?s3 have a p1 object, ?s2 has none (OPTIONAL leaves ?x unbound);
-  // ?x1 has a p4 object; the bnodes chain and cycle for DESCRIBE
-  private lazy val quads: DataFrame = NTriples.fromString(spark,
-    """<urn:a1> <urn:p0> <urn:s1> .
-      |<urn:a2> <urn:p0> <urn:s2> .
-      |<urn:a3> <urn:p0> <urn:s3> .
-      |<urn:s1> <urn:p1> <urn:x1> .
-      |<urn:s3> <urn:p1> <urn:x2> .
-      |<urn:b1> <urn:p2> <urn:t1> .
-      |<urn:b2> <urn:p2> <urn:t2> .
-      |<urn:t1> <urn:p3> <urn:x1> .
-      |<urn:x1> <urn:p4> <urn:w1> .
-      |<urn:x1> <urn:p4> <urn:a1> .
-      |<urn:a1> <urn:p5> _:k1 .
-      |_:k1 <urn:p6> _:k2 .
-      |_:k2 <urn:p6> _:k3 .
-      |_:k3 <urn:p6> _:k1 .
-      |_:k3 <urn:p7> "deep" .
-      |""".stripMargin).localCheckpoint()
+  import DeferredSpec.shapes
 
-  private val shapes: Seq[(String, String)] = Seq(
-    "nullable inner OPTIONAL chain" ->
-      """SELECT ?a ?b ?x WHERE {
-        |  { ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x } }
-        |  { ?b <urn:p2> ?t OPTIONAL { ?t <urn:p3> ?x } }
-        |}""".stripMargin,
-    "nullable left OPTIONAL chain with FILTER" ->
-      """SELECT ?a ?x ?y WHERE {
-        |  ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x }
-        |  OPTIONAL { ?x <urn:p4> ?y FILTER(?y != ?a) }
-        |}""".stripMargin,
-    "nullable MINUS" ->
-      """SELECT ?a ?x WHERE {
-        |  ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x } MINUS { ?x <urn:p4> ?w }
-        |}""".stripMargin,
-    "nullable EXISTS" ->
-      """SELECT ?a ?x WHERE {
-        |  ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x } FILTER EXISTS { ?x <urn:p4> ?w }
-        |}""".stripMargin,
-    "nullable NOT EXISTS" ->
-      """SELECT ?a ?x WHERE {
-        |  ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x } FILTER NOT EXISTS { ?x <urn:p4> ?w }
-        |}""".stripMargin,
-    "LATERAL" ->
-      """SELECT ?a ?x WHERE {
-        |  ?a <urn:p0> ?s LATERAL { SELECT ?s ?x WHERE { ?s <urn:p1> ?x } LIMIT 1 }
-        |}""".stripMargin,
-    "correlated EXISTS" ->
-      """SELECT ?a ?x WHERE {
-        |  ?a <urn:p0> ?s . ?s <urn:p1> ?x FILTER EXISTS { ?x <urn:p4> ?w FILTER(?w != ?a) }
-        |}""".stripMargin,
-    "DESCRIBE through a bnode chain and cycle" ->
-      """DESCRIBE ?a WHERE { ?a <urn:p0> <urn:s1> }""")
+  private lazy val quads: DataFrame = DeferredSpec.quads(spark)
 
   /** The sorted decoded rows of `df`. */
   private def answer(df: DataFrame): Seq[String] =
@@ -111,9 +61,8 @@ class DeferredSpec extends SparkSpec {
   }
 
   test("BSBM BI q04-q06 and explore q09: building and explaining run no job") {
-    val bsbm = BsbmGen.quads(spark, 1000).repartition(4).localCheckpoint()
-    val g = Graft(bsbm)
-    val ref = Graft.thetaCompat(bsbm)
+    val g = Graft(DeferredSpec.bsbm)
+    val ref = Graft.thetaCompat(DeferredSpec.bsbm)
     Seq("bi/q04.rq", "bi/q05.rq", "bi/q06.rq", "explore/q09.rq").foreach { f =>
       check(g, ref, f, BsbmTemplates.fill(BsbmTemplates.dir.resolve(f)))
     }
@@ -129,4 +78,65 @@ class DeferredSpec extends SparkSpec {
     val e = intercept[SparkException](df.select("*").collect())
     assert(e.getMessage.contains("Checkpoint block"), e.getMessage)
   }
+}
+
+object DeferredSpec {
+  /** BSBM at 1000 products (the scale `BsbmTemplates.params` selects rows
+    * at), generated once per test JVM. */
+  lazy val bsbm: DataFrame = BsbmGen.quads(SparkSpec.session, 1000).repartition(4).localCheckpoint()
+
+  // ?s1 and ?s3 have a p1 object, ?s2 has none (OPTIONAL leaves ?x unbound);
+  // ?x1 has a p4 object; the bnodes chain and cycle for DESCRIBE
+  def quads(spark: SparkSession): DataFrame = NTriples.fromString(spark,
+    """<urn:a1> <urn:p0> <urn:s1> .
+      |<urn:a2> <urn:p0> <urn:s2> .
+      |<urn:a3> <urn:p0> <urn:s3> .
+      |<urn:s1> <urn:p1> <urn:x1> .
+      |<urn:s3> <urn:p1> <urn:x2> .
+      |<urn:b1> <urn:p2> <urn:t1> .
+      |<urn:b2> <urn:p2> <urn:t2> .
+      |<urn:t1> <urn:p3> <urn:x1> .
+      |<urn:x1> <urn:p4> <urn:w1> .
+      |<urn:x1> <urn:p4> <urn:a1> .
+      |<urn:a1> <urn:p5> _:k1 .
+      |_:k1 <urn:p6> _:k2 .
+      |_:k2 <urn:p6> _:k3 .
+      |_:k3 <urn:p6> _:k1 .
+      |_:k3 <urn:p7> "deep" .
+      |""".stripMargin).localCheckpoint()
+
+  /** Shapes that used to pin or measure while they were built. */
+  val shapes: Seq[(String, String)] = Seq(
+    "nullable inner OPTIONAL chain" ->
+      """SELECT ?a ?b ?x WHERE {
+        |  { ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x } }
+        |  { ?b <urn:p2> ?t OPTIONAL { ?t <urn:p3> ?x } }
+        |}""".stripMargin,
+    "nullable left OPTIONAL chain with FILTER" ->
+      """SELECT ?a ?x ?y WHERE {
+        |  ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x }
+        |  OPTIONAL { ?x <urn:p4> ?y FILTER(?y != ?a) }
+        |}""".stripMargin,
+    "nullable MINUS" ->
+      """SELECT ?a ?x WHERE {
+        |  ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x } MINUS { ?x <urn:p4> ?w }
+        |}""".stripMargin,
+    "nullable EXISTS" ->
+      """SELECT ?a ?x WHERE {
+        |  ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x } FILTER EXISTS { ?x <urn:p4> ?w }
+        |}""".stripMargin,
+    "nullable NOT EXISTS" ->
+      """SELECT ?a ?x WHERE {
+        |  ?a <urn:p0> ?s OPTIONAL { ?s <urn:p1> ?x } FILTER NOT EXISTS { ?x <urn:p4> ?w }
+        |}""".stripMargin,
+    "LATERAL" ->
+      """SELECT ?a ?x WHERE {
+        |  ?a <urn:p0> ?s LATERAL { SELECT ?s ?x WHERE { ?s <urn:p1> ?x } LIMIT 1 }
+        |}""".stripMargin,
+    "correlated EXISTS" ->
+      """SELECT ?a ?x WHERE {
+        |  ?a <urn:p0> ?s . ?s <urn:p1> ?x FILTER EXISTS { ?x <urn:p4> ?w FILTER(?w != ?a) }
+        |}""".stripMargin,
+    "DESCRIBE through a bnode chain and cycle" ->
+      """DESCRIBE ?a WHERE { ?a <urn:p0> <urn:s1> }""")
 }

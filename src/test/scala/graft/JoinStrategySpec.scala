@@ -15,6 +15,8 @@ import graft.model._
  * - `Joins.shuffleHashUnlessSmall` must leave small sides unhinted
  *   (Catalyst's broadcast survives), hint non-small ones, and never stack
  *   a hint over an existing one.
+ * - ORDER BY + LIMIT stays a top-k (`TakeOrderedAndProject`), not a full
+ *   sort, when the order key's kind is known only at run time.
  */
 class JoinStrategySpec extends SparkSpec {
 
@@ -90,5 +92,18 @@ class JoinStrategySpec extends SparkSpec {
     assert(math.abs(r(2L) - 0.25) < 1e-9)
     assert(math.abs(r(3L) - 0.4625) < 1e-9)
     assert(math.abs(r(4L) - 0.14375) < 1e-9)
+  }
+
+  test("ORDER BY + LIMIT over a dynamic-kind variable plans TakeOrderedAndProject") {
+    // the sortable view of ?o is projected as a column before the Sort
+    // (Rewriter.orderDf), which must leave the top-k as a map-side k-merge
+    val quads = graft.sources.NTriples.fromString(spark,
+      (1 to 50).map(i => s"""<http://e/s$i> <http://e/p> "v$i" .""").mkString("\n"))
+    val df = graft.engine.Graft(quads)
+      .select("SELECT ?s ?o WHERE { ?s <http://e/p> ?o } ORDER BY DESC(?o) ?s LIMIT 5")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(!plan.contains("Sort ["), plan)
+    assert(df.select("o.v").collect().map(_.getString(0)).toSeq == Seq("v9", "v8", "v7", "v6", "v50"))
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -19,21 +16,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     df.select(cols.map(c => org.apache.spark.sql.functions.col(s"$c.v")): _*)
       .collect().map(_.toSeq.map(x => if (x == null) "∅" else x.toString)).toSet
 
-  /** (result, Spark jobs started while `body` ran). */
-  def jobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      ListenerBusAccess.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
+  /** (result, Spark jobs `body` started on this thread). */
+  def jobs[T](body: => T): (T, Int) = graft.obs.QueryProfile.jobs(spark)(body)
 }
 
 object SparkSpec {
