@@ -15,7 +15,10 @@ import graft.sources.{NTriples, Turtle}
  * Immutable-value style: mutating operations return a new QuadStore over the
  * updated quads DataFrame (Spark DataFrames are immutable; "snapshot
  * isolation" — mem_storage.rs:67-74 — falls out for free: each store value
- * is one immutable snapshot).
+ * is one immutable snapshot). A snapshot carries its registered graphs and
+ * its plan-growth weight — how many times its uncut update lineage embeds
+ * the last pinned plan — so chained [[update]] calls cut lineage by
+ * accumulated weight whoever chains them (see [[graft.engine.UpdateExec]]).
  *
  * Persistence layout: Parquet sorted by (predicate, subject, object) lexical
  * values — the virtual analogue of the reference's GSPO/GPOS/GOSP permutation
@@ -24,7 +27,8 @@ import graft.sources.{NTriples, Turtle}
  * (bound predicate), and the driver's column pruning handles the rest.
  */
 final class QuadStore private (val quads: DataFrame,
-                               registered: Set[RdfTerm] = Set.empty) {
+                               registered: Set[RdfTerm] = Set.empty,
+                               private[graft] val weight: Long = 1L) {
 
   private def spark: SparkSession = quads.sparkSession
   private lazy val engine = Graft(quads)
@@ -110,11 +114,18 @@ final class QuadStore private (val quads: DataFrame,
       usingDefault.collect { case i: Iri => i }, usingNamed.collect { case i: Iri => i })
 
   private[graft] def reg: Set[RdfTerm] = registered
+  /** The same snapshot over other quads; the plan-growth weight carries over. */
   private[graft] def withQuads(df: DataFrame, reg2: Set[RdfTerm] = registered): QuadStore =
-    new QuadStore(df, reg2)
+    new QuadStore(df, reg2, weight)
+  private[graft] def withWeight(w: Long): QuadStore = new QuadStore(quads, registered, w)
+
+  /** Pin the quads (one job), cutting their lineage: the pinned plan is one
+    * leaf again, so the plan-growth weight resets to 1. */
+  private[graft] def cutLineage(): QuadStore =
+    new QuadStore(quads.localCheckpoint(), registered, 1L)
 
   /** Add quads from another DataFrame (reference Store::extend). */
-  def union(other: DataFrame): QuadStore = new QuadStore(quads.unionByName(other), registered)
+  def union(other: DataFrame): QuadStore = withQuads(quads.unionByName(other))
 
   def insert(qs: Seq[RdfQuad]): QuadStore =
     union(Turtle.quadsToDF(spark, qs))
@@ -123,15 +134,15 @@ final class QuadStore private (val quads: DataFrame,
     * Store::insert_named_graph, store.rs:710-738). Immutable-value style:
     * returns the new store; "was it new" = !containsNamedGraph before. */
   def insertNamedGraph(g: RdfTerm): QuadStore =
-    new QuadStore(quads, registered + g)
+    withQuads(quads, registered + g)
 
   /** Empty a graph but keep it in [[namedGraphs]] (reference
     * Store::clear_graph, store.rs:740-766: after clear_graph the graph still
     * lists). `None` = default graph (which is never listed). */
   def clearGraph(g: Option[RdfTerm]): QuadStore = g match {
-    case None => new QuadStore(quads.filter(col("graph").isNotNull), registered)
+    case None => withQuads(quads.filter(col("graph").isNotNull))
     case Some(t) =>
-      new QuadStore(
+      withQuads(
         quads.filter(!coalesce(QuadStore.termEq(col("graph"), t), lit(false))),
         registered + t)
   }
@@ -139,7 +150,7 @@ final class QuadStore private (val quads: DataFrame,
   /** Drop a named graph and its quads entirely (reference
     * Store::remove_named_graph, store.rs:769-796). */
   def removeNamedGraph(g: RdfTerm): QuadStore =
-    new QuadStore(
+    withQuads(
       quads.filter(!coalesce(QuadStore.termEq(col("graph"), g), lit(false))),
       registered - g)
 
@@ -163,11 +174,11 @@ final class QuadStore private (val quads: DataFrame,
     }
     // null-safe negation: termEq on a NULL graph struct is NULL, and
     // filter(!NULL) would silently drop every default-graph quad
-    new QuadStore(quads.filter(!coalesce(cond, lit(false))), reg2)
+    withQuads(quads.filter(!coalesce(cond, lit(false))), reg2)
   }
 
   /** Remove everything, graphs included (reference Store::clear). */
-  def clear(): QuadStore = new QuadStore(quads.limit(0))
+  def clear(): QuadStore = withQuads(quads.limit(0), Set.empty)
 
   // ------------------------------------------------------------- persistence
 

@@ -40,15 +40,14 @@ import graft.model.{BNode, Iri, RdfTerm}
  * the next open; consumed-entry deletion is pure garbage collection
  * because `_compacted` already excludes them from replay.
  *
- * Replay threads the plan-growth weight ACROSS requests
- * ([[graft.engine.UpdateExec.applyWeighted]]): per-request accounting never
- * cut on a run of single-Modify entries (weight 8 < 64 each) and the plan
- * compounded ~8^n leaves over n entries — the exponential shape
- * tools/UpdatePlanProbe measured at 575 s for 12 uncut ops. With the
- * carried weight, every replayed plan stays ≤ `graft.update.cutWeight`
- * (default 64) store-plan leaves no matter how the log slices into
- * requests; tools/UpdateLogReplayProbe asserts flat per-entry replay time
- * over 50 single-Modify entries.
+ * Replay is a plain fold of [[QuadStore.update]] over the entries. Each
+ * snapshot carries its plan-growth weight into the next request, so every
+ * replayed plan stays ≤ `graft.update.cutWeight` (default 64) store-plan
+ * leaves no matter how the log slices into requests — per-request
+ * accounting never cut on a run of single-Modify entries (weight 8 < 64
+ * each) and compounded ~8^n leaves over n entries. UpdateLogSpec's
+ * "plan-growth weight carries across replayed requests" test checks the
+ * bound.
  *
  * Semantics notes: replay re-executes requests, so INSERT-template blank
  * nodes receive fresh labels per load (bnode labels are not significant),
@@ -99,7 +98,7 @@ object UpdateLog {
   def load(spark: SparkSession, dir: String): QuadStore = {
     val d = Paths.get(dir)
     recover(d)
-    replay(spark, d, entries(d.resolve("log"), compactedThrough(d)))._1
+    replay(spark, d, entries(d.resolve("log"), compactedThrough(d)))
   }
 
   /** Fold the log into a new base — the ONE full materialisation — then
@@ -113,7 +112,7 @@ object UpdateLog {
     recover(d)
     val before = compactedThrough(d)
     val consumed = entries(d.resolve("log"), before)
-    val st = replay(spark, d, consumed)._1
+    val st = replay(spark, d, consumed)
     val through = consumed.lastOption.map(seqOf).getOrElse(before)
     val (tmp, next, old, base) =
       (d.resolve("base.tmp"), d.resolve("base.next"), d.resolve("base.old"), d.resolve("base"))
@@ -145,14 +144,11 @@ object UpdateLog {
 
   // ----------------------------------------------------------------- helpers
 
-  /** base + registry, then the given entries replayed in order with the
-    * plan-growth weight threaded across requests. */
-  private def replay(spark: SparkSession, d: Path, es: Seq[Path]): (QuadStore, Long) = {
-    val base = withRegistry(QuadStore.load(spark, d.resolve("base").toString), d)
-    es.foldLeft((base, 1L)) { case ((st, w), p) =>
-      graft.engine.UpdateExec.applyWeighted(st, new String(Files.readAllBytes(p), "UTF-8"), w)
+  /** base + registry, then the given entries replayed in order. */
+  private def replay(spark: SparkSession, d: Path, es: Seq[Path]): QuadStore =
+    es.foldLeft(withRegistry(QuadStore.load(spark, d.resolve("base").toString), d)) { (st, p) =>
+      st.update(new String(Files.readAllBytes(p), "UTF-8"))
     }
-  }
 
   /** Repair the intermediate states a crashed [[compact]] can leave behind.
     * Idempotent; cheap (existence checks) when there is nothing to do. */

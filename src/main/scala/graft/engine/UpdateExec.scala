@@ -39,23 +39,7 @@ private[graft] object UpdateExec {
     * operation that uses the USING, USING NAMED, or WITH clause"). */
   def apply(store: QuadStore, text: String,
             protoUsingDefault: Seq[Iri] = Nil,
-            protoUsingNamed: Seq[Iri] = Nil): QuadStore =
-    applyWeighted(store, text, 1L, protoUsingDefault, protoUsingNamed)._1
-
-  /**
-   * Like [[apply]], but the plan-growth weight is THREADED: `startWeight` is
-   * the caller's accumulated growth product since its store plan was last
-   * checkpointed, and the final weight comes back with the result. Callers
-   * that apply a SEQUENCE of requests against evolving state — [[graft.UpdateLog]]
-   * replay, the protocol server's logged/live mutation paths — must use this
-   * form: with per-request accounting a run of single-Modify requests never
-   * reaches the in-request cut (weight 8 < 64 per request) and the plan
-   * compounds ~8^n leaves across requests — exactly the exponential shape
-   * tools/UpdatePlanProbe measured at 575 s for 12 uncut ops.
-   */
-  def applyWeighted(store: QuadStore, text: String, startWeight: Long,
-                    protoUsingDefault: Seq[Iri] = Nil,
-                    protoUsingNamed: Seq[Iri] = Nil): (QuadStore, Long) = {
+            protoUsingNamed: Seq[Iri] = Nil): QuadStore = {
     val req = SparqlParser.parseUpdate(text)
     if (protoUsingDefault.nonEmpty || protoUsingNamed.nonEmpty)
       req.ops.foreach {
@@ -70,26 +54,26 @@ private[graft] object UpdateExec {
     // the insert semi-join + union, and the WHERE solve all reference it),
     // so plan size grows ~k^n BETWEEN cuts — a fixed every-8-ops cut still
     // admitted ~6^8 ≈ 1.7M-leaf plans that ground Catalyst for minutes
-    // (measured by tools/UpdatePlanProbe). Multiplying a per-op growth
+    // (measured by graft.tools.UpdatePlanProbe). Multiplying a per-op growth
     // factor and cutting when the product exceeds cutWeight bounds every
     // compiled plan to ~cutWeight leaves, making a 100-op request linear.
     // The checkpoint is store-snapshot-sized but amortised over the ops
-    // between cuts. The weight only advances when the op actually grew the
-    // plan (`next.quads ne st.quads` — SILENT no-ops and registry-only ops
-    // leave it untouched), and the product is clamped so a long run of
-    // growth cannot overflow Long and silently disable every later cut.
-    var weight = math.max(startWeight, 1L)
-    val out = req.ops.foldLeft(store) { (st, op) =>
+    // between cuts. The weight starts from the input snapshot's and travels
+    // with the returned one, so a run of requests (each below the cut on its
+    // own — a single Modify is 8 < 64) still cuts: per-request accounting
+    // let such a chain compound ~8^n leaves. The weight only advances when
+    // the op actually grew the plan (`next.quads ne st.quads` — SILENT
+    // no-ops and registry-only ops leave it untouched), and the product is
+    // clamped so a long run of growth cannot overflow Long and silently
+    // disable every later cut.
+    req.ops.foldLeft(store) { (st, op) =>
       val next = exec(st, op, protoUsingDefault, protoUsingNamed)
-      if (next.quads ne st.quads) {
-        weight = math.min(weight * opGrowth(op), 1L << 40)
-        if (weight >= lineageCutWeight) {
-          weight = 1L
-          next.withQuads(next.quads.localCheckpoint())
-        } else next
-      } else next
+      if (next.quads eq st.quads) next
+      else {
+        val w = math.min(st.weight * opGrowth(op), 1L << 40)
+        if (w >= lineageCutWeight) next.cutLineage() else next.withWeight(w)
+      }
     }
-    (out, weight)
   }
 
   /** How many times an op's output plan embeds its input store plan. */

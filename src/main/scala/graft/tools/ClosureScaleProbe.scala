@@ -11,14 +11,15 @@ import graft.encoding.TermCols
  * (deterministic), runs `?a <urn:next>+ ?b` through the engine, and reports
  * the closure wall time. Closure size = N_CHAINS · C(CHAIN_LEN+1, 2).
  *
- * Run: SPARK_GRAFT_CPUS=32 graftrun.sh graft.tools.ClosureScaleProbe [chains] [len]
+ * Run: sbt "runMain graft.tools.ClosureScaleProbe [chains] [len]" (cores:
+ * SPARK_GRAFT_CPUS, default all of this machine's).
  * Defaults 100k × 30 → 3.0M edges, 46.5M reachability pairs.
  */
 object ClosureScaleProbe {
   def main(args: Array[String]): Unit = {
     val nChains = args.headOption.map(_.toInt).getOrElse(100000)
     val len = args.lift(1).map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -3,7 +3,7 @@ package graft.web
 import java.io.OutputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -43,43 +43,18 @@ final class SparqlServer private (spark: SparkSession, initial: DataFrame, port:
     * it. Mutating endpoints apply the SAME request text in memory that
     * they append, so the in-memory snapshot and a replay agree exactly. */
   private val logged: Option[String] = logDir.map { dir =>
-    val d = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(d.resolve("base"))) {
-      val init = if (initial != null) QuadStore(initial)
-        else QuadStore(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], NTriples.quadSchema))
-      graft.UpdateLog.init(init, dir)
-    }
+    if (!Files.isDirectory(Paths.get(dir).resolve("base")))
+      graft.UpdateLog.init(if (initial != null) QuadStore(initial) else QuadStore.empty(spark), dir)
     dir
   }
 
-  /** Named graphs registered empty by update ops (CREATE / CLEAR) — carried
-    * across requests alongside the quads. Declared BEFORE `quads`: the
-    * logged-mode initializer below assigns it, and a later declaration
-    * would re-initialize it to empty. */
-  @volatile private var registeredGraphs: Set[graft.model.RdfTerm] = Set.empty
-
-  /** Accumulated plan-growth weight of the uncheckpointed update lineage on
-    * top of `quads` (see [[graft.engine.UpdateExec.applyWeighted]]). Carried
-    * ACROSS protocol requests so mutations checkpoint by weight, not per
-    * request: at 100 TB a full-store materialisation per protocol update is
-    * exactly the cost the write-ahead log exists to avoid, while the weight
-    * bound keeps every served plan ≤ cutWeight store-plan leaves. Guarded by
-    * the same `synchronized` as the `quads` swap. */
-  private var planWeight: Long = 1L
-
-  @volatile private var quads: DataFrame = logged match {
-    case Some(dir) =>
-      val st = graft.UpdateLog.load(spark, dir)
-      registeredGraphs = st.reg
-      st.quads.localCheckpoint()
-    case None if initial != null => initial
-    case None =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        NTriples.quadSchema)
+  /** The current snapshot: quads, registered graphs and plan-growth weight.
+    * Mutations swap it under `synchronized`; queries read it once. */
+  @volatile private var store: QuadStore = logged match {
+    case Some(dir) => graft.UpdateLog.load(spark, dir).cutLineage()
+    case None if initial != null => QuadStore(initial)
+    case None => QuadStore.empty(spark)
   }
-  private val hasStore = new java.util.concurrent.atomic.AtomicBoolean(
-    initial != null || logged.isDefined)
 
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
   server.createContext("/repositories/default/query", (ex: HttpExchange) => handleSafe(ex, handleQuery))
@@ -106,7 +81,7 @@ final class SparqlServer private (spark: SparkSession, initial: DataFrame, port:
   def boundPort: Int = server.getAddress.getPort
   def stop(): Unit = { server.stop(0); pool.shutdown() }
   /** Current store contents (for tests / embedding). */
-  def storeQuads: DataFrame = quads
+  def storeQuads: DataFrame = store.quads
 
   // ------------------------------------------------------------------ routing
 
@@ -189,6 +164,7 @@ final class SparqlServer private (spark: SparkSession, initial: DataFrame, port:
     val union = unionParam(params)
     val defaults = params.getOrElse("using-graph-uri", Nil)
     val named = params.getOrElse("using-named-graph-uri", Nil)
+    val quads = store.quads
     // the reference rejects union + explicit graph scoping (evaluate.rs):
     // the two parameterisations contradict each other
     if (params.contains("using-union-graph") && union && (defaults.nonEmpty || named.nonEmpty))
@@ -218,58 +194,51 @@ final class SparqlServer private (spark: SparkSession, initial: DataFrame, port:
     val ct = Option(ex.getRequestHeaders.getFirst("Content-Type"))
       .map(_.takeWhile(_ != ';').trim.toLowerCase).getOrElse("")
     val ext = ContentTypeExt.getOrElse(ct, throw new BadRequest(s"Invalid content type: $ct"))
-    val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-    logged match {
+    val body = ex.getRequestBody.readAllBytes()
+    // ingestion is a LOAD request in both modes, so an upload has LOAD's set
+    // semantics and a logged store's replay runs the identical code path. A
+    // logged store keeps the document under the log dir for replay; in
+    // memory it is a temp file, gone once LOAD has materialised it.
+    val doc = logged match {
       case Some(dir) =>
-        // durable mode: persist the document under the log dir and route
-        // the ingestion through a logged LOAD request, so the in-memory
-        // apply and any future replay run the IDENTICAL code path (incl.
-        // LOAD's set semantics — a replay must not disagree about
-        // duplicates with the live store)
-        val docs = java.nio.file.Paths.get(dir).resolve("docs")
+        val docs = Paths.get(dir).resolve("docs")
         Files.createDirectories(docs)
-        val doc = docs.resolve(java.util.UUID.randomUUID().toString + ext)
-        Files.write(doc, body.getBytes(UTF_8))
-        val req = s"LOAD <file://${doc.toAbsolutePath}>"
-        synchronized {
-          val st0 = registeredGraphs.foldLeft(QuadStore(quads))(_ insertNamedGraph _)
-          // weight-carried apply (see planWeight); LOAD materialises the
-          // parsed document inside the executor, so a malformed upload
-          // fails HERE — before anything is appended or published
-          val (st1, w) = graft.engine.UpdateExec.applyWeighted(st0, req, planWeight)
-          // durability BEFORE publication: if the append fails (disk full),
-          // the client gets its 500 while memory still matches the log —
-          // the two can never silently diverge (r8 ADVICE)
-          graft.UpdateLog.append(dir, req)
-          quads = st1.quads
-          registeredGraphs = st1.reg
-          planWeight = w
-          hasStore.set(true)
-        }
-        respond(ex, 204, null, Array.emptyByteArray)
-      case None =>
-        val tmp = Files.createTempFile("graft_post", ext)
-        try {
-          Files.write(tmp, body.getBytes(UTF_8))
-          val parsed = QuadStore.loadFile(spark, tmp.toString).quads
-          // materialise before the temp file goes away (and so queries don't
-          // re-parse the upload); the store itself stays a lazy union of loads
-          val add = parsed.localCheckpoint()
-          synchronized {
-            quads = if (hasStore.getAndSet(true)) quads.unionAll(add) else add
-          }
-          respond(ex, 204, null, Array.emptyByteArray)
-        } finally Files.deleteIfExists(tmp)
+        docs.resolve(java.util.UUID.randomUUID().toString + ext)
+      case None => Files.createTempFile("graft_post", ext)
     }
+    try {
+      Files.write(doc, body)
+      // LOAD materialises the parsed document inside the update, so a
+      // malformed upload fails here — before anything is appended or published
+      mutate(s"LOAD <file://${doc.toAbsolutePath}>")
+    } finally if (logged.isEmpty) Files.deleteIfExists(doc)
+    respond(ex, 204, null, Array.emptyByteArray)
+  }
+
+  /** Apply one update request to the current snapshot and publish the
+    * result, atomically per request. The snapshot's plan-growth weight
+    * carries across requests, so lineage is cut by accumulated weight, not
+    * per request: at 100 TB a full-store materialisation per protocol
+    * update is exactly the cost the write-ahead log exists to avoid. */
+  private def mutate(text: String, usingDefault: Seq[graft.model.RdfTerm] = Nil,
+                     usingNamed: Seq[graft.model.RdfTerm] = Nil): Unit = synchronized {
+    // parse/validation errors and every eager op failure surface here,
+    // before the log append
+    val next = store.update(text, usingDefault, usingNamed)
+    // durability BEFORE publication: if the append fails (disk full), the
+    // client gets its 500 while memory still matches the log — the two can
+    // never silently diverge
+    logged.foreach(graft.UpdateLog.append(_, text))
+    store = next
   }
 
   // ------------------------------------------------------------------ /update
 
   /** SPARQL 1.1 Protocol update endpoint: POST with an
     * `application/sparql-update` body, or form-encoded `update=`.
-    * Applied atomically per request (synchronized swap of the store
-    * snapshot); the result is checkpointed so a long sequence of updates
-    * does not compound into one unbounded Catalyst plan. */
+    * Applied atomically per request through [[mutate]]; lineage is cut by
+    * the snapshot's accumulated plan-growth weight, so a long sequence of
+    * updates does not compound into one unbounded Catalyst plan. */
   private def handleUpdate(ex: HttpExchange): Unit = {
     if (ex.getRequestMethod != "POST")
       return respond(ex, 405, "text/plain", "only POST is supported".getBytes(UTF_8))
@@ -309,21 +278,7 @@ final class SparqlServer private (spark: SparkSession, initial: DataFrame, port:
         graft.sparql.SparqlParser.parseUpdate(spliced) // defensive: must stay parseable
         (spliced, Nil, Nil)
       } else (text, usingDefault, usingNamed)
-    synchronized {
-      val st0 = registeredGraphs.foldLeft(QuadStore(quads))(_ insertNamedGraph _)
-      // weight-carried apply: checkpoints by accumulated plan growth, not
-      // per request (see planWeight). Parse/validation errors and every
-      // eager op failure surface here, before the log append.
-      val (st1, w) = graft.engine.UpdateExec.applyWeighted(
-        st0, effText, planWeight, effDefault, effNamed)
-      // durability BEFORE publication (r8 ADVICE): a failed append leaves
-      // memory and log consistent — the client's 500 is the truth
-      logged.foreach(graft.UpdateLog.append(_, effText))
-      quads = st1.quads
-      registeredGraphs = st1.reg
-      planWeight = w
-      hasStore.set(true)
-    }
+    mutate(effText, effDefault, effNamed)
     respond(ex, 204, null, Array.emptyByteArray)
   }
 

@@ -64,6 +64,22 @@ class SparqlServerSpec extends SparkSpec {
     assert(st == 204)
   }
 
+  test("POST /data twice adds no duplicate quads, in memory and logged") {
+    val nt = "<http://ex.org/dup> <http://ex.org/p> \"once\" .\n"
+    for (s <- Seq(SparqlServer.start(spark, host = "127.0.0.1"),
+        SparqlServer.start(spark, host = "127.0.0.1",
+          logDir = Some(java.nio.file.Files.createTempDirectory("graft_data_dup").toString)))) {
+      try {
+        (1 to 2).foreach { _ =>
+          val (st, _, _) = http("POST", s"http://127.0.0.1:${s.boundPort}/repositories/default/data",
+            contentType = "application/n-triples", body = nt)
+          assert(st == 204)
+        }
+        assert(s.storeQuads.count() == 1)
+      } finally s.stop()
+    }
+  }
+
   test("SELECT defaults to sparql-results+json and is readable") {
     val (st, bodyText, ct) = http("GET",
       queryUrl("SELECT ?n WHERE { ?s <http://ex.org/name> ?n } ORDER BY ?n"))

@@ -1,9 +1,12 @@
 package graft
 
+import java.net.{HttpURLConnection, URI}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import graft.model._
 import graft.sources.Turtle
+import graft.web.SparqlServer
 
 /** Write-ahead update-log persistence: append is base-rewrite-free, load
   * replays lazily with the plan-growth weight carried ACROSS requests,
@@ -77,17 +80,39 @@ class UpdateLogSpec extends SparkSpec {
   }
 
   test("plan-growth weight carries across replayed requests") {
-    val dir = Files.createTempDirectory("graft_updlog_weight").toString
-    UpdateLog.init(mkStore(("urn:s0", "urn:p", "urn:o0")), dir)
-    // single-Modify entries: per-request accounting never cut on these
-    // (weight 8 < 64 each) and the replayed plan compounded ~8^n leaves
-    (1 to 6).foreach(i => UpdateLog.append(dir,
-      s"INSERT { ?s <urn:q$i> ?o } WHERE { ?s <urn:p> ?o }"))
-    val st = UpdateLog.load(spark, dir)
-    assert(tuples(st).map(_._3) == (Set("urn:p") ++ (1 to 6).map(i => s"urn:q$i")))
-    val leaves = st.quads.queryExecution.optimizedPlan.collectLeaves().size
-    assert(leaves < 64,
-      s"replayed plan has $leaves leaves — the weight cut did not fire across requests")
+    // single-Modify requests, each below the cut on its own (weight 8 < 64):
+    // an entry point that accounts per request compounds ~8^n plan leaves
+    val reqs = (1 to 7).map(i => s"INSERT { ?s <urn:q$i> ?o } WHERE { ?s <urn:p> ?o }")
+    val base = mkStore(("urn:s0", "urn:p", "urn:o0"))
+    def chained(): QuadStore = reqs.foldLeft(base)(_ update _)
+    def served(): QuadStore = {
+      val server = SparqlServer.start(spark, base.quads, host = "127.0.0.1")
+      try {
+        reqs.foreach { r =>
+          val conn = URI.create(s"http://127.0.0.1:${server.boundPort}/repositories/default/update")
+            .toURL.openConnection().asInstanceOf[HttpURLConnection]
+          conn.setRequestMethod("POST")
+          conn.setRequestProperty("Content-Type", "application/sparql-update")
+          conn.setDoOutput(true)
+          conn.getOutputStream.write(r.getBytes(UTF_8))
+          assert(conn.getResponseCode == 204)
+        }
+        QuadStore(server.storeQuads)
+      } finally server.stop()
+    }
+    def replayed(): QuadStore = {
+      val dir = Files.createTempDirectory("graft_updlog_weight").toString
+      UpdateLog.init(base, dir)
+      reqs.foreach(UpdateLog.append(dir, _))
+      UpdateLog.load(spark, dir)
+    }
+    for ((entry, run) <- Seq("chained store.update" -> chained _,
+        "POST /update" -> served _, "UpdateLog.load" -> replayed _)) {
+      val st = run()
+      assert(tuples(st).map(_._3) == (Set("urn:p") ++ reqs.indices.map(i => s"urn:q${i + 1}")), entry)
+      val leaves = st.quads.queryExecution.optimizedPlan.collectLeaves().size
+      assert(leaves < 64, s"$entry: plan has $leaves leaves — the weight cut did not fire across requests")
+    }
   }
 
   test("compaction is crash-safe: every intermediate state recovers to the same logical store") {
