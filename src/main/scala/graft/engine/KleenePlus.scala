@@ -7,7 +7,7 @@ import scala.concurrent.duration._
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow, UnsafeProjection, UnsafeRow}
@@ -20,6 +20,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.Platform
 import graft.model._
+import graft.ops.{IndexCache, SkewSalt}
 
 /**
  * `p+` over an edge relation (g, src, tgt): every (g, x, y) joined by a path
@@ -62,7 +63,7 @@ final case class KleenePlusExec(@transient edges: LogicalPlan, seed: Option[RdfT
 
   override protected def doExecute(): RDD[InternalRow] = {
     val edgeDF = GraftExprBridge.ofRows(session, edges)
-    val key = graft.ops.IndexCache.key(edgeDF)
+    val key = IndexCache.key(edgeDF)
     // pinned by the first job that reads it: above the budget, the loop
     // starts from the edges the collect job already computed
     lazy val pinned = edgeDF.localCheckpoint(eager = false)
@@ -152,27 +153,12 @@ object KleenePlus {
 
   // ------------------------------------------------------------ memoisation
 
-  /** Small access-ordered LRU whose builds run outside its lock, so one
-    * closure's jobs never hold up another query's lookups. Evicted entries
-    * drop their references; Spark's ContextCleaner frees the blocks. */
-  private final class Memo[V <: AnyRef](max: Int) {
-    private val m = new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, V]): Boolean = size() > max
-    }
-    def apply(key: String)(build: => V): V = {
-      val hit = synchronized(m.get(key))
-      if (hit != null) hit
-      else { val v = build; synchronized(m.put(key, v)); v }
-    }
-    def clear(): Unit = synchronized(m.clear())
-  }
-
   /** Closures are build-once/query-many artifacts like the IVF index and
-    * MinHash caches (ops/IndexCache): repeated `p+`/`p*` queries over the same
-    * edge relation reuse the adjacency (or the loop's fixpoint). Keys hold the
+    * MinHash signatures: repeated `p+`/`p*` queries over the same edge
+    * relation reuse the adjacency (or the loop's fixpoint). Keys hold the
     * FULL canonicalized plans, so new data is a miss by construction. */
-  private val adjacencies = new Memo[Option[Broadcast[Adjacency]]](8)
-  private val loops = new Memo[DataFrame](8)
+  private val adjacencies = new IndexCache[Option[Broadcast[Adjacency]]](8)
+  private val loops = new IndexCache[DataFrame](8)
 
   /** Drop every memoised adjacency and loop fixpoint. */
   private[engine] def clearCache(): Unit = { adjacencies.clear(); loops.clear() }
@@ -183,13 +169,13 @@ object KleenePlus {
     * exceed `budget` bytes (decided once per `key`). */
   private[engine] def adjacency(key: String, edges: => DataFrame,
                                 budget: Long): Option[Broadcast[Adjacency]] =
-    adjacencies(key) {
+    adjacencies.get(key, {
       if (budget <= 0) None
       else {
         val df = edges
         collectDistinct(df, budget).map(rows => df.sparkSession.sparkContext.broadcast(build(rows, df.schema)))
       }
-    }
+    })
 
   /** The distinct rows of `df` in ONE job, or None once their UnsafeRow bytes
     * exceed `budget`: each task stops reading at the budget, and the driver
@@ -307,7 +293,7 @@ object KleenePlus {
 
   /** [[closureCompute]] memoised per `key`. */
   private[engine] def semiNaive(key: String, edges: DataFrame, seeds: Option[DataFrame]): DataFrame =
-    loops(key)(closureCompute(edges, seeds))
+    loops.get(key, closureCompute(edges, seeds))
 
   /** Measured UnsafeRow bytes of `df` (one job). */
   private def rowBytes(df: DataFrame): Long = {
@@ -318,138 +304,33 @@ object KleenePlus {
     }.fold(0L)(_ + _)
   }
 
-  /** Heavy (g, src) join keys of `rel` — nodes whose out-degree reaches
-    * [[graft.ops.SkewSalt.hotThreshold]] — or None when `rel` is too small
-    * for any key to qualify (gate/local scale pays zero extra jobs). A hub
-    * key amplifies the closure step join's OUTPUT (frontier-in × edges-out
-    * pairs in one task), which AQE's input-size-based skew splitting can
-    * never see (measured: SkewProbe, deleted: see CHANGES.md); the converse case — a hub with
-    * only IN-degree — is plain input skew on the delta side, which AQE does
-    * split. */
-  private def heavyKeys(rel: DataFrame, relCount: Long): Option[DataFrame] = {
-    val hot = graft.ops.SkewSalt.hotThreshold
-    val minRows = sys.props.get("graft.salt.minRows").map(_.toLong).getOrElse(100000L)
-    if (relCount < math.max(hot.toLong, minRows)) None
-    else {
-      val h = rel.groupBy(col("g"), col("src")).agg(count(lit(1)).as("__n"))
-        .where(col("__n") >= hot)
-        .select(col("g").as("hg"), col("src").as("hk")).localCheckpoint()
-      if (h.isEmpty) None else Some(h)
-    }
-  }
-
-  /** One closure step: delta (dg, dsrc, dtgt) ∘ rel (g, src, tgt) →
-    * (g, src, tgt). With `heavy` present the join is salted: delta rows
-    * landing on a heavy key take a deterministic salt hashed from their
-    * OTHER endpoint, heavy rel rows replicate once per salt — every
-    * composed path still produced exactly once, but a hub's quadratic
-    * output enumeration spreads across [[graft.ops.SkewSalt.salts]] tasks
-    * instead of one. */
-  private def stepJoin(delta: DataFrame, rel: DataFrame,
-                       heavy: Option[DataFrame]): DataFrame = heavy match {
-    case None =>
-      // both sides are checkpointed (no stats) → hint shuffle_hash so the
-      // per-round join skips SortMergeJoin's two sorts; the delta side is
-      // hinted (= build side): the frontier shrinks round over round while
-      // rel stays edge-sized
-      delta.hint("shuffle_hash")
-        .join(rel, col("dtgt") === col("src") && (col("dg") <=> col("g")))
-        .select(col("dg").as("g"), col("dsrc").as("src"), col("tgt"))
-    case Some(h) =>
-      val s = graft.ops.SkewSalt.salts
-      val hb = broadcast(h.withColumn("__hot", lit(1)))
-      val d2 = delta
-        .join(hb, col("dtgt") === col("hk") && (col("dg") <=> col("hg")), "left")
-        .withColumn("__sa", when(col("__hot") === 1,
-          pmod(xxhash64(col("dsrc")), lit(s)).cast("int")).otherwise(lit(0)))
-        .select(col("dg"), col("dsrc"), col("dtgt"), col("__sa"))
-      val r2 = rel
-        .join(hb, col("src") === col("hk") && (col("g") <=> col("hg")), "left")
-        .withColumn("__sb", explode(when(col("__hot") === 1,
-          sequence(lit(0), lit(s - 1))).otherwise(array(lit(0)))))
-        .select(col("g"), col("src"), col("tgt"), col("__sb"))
-      d2.hint("shuffle_hash")
-        .join(r2, col("dtgt") === col("src") && (col("dg") <=> col("g")) &&
-          col("__sa") === col("__sb"))
-        .select(col("dg").as("g"), col("dsrc").as("src"), col("tgt"))
-  }
-
-  /** [[heavyKeys]] over the long-encoded edge relation (s, t): hot source
-    * ids whose out-degree reaches the salt threshold. */
-  private def heavyIds(rel: DataFrame, relCount: Long): Option[DataFrame] = {
-    val hot = graft.ops.SkewSalt.hotThreshold
-    val minRows = sys.props.get("graft.salt.minRows").map(_.toLong).getOrElse(100000L)
-    if (relCount < math.max(hot.toLong, minRows)) None
-    else {
-      val h = rel.groupBy(col("s")).agg(count(lit(1)).as("__n"))
-        .where(col("__n") >= hot)
-        .select(col("s").as("hk")).localCheckpoint()
-      if (h.isEmpty) None else Some(h)
-    }
-  }
-
-  /** [[stepJoin]] on the long-encoded relations: delta (s, t) ∘ rel (s, t)
-    * joined on delta.t = rel.s → (s, t); salted identically when `heavy`
-    * ids are present. `broadcastDelta` streams rel against the broadcast
-    * delta instead — no exchange on the (big) rel side, no salting needed
-    * (a broadcast join has no per-key partition to collapse; composition
-    * output spreads across rel's existing blocks). */
-  private def stepJoinL(delta: DataFrame, rel: DataFrame,
-                        heavy: Option[DataFrame],
-                        broadcastDelta: Boolean = false): DataFrame = {
-    val d = delta.select(col("s").as("ds"), col("t").as("dt"))
-    if (broadcastDelta)
-      return broadcast(d).join(rel, col("dt") === col("s"))
-        .select(col("ds").as("s"), col("t"))
-    heavy match {
-      case None =>
-        d.hint("shuffle_hash").join(rel, col("dt") === col("s"))
-          .select(col("ds").as("s"), col("t"))
-      case Some(h) =>
-        val ns = graft.ops.SkewSalt.salts
-        val hb = broadcast(h.withColumn("__hot", lit(1)))
-        val d2 = d.join(hb, col("dt") === col("hk"), "left")
-          .withColumn("__sa", when(col("__hot") === 1,
-            pmod(xxhash64(col("ds")), lit(ns)).cast("int")).otherwise(lit(0)))
-          .select(col("ds"), col("dt"), col("__sa"))
-        val r2 = rel.join(hb, col("s") === col("hk"), "left")
-          .withColumn("__sb", explode(when(col("__hot") === 1,
-            sequence(lit(0), lit(ns - 1))).otherwise(array(lit(0)))))
-          .select(col("s"), col("t"), col("__sb"))
-        d2.hint("shuffle_hash")
-          .join(r2, col("dt") === col("s") && col("__sa") === col("__sb"))
-          .select(col("ds").as("s"), col("t"))
-    }
-  }
-
-  /** [[stepJoinL]] carrying the exact-distance column: `ex` (s, t, d) holds
-    * pairs at ONE exact distance, `rel` (s, t, d) the full history with its
-    * exact distances; output d = ex.d + rel.d (joined on ex.t = rel.s). */
-  private def stepJoinD(ex: DataFrame, rel: DataFrame,
-                        heavy: Option[DataFrame],
-                        broadcastDelta: Boolean = false): DataFrame = {
-    val d = ex.select(col("s").as("ds"), col("t").as("dt"), col("d").as("dd"))
-    val out = Seq(col("ds").as("s"), col("t"), (col("dd") + col("d")).as("d"))
-    if (broadcastDelta)
-      return broadcast(d).join(rel, col("dt") === col("s")).select(out: _*)
-    heavy match {
-      case None =>
-        d.hint("shuffle_hash").join(rel, col("dt") === col("s")).select(out: _*)
-      case Some(h) =>
-        val ns = graft.ops.SkewSalt.salts
-        val hb = broadcast(h.withColumn("__hot", lit(1)))
-        val d2 = d.join(hb, col("dt") === col("hk"), "left")
-          .withColumn("__sa", when(col("__hot") === 1,
-            pmod(xxhash64(col("ds")), lit(ns)).cast("int")).otherwise(lit(0)))
-          .select(col("ds"), col("dt"), col("dd"), col("__sa"))
-        val r2 = rel.join(hb, col("s") === col("hk"), "left")
-          .withColumn("__sb", explode(when(col("__hot") === 1,
-            sequence(lit(0), lit(ns - 1))).otherwise(array(lit(0)))))
-          .select(col("s"), col("t"), col("d"), col("__sb"))
-        d2.hint("shuffle_hash")
-          .join(r2, col("dt") === col("s") && col("__sa") === col("__sb"))
-          .select(out: _*)
-    }
+  /** One composition step of the loop over long-encoded relations: front
+    * (s, t[, d]) ∘ rel (s, t[, d]) joined on front.t = rel.s, giving
+    * (s, t[, d]) with the two exact distances added when the front carries
+    * them.
+    *
+    * A `small` front is broadcast and rel streams past it: no exchange on the
+    * (big) rel side, and no per-key partition for a hub to collapse. Otherwise
+    * both sides shuffle, hinted shuffle_hash with the front as the build side
+    * (both are checkpointed, so no stats; the front shrinks round over round
+    * while rel stays edge-sized), and the `hot` hub nodes — out-degree at the
+    * salt threshold — are salted by [[SkewSalt.saltedSides]]: a hub's
+    * front-in × edges-out pairs would otherwise all come out of one task,
+    * which AQE's input-size skew splitting never sees. A hub with only
+    * in-degree is plain input skew on the front side, which AQE does split. */
+  private def compose(front: DataFrame, rel: DataFrame, small: Boolean,
+                      hot: => Option[DataFrame]): DataFrame = {
+    val dist = front.columns.contains("d")
+    def cols(c: Column*)(d: => Column): Seq[Column] = if (dist) c :+ d else c
+    val f = front.select(cols(col("s").as("fs"), col("t").as("k"))(col("d").as("fd")): _*)
+    val r = rel.select(cols(col("s").as("k"), col("t"))(col("d")): _*)
+    val joined =
+      if (small) broadcast(f).join(r, Seq("k"))
+      else hot.fold(f.hint("shuffle_hash").join(r, Seq("k"))) { h =>
+        val (fs, rs) = SkewSalt.saltedSides(f, r, Seq("k"), h, col("fs"))
+        fs.hint("shuffle_hash").join(rs, Seq("k", "__salt"))
+      }
+    joined.select(cols(col("fs").as("s"), col("t"))((col("fd") + col("d")).as("d")): _*)
   }
 
   /** Semi-naive transitive closure — the scale path of [[KleenePlusExec]],
@@ -457,8 +338,18 @@ object KleenePlus {
     * distributed DataFrame joins that runs its jobs from the driver while the
     * operator executes: (graph, node) pairs are encoded to longs, full
     * closures double path length per round, seeded walks extend one hop per
-    * round, and localCheckpoint cuts each round's lineage so plans stay flat. */
+    * round, and localCheckpoint cuts each round's lineage so plans stay flat.
+    * The same byte budget picks each round's joins: a front whose rows fit it
+    * is broadcast, a larger one shuffles with its hub nodes salted
+    * ([[compose]]). A seeded walk whose seeds are dense, or which is still
+    * running after [[maxLinear]] hops, is answered by the full closure
+    * restricted to the seed sources. */
   private[engine] def closureCompute(edges0: DataFrame, seeds: Option[DataFrame]): DataFrame = {
+    val budget = KleenePlus.budget(SQLConf.get)
+    // a relation of long columns fits the budget when its UnsafeRow bytes
+    // do: one null-bit word and one word per long, so a front row is 24 or
+    // 32 bytes
+    def fits(df: DataFrame, rows: Long): Boolean = rows * 8L * (df.columns.length + 1) <= budget
     val edges = edges0.dropDuplicates().localCheckpoint()
     // The iteration below shuffles its working relation every round; on RDF
     // terms that is three 5-field structs per row. (graph, node) pairs are
@@ -478,8 +369,7 @@ object KleenePlus {
     // broadcast it when its measured bytes fit the operator's budget so the
     // encode/decode joins never shuffle the big side; above the budget,
     // shuffled-hash
-    val dict =
-      if (rowBytes(dict0) <= budget(SQLConf.get)) broadcast(dict0) else dict0.hint("shuffle_hash")
+    val dict = if (rowBytes(dict0) <= budget) broadcast(dict0) else dict0.hint("shuffle_hash")
     val sDict = dict.select(col("g").as("__sg"), col("n").as("__sn"), col("__id").as("__sid"))
     val tDict = dict.select(col("g").as("__tg"), col("n").as("__tn"), col("__id").as("__tid"))
     val eL = edges
@@ -500,17 +390,13 @@ object KleenePlus {
     def minusAll(next: DataFrame, all: DataFrame): DataFrame = next.hint("shuffle_hash").join(
       all.select(col("s").as("__as"), col("t").as("__at")),
       col("s") === col("__as") && col("t") === col("__at"), "left_anti")
-    // One semi-naive round: compose delta ∘ rel, keep pairs not already in
-    // `all`. A small frontier takes the BROADCAST path: compose
-    // streams rel against the broadcast delta, and the history check first
-    // semi-filters `all` down to the broadcast candidate keys before a
-    // broadcast anti join — the big sides (rel, all) are never shuffled.
-    // The shuffle path otherwise pays two full exchanges of the accumulated
-    // relation per round just to process a residual frontier; tail rounds
-    // of the doubling loop and every round of a small seeded walk hit this.
-    // (the frontier rows are two or three longs, so this row gate is a byte
-    // gate: 250k rows ≈ 8 MB)
-    val tailRows = 250000L
+    // The broadcast side of a round: after a small front's composition, the
+    // history check first semi-filters `all` down to the broadcast candidate
+    // keys before a broadcast anti join, so the big sides (rel, all) are
+    // never shuffled. The shuffle path would otherwise pay two full exchanges
+    // of the accumulated relation per round just to process a residual
+    // front; tail rounds of the doubling loop and every round of a small
+    // seeded walk take this side.
     def subtractBcast(next: DataFrame, all: DataFrame): DataFrame = {
       val known = all.join(
           broadcast(next.select(col("s").as("__ns"), col("t").as("__nt"))),
@@ -519,77 +405,56 @@ object KleenePlus {
       next.join(broadcast(known),
         col("s") === col("__as") && col("t") === col("__at"), "left_anti")
     }
-    // checkpoint `next`, count it, and subtract history by whichever side is
-    // provably small enough to broadcast
-    def subtract(next0: DataFrame, all: DataFrame, tail: Boolean): DataFrame =
-      if (tail) {
+    // checkpoint `next`, count it, and subtract history by whichever side
+    // fits the budget
+    def subtract(next0: DataFrame, all: DataFrame, small: Boolean): DataFrame =
+      if (small) {
         val next = next0.localCheckpoint()
         val nCnt = next.count()
         if (nCnt == 0) next
-        else if (nCnt <= tailRows) subtractBcast(next, all).localCheckpoint()
+        else if (fits(next, nCnt)) subtractBcast(next, all).localCheckpoint()
         else minusAll(next, all).localCheckpoint()
       } else minusAll(next0, all).localCheckpoint()
-    def round(delta: DataFrame, deltaCnt: Long, rel: DataFrame, all: DataFrame,
-              heavy: => Option[DataFrame]): DataFrame = {
-      val tail = deltaCnt <= tailRows
-      subtract(
-        stepJoinL(delta, rel, if (tail) None else heavy, broadcastDelta = tail)
-          .dropDuplicates(),
-        all, tail)
-    }
+    val eCnt = eL.count()
+    // hub out-degrees are static across rounds: detect once, on the BASE
+    // edges, and lazily — only a round whose front exceeds the budget
+    // consults them. Re-detecting on the evolving reachability relation
+    // would cost O(|all|) per round (2× on a 16M-pair closure) for marginal
+    // coverage: the base hub is the amplification epicenter, and a node
+    // whose CLOSURE degree alone is huge spreads its output across its many
+    // distinct front rows, which is ordinary input skew AQE does split.
+    lazy val hot = SkewSalt.hotKeys(eL, Seq("s"), Some(eCnt))
     seeds match {
       case Some(sd) =>
-        // seeded walk: the frontier only ever holds nodes reachable from the
+        // seeded walk: the front only ever holds nodes reachable from the
         // seeds — rounds are linear in path depth but each round touches
-        // O(frontier) data, not the whole graph
+        // O(front) data, not the whole graph
         val s = sd.select(col("g").as("sg"), col("n"))
+        def fromFull: DataFrame = semiNaive(IndexCache.key(edges), edges, None)
+          .join(s.hint("shuffle_hash"), col("src") === col("n") && (col("g") <=> col("sg")), "left_semi")
         val seedL = s.join(sDict,
             (col("sg") <=> col("__sg")) && col("n") === col("__sn"))
           .select(col("__sid").as("sn")).localCheckpoint()
         var all = eL.join(seedL.hint("shuffle_hash"), col("s") === col("sn"), "left_semi")
           .localCheckpoint()
+        var delta = all
+        var deltaCnt = all.count()
         // dense seed set: the walk would touch most of the graph anyway, and
         // linear rounds pay fixed job overhead per hop — log-round full
         // doubling restricted back to the seeds is strictly fewer rounds
-        val eCnt = eL.count()
-        val aCnt = all.count()
-        if (aCnt * 8 >= eCnt)
-          return semiNaive(graft.ops.IndexCache.key(edges), edges, None)
-            .join(s.hint("shuffle_hash"),
-              col("src") === col("n") && (col("g") <=> col("sg")), "left_semi")
-        // hub out-degrees are static across rounds: detect once — and
-        // lazily: only a shuffle-path round (frontier above the broadcast
-        // tail gate) consults it; all-broadcast walks never pay the
-        // detection job
-        lazy val eHeavy = heavyIds(eL, eCnt)
-        var delta = all
-        var deltaCnt = aCnt
+        if (deltaCnt * 8 >= eCnt) return fromFull
         var rounds = 0
-        // linear BFS rounds are O(frontier) work but pay fixed driver/job
-        // overhead per hop — right for shallow graphs; past maxLinear hops a
-        // deep structure is cheaper to finish with one path-doubled closure
-        // composed onto the reach so far (log(diameter) further rounds)
-        val maxLinear = 16
         while (deltaCnt > 0 && rounds < maxLinear) {
           rounds += 1
-          delta = round(delta, deltaCnt, eL, all, eHeavy)
+          val small = fits(delta, deltaCnt)
+          delta = subtract(compose(delta, eL, small, hot).dropDuplicates(), all, small)
           deltaCnt = delta.count()
           // `all` stays a lazy union of CHECKPOINTED deltas: every piece is
           // already materialized, so consumers scan the block union without
-          // re-persisting the whole accumulated set each round (the old
-          // checkpoint-of-union rewrote O(|closure|) blocks per round)
+          // re-persisting O(|closure|) blocks each round
           if (deltaCnt > 0) all = all.unionAll(delta)
         }
-        if (deltaCnt == 0) decode(all).localCheckpoint()
-        else {
-          // deep-graph escape: one composition onto the (cached, term-level)
-          // full closure finishes the walk in a single round
-          val full = semiNaive(graft.ops.IndexCache.key(edges), edges, None)
-          val allT = decode(all)
-          val a = allT.select(col("g").as("dg"), col("src").as("dsrc"), col("tgt").as("dtgt"))
-          stepJoin(a, full, heavyKeys(edges, eCnt))
-            .unionAll(allT).dropDuplicates().localCheckpoint()
-        }
+        if (deltaCnt == 0) decode(all).localCheckpoint() else fromFull
       case None =>
         // full closure: EXACT-DISTANCE path doubling, log(diameter) rounds
         // instead of the reference's single-partition linear loop
@@ -600,45 +465,37 @@ object KleenePlus {
         // d* ∈ (2^k, 2^k+1] at exactly 2^k steps shows this reaches double
         // the distance per round, and — unlike composing the whole band
         // delta, whose (2^k-1, 2^k] × (0, 2^k] splits emit every new pair
-        // once per valid split point (measured 8× duplicate multiplicity on
-        // a 43M-pair closure, round output 70M rows) — the exact-front
-        // split is unique per shortest path, so compose output ≈ the new
-        // pairs themselves. min(d) aggregation replaces dropDuplicates
-        // (same shuffle), keeping stored distances exact (induction: a
-        // produced d is 2^k + an exact suffix distance, minimised over
-        // midpoints; the true midpoint realises the true distance and the
-        // anti join protects already-stored, strictly smaller values).
-        // Termination is new-empty: if any pair beyond 2^k existed, its
-        // 2^k-prefix would be an exact-2^k pair in the current delta.
-        var size = eL.count()
-        // hub keys come from the BASE edges, detected once: re-detecting on
-        // the evolving reachability relation costs O(|all|) extra per round
-        // (measured 2× on a 16M-pair closure) for marginal coverage — the
-        // base hub is the amplification epicenter; a node whose CLOSURE
-        // degree alone is huge spreads its output across its many distinct
-        // frontier rows, which is ordinary input skew AQE does split
-        lazy val eHeavy = heavyIds(eL, size)
+        // once per valid split point (8× duplicate multiplicity on a
+        // 43M-pair closure, round output 70M rows) — the exact-front split
+        // is unique per shortest path, so compose output ≈ the new pairs
+        // themselves. min(d) aggregation replaces dropDuplicates (same
+        // shuffle), keeping stored distances exact (induction: a produced d
+        // is 2^k + an exact suffix distance, minimised over midpoints; the
+        // true midpoint realises the true distance and the anti join
+        // protects already-stored, strictly smaller values). Termination is
+        // new-empty: if any pair beyond 2^k existed, its 2^k-prefix would be
+        // an exact-2^k pair in the current delta.
         var all = eL.withColumn("d", lit(1L))
         var delta = all
-        var deltaCnt = size
+        var deltaCnt = eCnt
         var span = 1L
         while (deltaCnt > 0) {
-          val tail = deltaCnt <= tailRows
+          val small = fits(delta, deltaCnt)
           val ex = delta.filter(col("d") === lit(span))
-          val composed = stepJoinD(ex, all, if (tail) None else eHeavy,
-            broadcastDelta = tail)
           delta = subtract(
-            composed.groupBy(col("s"), col("t")).agg(min(col("d")).as("d")),
-            all, tail)
+            compose(ex, all, small, hot).groupBy(col("s"), col("t")).agg(min(col("d")).as("d")),
+            all, small)
           deltaCnt = delta.count()
-          // `all` stays a lazy union of CHECKPOINTED deltas: every piece is
-          // already materialized, so consumers scan the block union without
-          // re-persisting the whole accumulated set each round (the old
-          // checkpoint-of-union rewrote O(|closure|) blocks per round)
           if (deltaCnt > 0) all = all.unionAll(delta)
           span *= 2
         }
         decode(all).localCheckpoint()
     }
   }
+
+  /** Hops a seeded walk takes before the full closure finishes it: linear
+    * rounds are O(front) work but pay fixed driver/job overhead per hop,
+    * right for shallow graphs; a deeper structure is cheaper to close with
+    * log(diameter) doubling rounds. */
+  private val maxLinear = 16
 }

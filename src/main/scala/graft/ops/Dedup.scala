@@ -189,11 +189,9 @@ object Dedup {
     // Hot-band skew cap (guide §2.5): a token appearing in d prefixes makes
     // the candidate self-join emit d·(d−1)/2 rows in ONE task — output
     // amplification AQE's input-byte skew splitting can never see. Rows are
-    // triangle-chunked as in Similarity.semDedup: each prefix row takes a
-    // deterministic chunk __ck within its token band, replicates once per
-    // unordered chunk pair, and the join on (tok, __lo, __hi) meets every
-    // pair exactly once with per-task input ≤ 2·maxBand rows. The chunk
-    // count derives from the token's GLOBAL document frequency already
+    // triangle-chunked within their token band (SkewSalt.trianglePairs), so
+    // every pair meets exactly once with per-task input ≤ 2·maxBand rows. The
+    // chunk count derives from the token's GLOBAL document frequency already
     // carried in `ord` — an upper bound on its prefix frequency — so the cap
     // costs no extra aggregate, join or broadcast; df ≤ maxBand (every band
     // at gate scale) degenerates to __m = 1, replication factor 1.
@@ -203,20 +201,9 @@ object Dedup {
         (col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + lit(1)).cast(IntegerType))).as("o"))
       .select(col("id"), col("sz"), col("o.tok").as("tok"),
         ceil(col("o.df") / lit(maxBand.toDouble)).cast(IntegerType).as("__m"))
-      .withColumn("__ck", pmod(xxhash64(col("id")), col("__m")).cast(IntegerType))
-      .withColumn("__c2", explode(sequence(lit(0), col("__m") - 1)))
-      .withColumn("__lo", least(col("__ck"), col("__c2")))
-      .withColumn("__hi", greatest(col("__ck"), col("__c2")))
-    val pairKey = Seq("tok", "__lo", "__hi")
-    val cand = prefix.select(col("tok"), col("__lo"), col("__hi"),
-        col("__ck").as("__cka"), col("id").as("id_a"), col("sz").as("sz_a"))
-      .join(prefix.select(col("tok"), col("__lo"), col("__hi"),
-          col("__ck").as("__ckb"), col("id").as("id_b"), col("sz").as("sz_b"))
-        .hint("shuffle_hash"), pairKey)
-      // keep exactly the meeting whose key IS the unordered chunk pair
-      // {ck_a, ck_b} (dedups the __m meetings of same-chunk pairs)
-      .where(col("__lo") === least(col("__cka"), col("__ckb")) &&
-        col("__hi") === greatest(col("__cka"), col("__ckb")))
+    val cand = SkewSalt.trianglePairs(prefix, Seq("tok"), col("__m"), col("id"),
+        Seq(col("id").as("id_a"), col("sz").as("sz_a")),
+        Seq(col("id").as("id_b"), col("sz").as("sz_b")), rightHint = Some("shuffle_hash"))
       .where(col("id_a") < col("id_b") &&
         least(col("sz_a"), col("sz_b")) >=
           lit(threshold) * greatest(col("sz_a"), col("sz_b")) - lit(1e-9))

@@ -608,41 +608,21 @@ object Similarity {
     val withV = kmeansAssignWithV(emb, idCol, vecCol, k, iters)
       .withColumn("nr", norm(col("v"))).localCheckpoint()
     // Cluster-size skew cap (guide §2.5): the pair join's per-task work is
-    // QUADRATIC in its cluster's size, and AQE's input-byte-based skew
-    // splitting cannot see output amplification — one oversized cluster
-    // (k-means routinely produces them on real embedding distributions)
-    // makes one task own ~n²/2 cosine evaluations while the rest of the
-    // cluster idles. Triangle partitioning bounds it: rows hash-chunk into
-    // m = ⌈n/maxClusterRows⌉ deterministic chunks per cluster (pmod of the
-    // id — NOT rand(): retried tasks must re-deal identically, guide §2.5),
-    // each row replicates to its m (unordered) chunk-pair keys, and the
-    // join runs on (cluster, lo, hi) — every pair meets exactly once
-    // (id_a's chunk × id_b's chunk lands on the same unordered key from
-    // both sides), per-task input ≤ 2·maxClusterRows rows. Per-cluster
-    // chunk counts are a k-row aggregate, broadcast. m = 1 (every cluster
-    // under the cap) degenerates to the plain per-cluster join with
-    // replication factor 1.
+    // QUADRATIC in its cluster's size — one oversized cluster (k-means
+    // routinely produces them on real embedding distributions) makes one task
+    // own ~n²/2 cosine evaluations while the rest of the cluster idles.
+    // Triangle chunking (SkewSalt.trianglePairs) deals each cluster's rows
+    // into m = ⌈n/maxClusterRows⌉ chunks, so per-task input is
+    // ≤ 2·maxClusterRows rows. Per-cluster chunk counts are a k-row
+    // aggregate, broadcast.
     val maxClusterRows = sys.props.get("graft.semdedup.maxClusterRows")
       .map(_.toInt).getOrElse(8192)
     val chunks = withV.groupBy("cluster")
       .agg(ceil(count(lit(1)) / lit(maxClusterRows.toDouble)).cast(IntegerType).as("__m"))
-    val chunked = withV.join(broadcast(chunks), Seq("cluster"))
-      .withColumn("__ck", pmod(xxhash64(col("id")), col("__m")).cast(IntegerType))
-      .withColumn("__c2", explode(sequence(lit(0), col("__m") - 1)))
-      .withColumn("__lo", least(col("__ck"), col("__c2")))
-      .withColumn("__hi", greatest(col("__ck"), col("__c2")))
-    val pairKey = Seq("cluster", "__lo", "__hi")
-    val a = chunked.select(col("cluster"), col("__lo"), col("__hi"),
-      col("__ck").as("__cka"), col("id").as("id_a"), col("v").as("va"), col("nr").as("na"))
-    val b = chunked.select(col("cluster"), col("__lo"), col("__hi"),
-      col("__ck").as("__ckb"), col("id").as("id_b"), col("v").as("vb"), col("nr").as("nb"))
-    val dropped = a.join(b, pairKey)
-      // each (x, y) meets once per unordered chunk pair {ck_x, ck_y}: keep
-      // exactly the meeting where the key IS that pair (x replicated to the
-      // key via __c2 = ck_y, y via __c2 = ck_x) — for m = 1 this is always
-      // true; dedups the m meetings of same-chunk pairs
-      .where(col("__lo") === least(col("__cka"), col("__ckb")) &&
-        col("__hi") === greatest(col("__cka"), col("__ckb")))
+    val dropped = SkewSalt.trianglePairs(withV.join(broadcast(chunks), Seq("cluster")),
+        Seq("cluster"), col("__m"), col("id"),
+        Seq(col("id").as("id_a"), col("v").as("va"), col("nr").as("na")),
+        Seq(col("id").as("id_b"), col("v").as("vb"), col("nr").as("nb")))
       .where(col("id_a") < col("id_b"))
       .where(round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6) >= minCosine)
       .select(col("id_b").as("id")).distinct()

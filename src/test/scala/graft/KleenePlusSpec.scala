@@ -8,27 +8,20 @@ import graft.sources.{NTriples, Turtle}
 /** `p+`/`p*` through the KleenePlus operator on both sides of its byte budget:
   * the in-task breadth-first walk over a broadcast adjacency, and the
   * semi-naive loop forced through `spark.sql.autoBroadcastJoinThreshold`.
-  * Seeded random graphs with cycles, self-loops, a literal node and two named
-  * graphs; every shape must equal the naive evaluator ([[NaivePaths]]) on
-  * both sides. Also pins the job counts: plan construction runs none. */
+  * Under that forced budget the loop's first full-closure round shuffles
+  * (its front is every edge) while a seeded walk's few-row fronts are
+  * broadcast, so the random cases run both sides of the loop's per-round
+  * gate. Seeded random graphs with cycles, self-loops, a literal node and two
+  * named graphs; every shape must equal the naive evaluator ([[NaivePaths]])
+  * on both sides. Also pins the job counts: plan construction runs none. */
 class KleenePlusSpec extends SparkSpec {
 
   import NaivePaths._
 
-  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
   private val iris: Seq[Iri] = (0 until 7).map(i => Iri(s"urn:n$i"))
   private val nodes: Seq[RdfTerm] = iris :+ Lit("7", Xsd.integer, None)
   private val preds = Seq(Iri("urn:p0"), Iri("urn:p1"))
   private val graphs: Seq[Option[Iri]] = Seq(None, Some(Iri("urn:g1")), Some(Iri("urn:g2")))
-
-  private def withThreshold[T](bytes: String)(body: => T): T = {
-    val prev = spark.conf.getOption(Threshold)
-    spark.conf.set(Threshold, bytes)
-    try body finally prev.fold(spark.conf.unset(Threshold))(spark.conf.set(Threshold, _))
-  }
-
-  /** Far below one edge row: the walk never fits, the loop runs. */
-  private def onLoop[T](body: => T): T = withThreshold("100")(body)
 
   /** Random edges over every graph, each graph with a planted cycle and self-loop. */
   private def randomQuads(rnd: Random): Seq[RdfQuad] = {

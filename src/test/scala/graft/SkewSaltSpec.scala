@@ -5,9 +5,10 @@ import graft.engine.Graft
 import graft.model.{Iri, RdfQuad}
 import graft.ops.{Dedup, Similarity, SkewSalt}
 
-/** Losslessness of the output-amplification skew salting (ops.SkewSalt and
-  * the closure stepJoin): salted and unsalted runs must produce identical
-  * result bags on corpora engineered to trip the hot-bucket/hub paths. */
+/** Losslessness of the output-amplification skew salting (ops.SkewSalt, in
+  * the dedup self-joins and the closure loop's composition): salted and
+  * unsalted runs must produce identical result bags on corpora engineered to
+  * trip the hot-bucket/hub paths. */
 class SkewSaltSpec extends SparkSpec {
 
   private def withProps[T](props: (String, String)*)(f: => T): T = {
@@ -122,21 +123,33 @@ class SkewSaltSpec extends SparkSpec {
     val chainLen = 30
     val hubDeg = 50
     // two structurally DISTINCT node namespaces with identical topology:
-    // the closure cache keys on the canonicalized input plan, so reusing one
-    // graph would hand the salted run the unsalted cached result
+    // the closure caches key on the canonicalized input plan, so reusing one
+    // graph could hand the salted run the unsalted cached result
     def quadsDF(ns: String) = graft.sources.Turtle.quadsToDF(spark,
       (0 until chainLen).map(i => RdfQuad(None, Iri(s"urn:$ns$i"), p, Iri(s"urn:$ns${i + 1}"))) ++
       (0 until hubDeg).map(i => RdfQuad(None, Iri(s"urn:${ns}in$i"), p, Iri(s"urn:${ns}hub"))) ++
       (0 until hubDeg).map(i => RdfQuad(None, Iri(s"urn:${ns}hub"), p, Iri(s"urn:${ns}out$i"))))
+    def count(g: Graft, from: String): Long = lex(g.select(
+      s"SELECT (COUNT(?b) AS ?n) WHERE { $from <urn:e>+ ?b }"), "n").head.toLong
     // chain pairs + in→hub + hub→out + in→out
     val expected = chainLen * (chainLen + 1) / 2 + hubDeg + hubDeg + hubDeg * hubDeg
-    def count(ns: String): Long = lex(Graft(quadsDF(ns))
-      .select("SELECT (COUNT(?a) AS ?n) WHERE { ?a <urn:e>+ ?b }"), "n").head.toLong
-    val plain = count("c")
-    // force the salted path: every relation is "large", hub is "heavy"
-    val salted = withProps("graft.salt.hotBucket" -> "16",
-      "graft.salt.factor" -> "5", "graft.salt.minRows" -> "10") { count("d") }
-    assert(plain == expected)
-    assert(salted == expected, s"salted=$salted expected=$expected")
+    val plain = Graft(quadsDF("c"))
+    val salted = Graft(quadsDF("d"))
+    assert(count(plain, "?a") == expected)
+    // every relation is "large" and the hub is "heavy"; the budget forced
+    // low keeps the closure off the in-task walk and on the loop, whose
+    // rounds shuffle (and salt) every front above four rows
+    withProps("graft.salt.hotBucket" -> "16", "graft.salt.factor" -> "5",
+              "graft.salt.minRows" -> "10") {
+      onLoop {
+        val full = count(salted, "?a")
+        assert(full == expected, s"salted=$full expected=$expected")
+        // seeded from an in-node: its second hop is the hub's 50 out-edges,
+        // a shuffled round; seeded from the chain's head: past 16 hops the
+        // walk is finished by the full closure restricted to the seed
+        assert(count(salted, "<urn:din0>") == 1 + hubDeg)
+        assert(count(salted, "<urn:d0>") == chainLen)
+      }
+    }
   }
 }

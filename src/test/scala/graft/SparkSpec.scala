@@ -18,6 +18,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** (result, Spark jobs `body` started on this thread). */
   def jobs[T](body: => T): (T, Int) = graft.obs.QueryProfile.jobs(spark)(body)
+
+  /** `body` with the session's broadcast join threshold — the byte budget of
+    * the KleenePlus closure operator — set to `bytes`. */
+  def withThreshold[T](bytes: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Far below one edge row: the closure's walk never fits and its semi-naive
+    * loop runs, broadcasting only fronts of at most four rows. */
+  def onLoop[T](body: => T): T = withThreshold("100")(body)
 }
 
 object SparkSpec {
