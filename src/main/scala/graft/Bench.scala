@@ -55,15 +55,6 @@ object Bench {
           graft.sources.Warc.syntheticWarc(tiny, "doc_id", "text"), "doc_id", "warc")
         .write.format("noop").mode("overwrite").save()
     } catch { case e: Throwable => System.err.println(s"[bench] warc warmup: $e") }
-    // the wind-farm store (generate 4.9M quads + write predicate-partitioned
-    // parquet, ~20 s) is a one-time per-session index build shared by the
-    // three windfarm_* queries — force it here so it isn't billed to
-    // whichever of them the loop reaches first (r3 misattributed it to
-    // windfarm_grouped_multi: 12.2 s reported vs ~2.9 s real)
-    val tBuild = System.nanoTime()
-    try SparkEntry.queries("windfarm_production")(spark, sfDir).limit(1).collect()
-    catch { case e: Throwable => System.err.println(s"[bench] windfarm prebuild: $e") }
-    System.err.println(f"[bench] windfarm store prebuild: ${(System.nanoTime() - tBuild) / 1e9}%.1f s (untimed)")
     // Three INTERLEAVED full passes over the suite, min per query — not
     // back-to-back per-query samples. Rationale (measured by the r6 A/B
     // probe AbBench, deleted: see CHANGES.md): host-level load spikes on
@@ -78,6 +69,18 @@ object Bench {
     val only: Option[Set[String]] = args.headOption.map(_.split(",").toSet)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
+    // the wind-farm store (generate 4.9M quads + write predicate-partitioned
+    // parquet, ~20 s) is a one-time per-session index build shared by the
+    // three windfarm_* queries — force it here, when any of them runs, so it
+    // isn't billed to whichever of them the loop reaches first (r3
+    // misattributed it to windfarm_grouped_multi: 12.2 s reported vs ~2.9 s
+    // real)
+    if (sorted.exists(_._1.startsWith("windfarm_"))) {
+      val tBuild = System.nanoTime()
+      try SparkEntry.queries("windfarm_production")(spark, sfDir).limit(1).collect()
+      catch { case e: Throwable => System.err.println(s"[bench] windfarm prebuild: $e") }
+      System.err.println(f"[bench] windfarm store prebuild: ${(System.nanoTime() - tBuild) / 1e9}%.1f s (untimed)")
+    }
     val calibrations = scala.collection.mutable.ArrayBuffer[Double]()
     // Honesty fix (r9 verdict item 6): graft-level build-once artifacts
     // (memoised transitive closures, LSH/IVF/MinHash-signature indexes) are

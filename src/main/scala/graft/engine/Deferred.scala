@@ -91,7 +91,6 @@ object Deferred {
     * execution and pinned. `source` is the DataFrame it stands for, if any. */
   def of(spark: SparkSession, schema: StructType, label: String,
          source: Option[DataFrame] = None)(compute: => DataFrame): DataFrame = {
-    GraftStrategy.register(spark)
     GraftExprBridge.ofRows(spark,
       Deferred(new Pin(label, schema, () => compute, source), DataTypeUtils.toAttributes(schema)))
   }

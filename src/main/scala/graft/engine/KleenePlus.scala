@@ -123,7 +123,6 @@ private[engine] final class Adjacency(offsets: Array[Int], targets: Array[Int], 
 object KleenePlus {
   /** `p+` over `edges` (g, src, tgt), optionally walking from `seed` only. */
   private[engine] def of(edges: DataFrame, seed: Option[RdfTerm]): DataFrame = {
-    GraftStrategy.register(edges.sparkSession)
     val plan = edges.queryExecution.analyzed
     GraftExprBridge.ofRows(edges.sparkSession, KleenePlus(plan, seed, plan.output.map(_.newInstance())))
   }

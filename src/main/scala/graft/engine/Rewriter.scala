@@ -81,8 +81,14 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
 
   // ================================================================ patterns
 
-  def pattern(p: GraphPattern, scope: GraphScope): SPlan = p match {
-    case BnodeScope(inner) => pattern(inner, scope) // validation marker only
+  /** `p` in `scope`. Under `corr` (the outer relation and its row-id
+    * column) only the cases correlation does not change come here from
+    * [[lateralPattern]]: they evaluate their sub-patterns correlated and
+    * apply the same operator, a GROUP BY grouping per outer row and a
+    * sub-select slicing per outer row. */
+  def pattern(p: GraphPattern, scope: GraphScope,
+              corr: Option[(SPlan, String)] = None): SPlan = p match {
+    case BnodeScope(inner) => eval(inner, scope, corr) // validation marker only
     case Bgp(Nil) => unitPlan
     case Bgp(ps) =>
       // BGP self-joins over the quad relation: sides are similar-sized slices
@@ -107,15 +113,14 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     case PathPattern(s, path, o) => pathPattern(s, path, o, scope)
     case Join(l, r) => join(pattern(l, scope), pattern(r, scope), "inner", None, scope)
     case LeftJoin(l, r, f) => join(pattern(l, scope), pattern(r, scope), "left", f, scope)
-    case Filter(e, i) => pushWholeExists(e, i) match {
+    case Filter(e, i) => (if (corr.isEmpty) pushWholeExists(e, i) else None) match {
       case Some(rewritten) => pattern(rewritten, scope)
-      case None => filterPlan(pattern(i, scope), e, scope)
+      case None => filterPlan(eval(i, scope, corr), e, scope)
     }
-    case Union(l, r) => union(pattern(l, scope), pattern(r, scope))
+    case Union(l, r) => union(eval(l, scope, corr), eval(r, scope, corr))
     case ext: Extend =>
       // Fold the maximal run of nested BINDs at once: they extend ONE
-      // solution mapping sequentially, so labeled BNODEs across the run
-      // must share the per-solution nonce.
+      // solution mapping sequentially (see extendRun).
       @annotation.tailrec
       def peel(p: GraphPattern, acc: List[(Var, Expr)]): (GraphPattern, List[(Var, Expr)]) =
         p match {
@@ -123,30 +128,27 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
           case other => (other, acc)
         }
       val (base, binds) = peel(ext, Nil)
-      var cur = pattern(base, scope)
-      val (df0, solName) = solNonce(cur.df, binds.map(_._2))
-      cur = cur.copy(df = df0)
-      binds.foreach { case (v, e) =>
-        val in = cur
-        val (expr2, plan2) = rewriteExists(e, in, scope)
-        val (df, kind) = withTermColumn(plan2.df, plan2.vars.toSet, plan2.kinds,
-          v.name, expr2, solName.map(col))
-        cur = SPlan(df, in.vars :+ v.name, in.maybeUnbound + v.name,
-          plan2.kinds ++ kind.map(v.name -> _), in.tiny)
-      }
-      solName.foreach(n => cur = cur.copy(df = cur.df.drop(n)))
-      cur
+      extendRun(eval(base, scope, corr), binds, scope)
     case Minus(l, r) => minus(pattern(l, scope), pattern(r, scope))
     case ValuesPattern(vars, rows) => values(vars, rows)
     case GraphGraph(name, inner) => name match {
-      case TermPat(Iri(iri)) => pattern(inner, Named(iri))
+      case TermPat(Iri(iri)) => eval(inner, Named(iri), corr)
       case TermPat(t) => throw new IllegalArgumentException(s"GRAPH needs an IRI or variable, got $t")
-      case VarPat(v) => pattern(inner, NamedVar(v.name))
-      case BNodePat(l) => pattern(inner, NamedVar("__bnode_" + l))
+      case VarPat(v) => eval(inner, NamedVar(v.name), corr)
+      case BNodePat(l) => eval(inner, NamedVar("__bnode_" + l), corr)
     }
-    case Group(inner, keys, aggs) => group(pattern(inner, scope), keys, aggs, scope)
-    case SubSelect(q) => select(q, scope)
-    case Lateral(l, r) => lateral(pattern(l, scope), r, scope)
+    case Group(inner, keys, aggs) =>
+      val g = group(corr.map(_._2).toSeq, eval(inner, scope, corr), keys, aggs)
+      corr.fold(g) { case (ctx, lid) =>
+        // grouped per outer row: the outer vars the group does not bind
+        // come back from the outer row, by one join on its id
+        val restore = ctx.vars.filterNot(g.vars.contains)
+        join(g, SPlan(ctx.df.select((lid +: restore).map(col): _*), lid +: restore,
+            ctx.maybeUnbound, ctx.kinds.filter { case (v, _) => restore.contains(v) }),
+          "inner", None, scope, idKeys = Seq(lid))
+      }
+    case SubSelect(q) => select(q, scope, corr)
+    case Lateral(l, r) => lateral(eval(l, scope, corr), r, scope)
     case Service(ep, inner, silent) =>
       // Federation over the SPARQL protocol — beyond the reference (which
       // parses SERVICE but evaluates a lazily-erroring stream). BGP-bodied
@@ -187,6 +189,25 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
           // (oxigraph-tests ask_{union,join}_error_* pin this observable)
           emptyService
       }
+  }
+
+  /** `p` in `scope`, correlated under `corr`. */
+  private def eval(p: GraphPattern, scope: GraphScope, corr: Option[(SPlan, String)]): SPlan =
+    corr.fold(pattern(p, scope)) { case (ctx, lid) => lateralPattern(p, ctx, lid, scope) }
+
+  /** `in` extended by each `(v, e)` in order, each seeing the ones before
+    * (a BIND run, or a SELECT's expressions, spec 18.2.4.4). EXISTS
+    * subexpressions become marker columns; labeled BNODEs across the run
+    * share one per-solution nonce. */
+  private def extendRun(in: SPlan, items: Seq[(Var, Expr)], scope: GraphScope): SPlan = {
+    val (df0, solName) = solNonce(in.df, items.map(_._2))
+    val out = items.foldLeft(in.copy(df = df0)) { case (cur, (v, e)) =>
+      val (e2, p2) = rewriteExists(e, cur, scope)
+      val (df, kind) = withTermColumn(p2.df, p2.vars.toSet, p2.kinds, v.name, e2, solName.map(col))
+      SPlan(df, cur.vars :+ v.name, cur.maybeUnbound + v.name,
+        p2.kinds ++ kind.map(v.name -> _), cur.tiny)
+    }
+    solName.fold(out)(n => out.copy(df = out.df.drop(n)))
   }
 
   /** Single-row zero-variable relation — the join identity
@@ -670,15 +691,15 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
   }
 
   /** Evaluate `p` correlated with ctx (which carries the `lid` row id).
-    * Contract: the result contains lid + all ctx vars + p's vars. */
+    * Contract: the result contains lid + all ctx vars + p's vars. Only the
+    * cases where correlation changes the operator are here: a BGP seeded
+    * from ctx, leaves joined to ctx, and Join, LeftJoin and MINUS keyed on
+    * lid; every other case is [[pattern]]'s, over correlated children. */
   private def lateralPattern(p: GraphPattern, ctx: SPlan, lid: String,
                              scope: GraphScope): SPlan = p match {
-    case BnodeScope(inner) => lateralPattern(inner, ctx, lid, scope)
-    case Bgp(Nil) => ctx
     case Bgp(ps) =>
       bgpPlans(ps, scope).foldLeft(ctx)((acc, p) => join(acc, p, "inner", None, scope))
-    case PathPattern(s, pa, o) => join(ctx, pathPattern(s, pa, o, scope), "inner", None, scope)
-    case ValuesPattern(vs, rows) => join(ctx, values(vs, rows), "inner", None, scope)
+    case _: PathPattern | _: ValuesPattern => join(ctx, pattern(p, scope), "inner", None, scope)
     case Service(_, inner, _) => join(ctx, pattern(Service(null, inner, silent = true), scope), "inner", None, scope)
     case Join(a, b) =>
       join(lateralPattern(a, ctx, lid, scope),
@@ -686,32 +707,6 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     case LeftJoin(a, b, f) =>
       join(lateralPattern(a, ctx, lid, scope),
         lateralPattern(b, ctx, lid, scope), "left", f, scope, idKeys = Seq(lid))
-    case Filter(e, i) => filterPlan(lateralPattern(i, ctx, lid, scope), e, scope)
-    case Union(a, b) =>
-      union(lateralPattern(a, ctx, lid, scope), lateralPattern(b, ctx, lid, scope))
-    case ext: Extend =>
-      // Same BIND-run folding as the non-lateral case: one shared
-      // per-solution nonce for labeled BNODEs across the run.
-      @annotation.tailrec
-      def peel(p: GraphPattern, acc: List[(Var, Expr)]): (GraphPattern, List[(Var, Expr)]) =
-        p match {
-          case Extend(i, v, e) => peel(i, (v, e) :: acc)
-          case other => (other, acc)
-        }
-      val (base, binds) = peel(ext, Nil)
-      var cur = lateralPattern(base, ctx, lid, scope)
-      val (df0, solName) = solNonce(cur.df, binds.map(_._2))
-      cur = cur.copy(df = df0)
-      binds.foreach { case (v, e) =>
-        val in = cur
-        val (expr2, plan2) = rewriteExists(e, in, scope)
-        val (df, kind) = withTermColumn(plan2.df, plan2.vars.toSet, plan2.kinds,
-          v.name, expr2, solName.map(col))
-        cur = SPlan(df, in.vars :+ v.name, in.maybeUnbound + v.name,
-          plan2.kinds ++ kind.map(v.name -> _))
-      }
-      solName.foreach(n => cur = cur.copy(df = cur.df.drop(n)))
-      cur
     case Minus(a, b) =>
       val A = lateralPattern(a, ctx, lid, scope)
       val B = lateralPattern(b, ctx, lid, scope)
@@ -727,137 +722,7 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
         SPlan(A.df.join(Rewriter.shuffleHashUnlessSmall(rr), cond, "left_anti"),
           A.vars, A.maybeUnbound, A.kinds)
       }
-    case GraphGraph(name, inner) => name match {
-      case TermPat(Iri(iri)) => lateralPattern(inner, ctx, lid, Named(iri))
-      case TermPat(t) => throw new IllegalArgumentException(s"GRAPH needs an IRI or variable, got $t")
-      case VarPat(v) => lateralPattern(inner, ctx, lid, NamedVar(v.name))
-      case BNodePat(l) => lateralPattern(inner, ctx, lid, NamedVar("__bnode_" + l))
-    }
-    case Group(i, keys, aggs) => lateralGroup(lateralPattern(i, ctx, lid, scope), keys, aggs, ctx, lid)
-    case SubSelect(q) => lateralSelect(q, ctx, lid, scope)
-    case Lateral(a, b) => lateral(lateralPattern(a, ctx, lid, scope), b, scope)
-  }
-
-  /** GROUP BY per outer row: group on (lid, keys), then restore outer vars
-    * from the ctx row. */
-  private def lateralGroup(in: SPlan, keys: Seq[(Var, Option[Expr])],
-                           aggs: Seq[(Var, Aggregate)], ctx: SPlan, lid: String): SPlan = {
-    var df = in.df
-    val env = ExprCompiler.envOf(in.vars.toSet, in.kinds)
-    val (dfG, solG) = solNonce(df,
-      keys.flatMap(_._2) ++ aggs.collect { case (_, Aggregate(_, _, Some(a), _)) => a })
-    df = dfG
-    keys.foreach {
-      case (v, Some(e)) =>
-        df = withTermColumn(df, in.vars.toSet, in.kinds, v.name, e, solG.map(col))._1
-      case (v, None) if !in.vars.contains(v.name) =>
-        df = df.withColumn(v.name, TermCols.nullTerm)
-      case _ =>
-    }
-    val argKinds: Map[String, Int] = aggs.collect {
-      case (v, Aggregate(_, _, Some(arg), _)) =>
-        ExprCompiler.staticKind(arg, env).map(v.name -> _)
-    }.flatten.toMap
-    val recordKinds: Map[String, Int] = aggs.collect {
-      case (v, a @ Aggregate(_, _, Some(arg), _)) =>
-        aggRecordKind(a, arg, env).map(v.name -> _)
-    }.flatten.toMap
-    val argCols: Map[String, String] = aggs.collect {
-      case (v, Aggregate(_, _, Some(arg), _)) =>
-        val c = fresh("aggin")
-        df = withTermColumn(df, in.vars.toSet, in.kinds, c, arg, solG.map(col))._1
-        v.name -> c
-    }.toMap
-    solG.foreach(n => df = df.drop(n))
-    val keyNames = lid +: keys.map(_._1.name)
-    val grouped =
-      if (aggs.isEmpty) df.select(keyNames.map(col): _*).dropDuplicates()
-      else {
-        val aggExprs = aggs.flatMap { case (v, a) =>
-          aggCols(v.name, a, argCols.get(v.name), argKinds.get(v.name), in.vars) }
-        val g = df.groupBy(keyNames.map(col): _*).agg(aggExprs.head, aggExprs.tail: _*)
-        g.select(keyNames.map(col) ++ aggs.map { case (v, a) =>
-          aggFinal(v.name, a, argKinds.get(v.name)).as(v.name) }: _*)
-      }
-    val groupVars = keyNames.drop(1) ++ aggs.map(_._1.name)
-    // restore ctx vars not re-introduced as keys
-    val restore = ctx.vars.filterNot(v => groupVars.contains(v) || v == lid)
-    val ctxSide = ctx.df.select((lid +: restore).map(v => col(v).as("__c_" + v)): _*)
-    val joined = grouped.join(ctxSide, col(lid) === col("__c_" + lid))
-      .select((lid +: groupVars).map(col) ++ restore.map(v => col("__c_" + v).as(v)): _*)
-    val mu = ctx.maybeUnbound ++ aggs.collect { case (v, a) if a.name != "COUNT" => v.name } ++
-      keys.collect {
-        case (v, Some(_)) => v.name
-        case (v, None) if !in.vars.contains(v.name) => v.name
-      }
-    // kinds: restored ctx vars keep theirs; keys keep the input's (or the
-    // computed expression's); aggregates contribute their result kinds
-    val outKinds = ctx.kinds.filter { case (v, _) => restore.contains(v) } ++
-      in.kinds.filter { case (v, _) => keyNames.drop(1).contains(v) } ++
-      keys.collect { case (v, Some(e)) =>
-        ExprCompiler.bindKind(e, env).map(v.name -> _) }.flatten ++
-      // lateral groups key on (lid, keys): never empty, so no global guard
-      aggs.flatMap { case (v, a) => aggResultKind(a, recordKinds.get(v.name)).map(v.name -> _) }
-    SPlan(joined, (lid +: restore) ++ groupVars, mu, outKinds)
-  }
-
-  /** Sub-SELECT per outer row: modifiers (DISTINCT / ORDER / LIMIT / OFFSET)
-    * apply within each outer row's partition — a window, not a global sort. */
-  private def lateralSelect(q: SelectQuery, ctx: SPlan, lid: String, scope: GraphScope): SPlan = {
-    import org.apache.spark.sql.expressions.Window
-    val plan = lateralPattern(q.where, ctx, lid, scope)
-    var df = plan.df
-    val env = ExprCompiler.envOf(plan.vars.toSet, plan.kinds)
-    val projItems = if (q.projection.nonEmpty) q.projection
-                    else inScopeVars(q.where).map(v => ProjItem(v, None))
-    val (dfL, solL) = solNonce(df, projItems.collect { case ProjItem(_, Some(e)) => e })
-    df = dfL
-    projItems.foreach {
-      case ProjItem(v, Some(e)) =>
-        df = withTermColumn(df, plan.vars.toSet, plan.kinds, v.name, e, solL.map(col))._1
-      case _ =>
-    }
-    solL.foreach(n => df = df.drop(n))
-    val projNames = projItems.map(_.v.name)
-    val keep = (lid +: (ctx.vars.filterNot(_ == lid) ++ projNames).distinct)
-    // kinds flow into the per-outer-row window sort (ctx kinds for restored
-    // vars, bind kinds for computed projections)
-    val keepKinds = (ctx.kinds ++ plan.kinds ++ projItems.flatMap {
-      case ProjItem(v, Some(e)) => ExprCompiler.bindKind(e, env).map(v.name -> _)
-      case _ => None
-    }).filter { case (v, _) => keep.contains(v) }
-    df = df.select(keep.map(col): _*)
-    if (q.distinct || q.reduced) df = df.dropDuplicates(keep)
-    if (q.orderBy.nonEmpty || q.limit.isDefined || q.offset.isDefined) {
-      val kEnv = ExprCompiler.envOf(keep.toSet, keepKinds)
-      var ordTmps = List.empty[String]
-      val orderKeys =
-        if (q.orderBy.nonEmpty) q.orderBy.map { c =>
-          // computed keys materialise as columns first (see orderDf)
-          val k = ExprCompiler.sortKeyStatic(c.expr, kEnv).getOrElse {
-            val operand = c.expr match {
-              case EVar(v) => ExprCompiler.term(c.expr, kEnv)
-              case _ =>
-                val tmp = fresh("ord")
-                df = df.withColumn(tmp, ExprCompiler.term(c.expr, kEnv))
-                ordTmps ::= tmp
-                col(tmp)
-            }
-            TermCols.sortKey(operand)
-          }
-          if (c.ascending) k.asc_nulls_first else k.desc_nulls_last
-        }
-        else Seq(monotonically_increasing_id().asc)
-      val w = Window.partitionBy(col(lid)).orderBy(orderKeys: _*)
-      val rn = fresh("rn")
-      df = df.withColumn(rn, row_number().over(w))
-      val lo = q.offset.getOrElse(0L)
-      df = df.filter(col(rn) > lo)
-      q.limit.foreach(n => df = df.filter(col(rn) <= lo + n))
-      df = df.drop(rn +: ordTmps: _*)
-    }
-    SPlan(df, keep, plan.maybeUnbound ++ projItems.collect { case ProjItem(v, Some(_)) => v.name },
-      keepKinds)
+    case other => pattern(other, scope, Some((ctx, lid)))
   }
 
   /**
@@ -1018,9 +883,11 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     * the reference's forced PlainTerm/ObjectId key encoding,
     * lib/logical/src/logical_plan_builder.rs:235-263); aggregates follow the
     * reference's Accumulators (lib/functions/src/aggregates/). Partial
-    * aggregation (map-side combine) applies — all are built-in aggregates. */
-  private def group(in: SPlan, keys: Seq[(Var, Option[Expr])],
-                    aggs: Seq[(Var, Aggregate)], scope: GraphScope): SPlan = {
+    * aggregation (map-side combine) applies — all are built-in aggregates.
+    * `by` are leading partition columns grouped as they are (a correlated
+    * body's outer row id), empty otherwise. */
+  private def group(by: Seq[String], in: SPlan, keys: Seq[(Var, Option[Expr])],
+                    aggs: Seq[(Var, Aggregate)]): SPlan = {
     var df = in.df
     val env = ExprCompiler.envOf(in.vars.toSet, in.kinds)
     // per-solution nonce shared by computed keys + aggregate args (labeled
@@ -1067,18 +934,18 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
       keys.collect { case (v, Some(e)) =>
         ExprCompiler.bindKind(e, env).map(v.name -> _) }.flatten
     val aggKinds = aggs.flatMap { case (v, a) =>
-      aggResultKind(a, recordKinds.get(v.name), globalGroup = keyNames.isEmpty)
+      aggResultKind(a, recordKinds.get(v.name), globalGroup = by.isEmpty && keyNames.isEmpty)
         .map(v.name -> _) }.toMap
     if (aggs.isEmpty)
-      return SPlan(df.select(keyNames.map(col): _*).dropDuplicates(), keyNames, mu, keyKinds,
-        in.tiny)
+      return SPlan(df.select((by ++ keyNames).map(col): _*).dropDuplicates(), by ++ keyNames, mu,
+        keyKinds, in.tiny)
     val aggExprs: Seq[Column] = aggs.flatMap { case (v, a) =>
       aggCols(v.name, a, argCols.get(v.name), argKinds.get(v.name), in.vars) }
     // statically-kinded keys group on one narrow native value instead of the
     // 5-field term struct (hash input shrinks, shuffle rows narrow); the
     // term is rebuilt after aggregation — sound because the kinds-map
     // invariant guarantees canonical rendering (see ExprCompiler.Env docs)
-    val gbCols = keyNames.map { n =>
+    val gbCols = by.map(col) ++ keyNames.map { n =>
       keyKinds.get(n) match {
         case Some(k) => narrowKey(col(n), k).as(n)
         case None => col(n)
@@ -1086,7 +953,7 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     }
     val grouped = df.groupBy(gbCols: _*).agg(aggExprs.head, aggExprs.tail: _*)
     // final projection turns raw aggregate buffers / narrow keys into terms
-    val finals = keyNames.map { n =>
+    val finals = by.map(col) ++ keyNames.map { n =>
       keyKinds.get(n) match {
         case Some(k) => rebuildKey(col(n), k).as(n)
         case None => col(n)
@@ -1094,7 +961,7 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
     } ++ aggs.map { case (v, a) =>
       aggFinal(v.name, a, argKinds.get(v.name)).as(v.name) }
     val out = grouped.select(finals: _*)
-    SPlan(out, keyNames ++ aggs.map(_._1.name), mu, keyKinds ++ aggKinds, in.tiny)
+    SPlan(out, by ++ keyNames ++ aggs.map(_._1.name), mu, keyKinds ++ aggKinds, in.tiny)
   }
 
   /** Narrow native grouping value of a statically-kinded term column
@@ -1433,71 +1300,81 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
 
   // ===================================================================== query
 
-  /** Compile a full SELECT (used for top level and sub-selects). */
-  def select(q: SelectQuery, outerScope: GraphScope): SPlan = {
+  /** Compile a full SELECT (used for top level and sub-selects). Under
+    * `corr` (a correlated sub-select, see [[lateralPattern]]) the result
+    * keeps the outer row id and vars, and DISTINCT, OFFSET and LIMIT apply
+    * per outer row. */
+  def select(q: SelectQuery, outerScope: GraphScope,
+             corr: Option[(SPlan, String)] = None): SPlan = {
     val scope =
       if (q.fromDefault.nonEmpty) GraphScope.UnionOf(q.fromDefault.map(_.value))
       else outerScope
-    var plan = pattern(q.where, scope)
-    val env = ExprCompiler.envOf(plan.vars.toSet, plan.kinds)
+    val plan = eval(q.where, scope, corr)
 
-    // computed projection items become columns first (visible to ORDER BY)
+    // computed projection items become columns first (visible to ORDER BY),
+    // evaluated SEQUENTIALLY: SELECT (1 AS ?a) (?a + 1 AS ?b) binds ?b = 2,
+    // and SELECT (EXISTS {…} AS ?b) is legal SPARQL
     val projItems = if (q.projection.nonEmpty) q.projection
                     else inScopeVars(q.where).map(v => ProjItem(v, None))
-    var df = plan.df
-    // select expressions evaluate SEQUENTIALLY (spec 18.2.4.4): each
-    // (expr AS ?v) extends the solution, so a later expression sees the
-    // earlier aliases — SELECT (1 AS ?a) (?a + 1 AS ?b) binds ?b = 2.
-    // Tracked as an SPlan so EXISTS subexpressions rewrite to marker
-    // columns here too (SELECT (EXISTS {…} AS ?b) is legal SPARQL).
-    val (dfSol, selSol) = solNonce(df, projItems.collect { case ProjItem(_, Some(e)) => e })
-    var cur = SPlan(dfSol, plan.vars, plan.maybeUnbound, plan.kinds)
-    projItems.foreach {
-      case ProjItem(v, Some(e)) =>
-        val (e2, p2) = rewriteExists(e, cur, scope)
-        val (d2, kind) = withTermColumn(p2.df, p2.vars.toSet, p2.kinds, v.name, e2,
-          selSol.map(col))
-        cur = SPlan(d2, p2.vars :+ v.name, p2.maybeUnbound + v.name,
-          p2.kinds ++ kind.map(v.name -> _))
-      case ProjItem(v, None) if !cur.vars.contains(v.name) =>
-        // projecting a variable that never occurs in the pattern is legal
-        // SPARQL — it is simply unbound in every solution
-        cur = SPlan(cur.df.withColumn(v.name, TermCols.nullTerm),
-          cur.vars :+ v.name, cur.maybeUnbound + v.name, cur.kinds)
-      case _ =>
-    }
-    df = selSol.fold(cur.df)(cur.df.drop(_))
-    val ksAcc = cur.kinds
+    val cur = extendRun(plan, projItems.collect { case ProjItem(v, Some(e)) => (v, e) }, scope)
     val projNames = projItems.map(_.v.name)
-    val allVars = (plan.vars ++ projNames).distinct
-    // kinds survive projection: plain vars keep theirs, computed items got
-    // theirs during the sequential walk — computed EARLY so ORDER BY
-    // compiles narrow sort keys over them
-    val ks = projItems.flatMap {
-      case ProjItem(v, None) => plan.kinds.get(v.name).map(v.name -> _)
-      case ProjItem(v, Some(_)) => ksAcc.get(v.name).map(v.name -> _)
-    }.toMap
-    val env2 = ExprCompiler.envOf(allVars.toSet, plan.kinds ++ ks)
+    // projecting a variable that never occurs in the pattern is legal
+    // SPARQL — it is simply unbound in every solution
+    var df = projNames.filterNot(cur.vars.contains).distinct
+      .foldLeft(cur.df)((d, v) => d.withColumn(v, TermCols.nullTerm))
+    val keep = corr.fold(projNames) { case (ctx, lid) => ((lid +: ctx.vars) ++ projNames).distinct }
+    // kinds survive projection — computed EARLY so ORDER BY compiles narrow
+    // sort keys over them
+    val ks = cur.kinds.filter { case (v, _) => keep.contains(v) }
+    // ORDER BY with OFFSET/LIMIT: a global sort and slice, or per outer row
+    // (where an order alone is lost in the join back to the outer rows)
+    def ordered(d: DataFrame, env: ExprCompiler.Env): DataFrame = corr match {
+      case None => if (q.orderBy.nonEmpty) orderDf(d, q.orderBy, env) else d
+      case Some((_, lid)) =>
+        if (q.offset.isEmpty && q.limit.isEmpty) d else slicePerRow(d, q, lid, env)
+    }
 
     if (q.distinct || q.reduced) {
       // project → dedup → order → slice (ordering keys must be projected)
-      df = df.select(projNames.map(col): _*).dropDuplicates()
-      if (q.orderBy.nonEmpty)
-        df = orderDf(df, q.orderBy, ExprCompiler.envOf(projNames.toSet, ks))
+      df = ordered(df.select(keep.map(col): _*).dropDuplicates(), ExprCompiler.envOf(keep.toSet, ks))
     } else {
-      if (q.orderBy.nonEmpty) df = orderDf(df, q.orderBy, env2)
-      df = df.select(projNames.map(col): _*)
+      df = ordered(df, ExprCompiler.envOf((plan.vars ++ projNames).toSet, plan.kinds ++ ks))
+        .select(keep.map(col): _*)
     }
-    q.offset.foreach(o => df = df.offset(o.toInt))
-    q.limit.foreach(l => df = df.limit(l.toInt))
-    val mu = projItems.map(_.v.name).filter(v =>
-      plan.isNullable(v) || !plan.vars.contains(v) ||
-        projItems.exists(p => p.v.name == v && p.expr.isDefined)).toSet
+    if (corr.isEmpty) {
+      q.offset.foreach(o => df = df.offset(o.toInt))
+      q.limit.foreach(l => df = df.limit(l.toInt))
+    }
+    val mu = keep.filter(v => cur.isNullable(v) || !plan.vars.contains(v)).toSet
     // a LIMIT-k sub-select is structurally bounded no matter the input size
-    SPlan(df, projNames, mu, ks, plan.tiny || q.limit.exists(_ <= 10000))
+    // (per outer row, a correlated one is not)
+    SPlan(df, keep, mu, ks, plan.tiny || (corr.isEmpty && q.limit.exists(_ <= 10000)))
+  }
+
+  /** OFFSET/LIMIT per outer row of a correlated sub-select: a row_number
+    * window partitioned by the outer row id, ordered by the ORDER BY keys. */
+  private def slicePerRow(df: DataFrame, q: SelectQuery, lid: String,
+                          env: ExprCompiler.Env): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val (d, keys, tmps) = sortKeys(df, q.orderBy, env)
+    val w = Window.partitionBy(col(lid))
+      .orderBy((if (keys.nonEmpty) keys else Seq(monotonically_increasing_id().asc)): _*)
+    val rn = fresh("rn")
+    val lo = q.offset.getOrElse(0L)
+    d.withColumn(rn, row_number().over(w))
+      .filter(col(rn) > lo && q.limit.fold(lit(true))(n => col(rn) <= lo + n))
+      .drop(rn +: tmps: _*)
   }
 
   private def orderDf(df: DataFrame, conds: Seq[OrderCond], env: ExprCompiler.Env): DataFrame = {
+    val (d, keys, tmps) = sortKeys(df, conds, env)
+    d.orderBy(keys: _*).drop(tmps: _*)
+  }
+
+  /** `df` with the SPARQL sort keys of `conds` as columns where needed, the
+    * keys, and the columns to drop after sorting. */
+  private def sortKeys(df: DataFrame, conds: Seq[OrderCond],
+                       env: ExprCompiler.Env): (DataFrame, Seq[Column], Seq[String]) = {
     // SPARQL total order via the sortable view; unbound sorts first on ASC
     // (reference graph_pattern_rewriter.rs:277-297 — nulls_first = true).
     // Statically-kinded keys collapse to one narrow native column.
@@ -1531,7 +1408,7 @@ final class Rewriter(spark: SparkSession, quads: DataFrame,
       }
       if (c.ascending) k.asc_nulls_first else k.desc_nulls_last
     }
-    d.orderBy(keys: _*).drop(tmps: _*)
+    (d, keys, tmps)
   }
 }
 

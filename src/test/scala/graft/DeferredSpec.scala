@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.engine.{Deferred, Graft}
+import graft.engine.{Deferred, DeferredExec, Graft, GraftStrategy}
 import graft.gen.{BsbmGen, BsbmTemplates}
 import graft.sources.NTriples
 
@@ -65,6 +65,17 @@ class DeferredSpec extends SparkSpec {
     val ref = Graft.thetaCompat(DeferredSpec.bsbm)
     Seq("bi/q04.rq", "bi/q05.rq", "bi/q06.rq", "explore/q09.rq").foreach { f =>
       check(g, ref, f, BsbmTemplates.fill(BsbmTemplates.dir.resolve(f)))
+    }
+  }
+
+  test("every session, a new one included, has GraftStrategy from the session build") {
+    Seq(spark, spark.newSession()).foreach { s =>
+      assert(s.experimental.extraStrategies.isEmpty)
+      val planner = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner
+      assert(planner.strategies.contains(GraftStrategy))
+      val df = Deferred(s.range(3).toDF(), "session-check")
+      assert(df.queryExecution.executedPlan.collect { case d: DeferredExec => d }.size == 1)
+      assert(df.count() == 3)
     }
   }
 

@@ -6,9 +6,10 @@ import graft.sources.Turtle
 
 /**
  * Randomised LATERAL differential (SPARQL 1.2 / oxigraph extension): random
- * per-subject value sets × per-row top-k sub-selects and correlated
- * FILTERs, against a naive driver evaluator. The multiset of (s, o) rows is
- * deterministic even under ORDER BY ties because tied rows carry equal ?o.
+ * per-subject value sets × per-row top-k sub-selects, correlated FILTERs
+ * and per-row grouped sub-selects, against a naive in-memory evaluator. The
+ * multiset of (s, o) rows is deterministic even under ORDER BY ties because
+ * tied rows carry equal ?o.
  */
 class RandomLateralDifferentialSpec extends SparkSpec {
 
@@ -72,11 +73,42 @@ class RandomLateralDifferentialSpec extends SparkSpec {
     assert(got == expect, s"seed=$seed\ngot=$got\nexpect=$expect")
   }
 
+  /** Per-row GROUP BY over the values under the row's limit less ?k: SUM
+    * and COUNT of each subject kept by a HAVING on the count. Two outer rows
+    * share each ?s (k = 0, 1), so grouping on ?s alone would merge them. */
+  private def groupedCase(seed: Int): Unit = {
+    val rnd = new scala.util.Random(seed)
+    val (quads, vals, lims) = build(rnd)
+    val least = 1 + rnd.nextInt(3)
+    val q =
+      s"""PREFIX ex: <$EX>
+         |SELECT ?s ?k ?sum ?n WHERE {
+         |  ?s ex:limit ?lim .
+         |  VALUES ?k { 0 1 }
+         |  LATERAL { SELECT ?s (SUM(?o) AS ?sum) (COUNT(?o) AS ?n)
+         |            WHERE { ?s ex:v ?o . FILTER(?o + ?k < ?lim) }
+         |            GROUP BY ?s HAVING (COUNT(?o) >= $least) }
+         |}""".stripMargin
+    val got = Graft(Turtle.quadsToDF(spark, quads)).select(q).collect().toSeq.map { r =>
+      Seq("s", "k", "sum", "n").map(c => r.getStruct(r.fieldIndex(c)).getString(1))
+    }.sortBy(_.mkString(" "))
+    val expect = (for ((s, vs) <- vals.toSeq; k <- Seq(0, 1)) yield {
+      val kept = vs.filter(_ + k < lims(s))
+      if (kept.size >= least) Some(Seq(s, k.toString, kept.sum.toString, kept.size.toString))
+      else None
+    }).flatten.sortBy(_.mkString(" "))
+    assert(got == expect, s"seed=$seed least=$least\ngot=$got\nexpect=$expect")
+  }
+
   test("LATERAL per-row top-k matches naive evaluator on 15 random cases") {
     (900 to 914).foreach(topKCase)
   }
 
   test("LATERAL with correlated FILTER matches naive evaluator on 10 random cases") {
     (950 to 959).foreach(correlatedFilterCase)
+  }
+
+  test("LATERAL per-row GROUP BY with SUM, COUNT and HAVING matches naive evaluator on 10 random cases") {
+    (970 to 979).foreach(groupedCase)
   }
 }
